@@ -27,6 +27,7 @@ stage (operators/multimodal.py), as with every other codec here.
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import numpy as np
@@ -204,20 +205,16 @@ def _unstuff_entropy(raw: bytes) -> bytes:
     return np.delete(d[:cut], good_ff + 1).tobytes()
 
 
-_LUT_CACHE: dict[bytes, tuple[bytes, bytes]] = {}
-
-
-def _huff_lut(bits: list[int], vals: list[int]) -> tuple[bytes, bytes]:
+@functools.lru_cache(maxsize=16)
+def _huff_lut(bits: bytes, vals: bytes) -> tuple[bytes, bytes]:
     """16-bit-peek canonical-Huffman lookup tables: two 65536-byte
     strings mapping the next 16 bits to (symbol, code length); length 0
     marks an invalid prefix.  One table lookup replaces the former
     bit-by-bit walk (the decode hot loop was ~95% read_bit by profile).
-    Cached on the DHT payload — the fixture encoder emits one fixed
-    table set, so the build cost is paid once per worker."""
-    key = bytes(bits) + bytes(vals)
-    hit = _LUT_CACHE.get(key)
-    if hit is not None:
-        return hit
+    Cached on the DHT payload (bits, vals) in a 16-entry LRU, 2 MB at
+    most: the fixture encoder emits one fixed table set, so the build
+    cost is paid once per worker, and a worker decoding JPEGs with many
+    different tables keeps only the recent ones."""
     sym = np.zeros(1 << 16, dtype=np.uint8)
     ln = np.zeros(1 << 16, dtype=np.uint8)
     code = 0
@@ -231,9 +228,7 @@ def _huff_lut(bits: list[int], vals: list[int]) -> tuple[bytes, bytes]:
             code += 1
             k += 1
         code <<= 1
-    out = (sym.tobytes(), ln.tobytes())
-    _LUT_CACHE[key] = out
-    return out
+    return sym.tobytes(), ln.tobytes()
 
 
 class _BitReader:
@@ -444,9 +439,9 @@ def _parse_dht(body: bytes, tables: dict) -> None:
     pos = 0
     while pos < len(body):
         tc_th = body[pos]
-        bits = list(body[pos + 1:pos + 17])
+        bits = bytes(body[pos + 1:pos + 17])
         n = sum(bits)
-        vals = list(body[pos + 17:pos + 17 + n])
+        vals = bytes(body[pos + 17:pos + 17 + n])
         tables[(tc_th >> 4, tc_th & 0xF)] = _huff_lut(bits, vals)
         pos += 17 + n
 
@@ -524,8 +519,7 @@ def read_jpeg(payload: bytes) -> np.ndarray:
     # zigzag scatter + IDCT run ONCE, batched over every block (the
     # former per-block 8x8 numpy calls dominated large rasters).  The
     # batched matmul issues the same (T.T @ deq) @ T float64 products,
-    # pinned bit-identical to the per-block form by the codec tests and
-    # the old-vs-new equality harness in tests/test_operators_r12.py.
+    # pinned by the codec round-trip tests in tests/test_media_codecs.py.
     zz_all = np.zeros((nby * nbx * ncomp, 64), dtype=np.int64)
     luts = [
         (htabs[(0, scan[ci][1])], htabs[(1, scan[ci][2])])

@@ -22,9 +22,11 @@ Scale design (100 TB):
   the ~20-30% summary tier.  The drill-down join broadcasts the O(k)
   selected chapters against the tier-3 partition — an equi-join on
   ``parent_chunk_id``, never a scan-side sort.
-- The e2e plan inherits each stage's shape: corpus-sized work is exactly
-  one BM25 scan + one embedding scan; every other stage (stats, maxes,
-  gate, pack) is a 1-row or O(k)-row broadcast.  Zero Python UDFs.
+- The e2e plan inherits each stage's shape: the fused scores come from
+  the cached corpus index (``retrieval.fused_scores``, built once per
+  corpus version), whose BM25 stats and vector max are driver-side
+  scalars; the gate and pack are 1-row or O(k)-row stages.  Zero
+  Python UDFs.
 """
 
 from __future__ import annotations
