@@ -46,30 +46,17 @@ def test_shingles_bound_form_matches_free_form(spark):
 
 
 def _packed_combos(items_df, items_col: str):
-    """The r12 packed C(k,2) combination explode shared by
-    rec_item_item_cf and g_jaccard_neighbors: sorted array -> packed
+    """The packed C(k,2) combination explode shared by rec_item_item_cf
+    and g_jaccard_neighbors (functions/ids.py): sorted array -> packed
     long pairs -> unpack."""
+    from tlcn_oer_lakehouse_spark.functions.ids import packed_pairs, unpacked_pair
+
+    u, v = unpacked_pair("p")
     return (
-        items_df.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col(items_col),
-                        lambda x, i: F.transform(
-                            F.slice(F.col(items_col), i + 2, F.size(F.col(items_col))),
-                            lambda y: F.shiftleft(x, 32).bitwiseOR(y),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
+        items_df.select(F.explode(packed_pairs(items_col)).alias("p"))
         .groupBy("p")
         .agg(F.count(F.lit(1)).alias("c"))
-        .select(
-            F.shiftrightunsigned("p", 32).alias("u"),
-            F.col("p").bitwiseAND(F.lit((1 << 32) - 1)).alias("v"),
-            "c",
-        )
+        .select(u.alias("u"), v.alias("v"), "c")
     )
 
 
@@ -99,6 +86,28 @@ def test_packed_combos_match_self_join_pairs(spark):
     old_rows = sorted(map(tuple, old.collect()))
     new_rows = sorted(map(tuple, new.collect()))
     assert new_rows == old_rows
+
+
+def test_packed_pairs_reject_ids_outside_31_bits(spark):
+    """2^31 - 1 is the largest id a packed key round-trips; 2^31 and -1
+    fail the query instead of packing into a key that unpacks wrong.
+    Int arrays are widened to long before packing."""
+    import pytest
+
+    from tlcn_oer_lakehouse_spark.functions.ids import packed_pairs, unpacked_pair
+
+    def pairs(items, dtype="array<bigint>"):
+        df = spark.createDataFrame([(items,)], f"items {dtype}")
+        u, v = unpacked_pair("p")
+        out = df.select(F.explode(packed_pairs("items")).alias("p"))
+        return [tuple(r) for r in out.select(u, v).collect()]
+
+    top = 2**31 - 1
+    assert pairs([0, 5, top]) == [(0, 5), (0, top), (5, top)]
+    assert pairs([3, top], "array<int>") == [(3, top)]
+    for bad in (2**31, -1):
+        with pytest.raises(Exception, match="packed pair key"):
+            pairs([1, bad])
 
 
 def test_merge_upsert_broadcast_knob_is_value_neutral(spark):

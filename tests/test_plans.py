@@ -276,7 +276,7 @@ _BNLJ_ALLOWED = {
     "ml_calibration_bins",    # 1-row score-min/max broadcast
     "ml_psi_drift",           # 1-row day-range broadcast (time split)
     "q_tiered_search",        # 1-row summary-tier BM25 stats broadcast
-    "rag_serve_e2e",          # 1-row stats/maxes/gate broadcasts (composed)
+    "rag_serve_e2e",          # 1-row query vector (corpus index build)
     "rag_serve_ann",          # same 1-row broadcasts + 1-row query vector
     "ml_ks_drift",            # 1-row day-range broadcast (time split)
     "dq_benford_digits",      # 1-row total-count broadcast
@@ -679,8 +679,8 @@ def test_tiered_search_drilldown_broadcasts_chapters(spark):
 def test_rag_serve_e2e_exchange_budget(spark):
     """The composed serve plan's fused branch reads the cached corpus
     index (BM25 stats and the vector max are index scalars, not per-
-    request aggregates); the gate travels as a 1-row broadcast and the
-    pack window runs over <= 10 rows.  Wide shuffles stay bounded."""
+    request aggregates); the gate and the pack are windows over <= 10
+    rows.  Wide shuffles stay bounded."""
     df = _build(spark, "rag_serve_e2e")
     assert audit.exchange_count(df) <= 4
     index_scans = [

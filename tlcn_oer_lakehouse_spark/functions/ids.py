@@ -45,3 +45,35 @@ def xxhash_surrogate_key(*cols: Column | str) -> Column:
     (gold_analytics.py:258-263). JVM-only value; fastest at scale."""
     parts = [F.col(c) if isinstance(c, str) else c for c in cols]
     return F.abs(F.xxhash64(*parts))
+
+
+PAIR_ID_LIMIT = 1 << 31  # a packed pair keeps each id in 31 bits
+
+
+def packed_pairs(items: Column | str) -> Column:
+    """Every i<j pair of an id array (in array order), each packed into
+    one long as ``shiftleft(a, 32) | b``: a single 8-byte key for pair
+    aggregates.  Ids are cast to long and checked once per array, before
+    pairing: an id that is negative or ≥ 2^31 fails the query through
+    ``raise_error`` instead of packing into a key that unpacks wrong."""
+    arr = (F.col(items) if isinstance(items, str) else items).cast("array<bigint>")
+    out_of_range = F.exists(arr, lambda x: (x < 0) | (x >= PAIR_ID_LIMIT))
+    pairs = F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                F.slice(arr, i + 2, F.size(arr)),
+                lambda y: F.shiftleft(x, 32).bitwiseOR(y),
+            ),
+        )
+    )
+    return F.when(
+        out_of_range,
+        F.raise_error(F.lit(f"packed pair key: id outside [0, {PAIR_ID_LIMIT})")),
+    ).otherwise(pairs)
+
+
+def unpacked_pair(key: Column | str) -> tuple[Column, Column]:
+    """The (a, b) ids of a :func:`packed_pairs` key."""
+    p = F.col(key) if isinstance(key, str) else key
+    return F.shiftrightunsigned(p, 32), p.bitwiseAND(F.lit((1 << 32) - 1))

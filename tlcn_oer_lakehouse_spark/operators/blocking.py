@@ -33,20 +33,16 @@ def global_sort_ranks(
     df: DataFrame,
     order_cols: list[str],
     n_partitions: int,
-    persist=None,
 ) -> DataFrame:
     """0-based global rank over a UNIQUE total order (``order_cols``
     must be duplicate-free as a tuple — pass a tie-breaking key).
     Two-phase: range-partition, per-partition row_number, O(P) totals
     broadcast back as exclusive offsets.  Appends a ``rank`` column."""
-    if persist is None:
-        persist = lambda _key, frame: frame.persist()  # noqa: E731
     spark = df.sparkSession
-    parts = persist(
-        "ranks",
-        df.repartitionByRange(n_partitions, *order_cols).withColumn(
-            "__pid", F.spark_partition_id()
-        ),
+    parts = (
+        df.repartitionByRange(n_partitions, *order_cols)
+        .withColumn("__pid", F.spark_partition_id())
+        .persist()
     )
     totals = parts.groupBy("__pid").agg(F.count(F.lit(1)).alias("n")).collect()
     running = 0
@@ -94,7 +90,6 @@ def sorted_neighborhood_pairs(
     window: int = 5,
     threshold: float = 0.5,
     n_partitions: int | None = None,
-    persist=None,
 ) -> DataFrame:
     """SNM candidate pairs with word-set Jaccard ≥ ``threshold``:
     sort by (name, id), pair ranks within ``window``, verify on
@@ -110,7 +105,6 @@ def sorted_neighborhood_pairs(
         ),
         ["name", "rid"],
         n_partitions,
-        persist=persist,
     ).select(
         "rid", "rank", F.array_distinct(F.split("name", " ")).alias("toks")
     )

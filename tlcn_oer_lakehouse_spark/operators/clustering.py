@@ -122,14 +122,18 @@ def kmeans_fit(
     for _ in range(n_iter):
         assigned = kmeans_assign_once(work, centroids, id_col, "__v")
         centroids = _recompute_centroids(assigned, "__v")
-    # checkpoint ONLY the returned k-row frame: consumers reference the
+    # materialize ONLY the returned k-row frame: consumers reference the
     # trained centroids several times (assign, PQ code + ADC distance
     # tables) and would otherwise replay the whole Lloyd chain per
     # reference (measured 57 Exchange nodes in ann_pq_adc's plan before,
-    # 9 after); intra-loop checkpoints are deliberately NOT added — at
-    # n_iter<=2 their per-job launch overhead costs more than the
-    # replay they save
-    return centroids.localCheckpoint()
+    # 9 after).  An Arrow table becomes a local relation whose rows plan
+    # equal on every rebuild, so a consumer's cached frame is reused; a
+    # checkpoint, or createDataFrame over Python rows, embeds a fresh
+    # RDD per build and caches again.  Intra-loop materialization is
+    # deliberately NOT added — at n_iter<=2 its per-job launch overhead
+    # costs more than the replay it saves
+    rows = centroids.toArrow().sort_by("centroid_id")
+    return df.sparkSession.createDataFrame(rows, centroids.schema)
 
 
 def kmeans_fit_assign(
@@ -202,7 +206,7 @@ def pq_adc_topk(
         )
 
     # Codebook training is unchanged: m deterministic Lloyd runs, each
-    # returning a checkpointed k-row centroid frame.
+    # returning a materialized k-row centroid frame.
     cents = [
         kmeans_fit(
             _sub(train, i, "__sub").select(id_col, "__sub"),

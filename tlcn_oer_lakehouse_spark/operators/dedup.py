@@ -267,7 +267,6 @@ def minhash_near_duplicates(
     bands: int = 4,
     threshold: float = 0.5,
     hash_fn: str = "md5",
-    persist=None,
     doc_arrays: DataFrame | None = None,
 ) -> DataFrame:
     """Full MinHash+LSH near-dup pipeline, array form (r11): one
@@ -292,9 +291,7 @@ def minhash_near_duplicates(
     if doc_arrays is not None:
         base = doc_arrays
     else:
-        if persist is None:
-            persist = lambda _key, frame: frame.persist()  # noqa: E731
-        base = persist("arr", minhash_doc_arrays(df, id_col, text_col, shingle_n))
+        base = minhash_doc_arrays(df, id_col, text_col, shingle_n).persist()
     # filter + size evaluate against the CACHED column (see
     # minhash_doc_arrays on why the filter must sit above the persist)
     docs_arr = base.filter(F.size("tok_arr") > 0).select(
@@ -448,7 +445,6 @@ def prefix_filter_jaccard_pairs(
     text_col: str,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    persist=None,
 ) -> DataFrame:
     """EXACT set-similarity self-join via prefix filtering (Chaudhuri et
     al. ICDE'06; PPJoin, Xiao et al. WWW'08; distributed form: Vernica
@@ -494,23 +490,16 @@ def prefix_filter_jaccard_pairs(
     arrays — the single persisted frame), one equi-join on prefix
     shingles, a combinable pair aggregate, two doc-keyed array-fetch
     joins — no cartesian, no window."""
-    # ``persist`` — (key, frame) -> persisted frame.  Registry callers
-    # pass a persist_replacing partial so a long-lived session holds at
-    # most ONE live cached copy of each corpus-sized frame per query
-    # (the ADVICE-r8 dedup_semdedup discipline); ad-hoc callers get a
-    # plain .persist().
-    if persist is None:
-        persist = lambda _key, frame: frame.persist()  # noqa: E731
     p, q = _tau_fraction(threshold)
     # persisted: the tokenize→shingle→distinct→explode scan feeds BOTH
     # the df aggregate and the ordering join — uncached it runs twice,
     # and the scan (not the joins) dominates the build (sf1.0: 18 s →
     # 11 s for the ordered frame after caching)
-    sh = persist(
-        "sh", shingle_rows(df, id_col, text_col, shingle_n).select("doc", "shingle")
+    sh = (
+        shingle_rows(df, id_col, text_col, shingle_n).select("doc", "shingle").persist()
     )
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    ordered = persist("ordered", _df_ordered_arrays(sh, freq))
+    ordered = _df_ordered_arrays(sh, freq).persist()
     prefix = _prefix_rows(ordered, p, q)
     # length filter τ·max ≤ min as cross-multiplied integers:
     # q·na ≥ p·nb ∧ q·nb ≥ p·na

@@ -24,6 +24,15 @@ Determinism contract (so value-hashes match bit-for-bit across engines):
   sides (Spark timestamps are µs at best).
 - Output columns are aliased identically in builder and oracle (the driver
   sorts columns by name before hashing).
+
+Caching rule: a builder whose plan is fixed by ``(spark, sf)`` caches a
+multiply-referenced frame with plain ``.persist()``.  Spark's cache is
+keyed by plan, so rebuilding the query reuses the one cached entry,
+concurrent builds share it instead of unpersisting each other, and
+sweeping callers release everything with ``clearCache()``.  A frame
+whose plan varies per request (a query's terms, a request's top-k) is
+never persisted: the serve path reads the corpus index cached by
+``retrieval.fused_scores`` and computes the rest inline.
 """
 
 from __future__ import annotations
@@ -103,31 +112,6 @@ def parquet_num_rows(sf_dir: str, name: str, required: bool = False) -> int:
             f"from the floor (oracle parity would silently break)"
         )
     return n
-
-
-_PERSIST_REGISTRY: dict[str, "object"] = {}
-
-
-def persist_replacing(key: str, df):
-    """Persist ``df``, first unpersisting whatever frame was persisted
-    under ``key`` by a PREVIOUS build of the same query.
-
-    Lazy builders can't unpersist after "the consuming action" — the
-    action happens in the caller — so a long-lived session that rebuilds
-    a persisting query repeatedly would otherwise accumulate one cached
-    N-row frame per build (ADVICE r8, dedup_semdedup).  Keying by query
-    name bounds that to ONE live frame per operator: the nth build
-    releases the (n-1)th's cache.  Sweeping callers (bench.py,
-    oracle_harness) still clearCache() between queries; this registry
-    covers every caller that doesn't."""
-    old = _PERSIST_REGISTRY.get(key)
-    if old is not None:
-        try:
-            old.unpersist()
-        except Exception:  # noqa: BLE001 — stale handle after session restart
-            pass
-    _PERSIST_REGISTRY[key] = df.persist()
-    return df
 
 
 def prefix_sum_partitions(spark: SparkSession) -> int:

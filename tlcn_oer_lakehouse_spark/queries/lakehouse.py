@@ -873,16 +873,14 @@ def benford_table(amounts: DataFrame) -> DataFrame:
     # ANSI cast that is a runtime error, not an excluded row (pinned by
     # test_benford_digit_extraction_edges); try_cast -> NULL -> filtered
     digit = F.substring(cents.cast("string"), 1, 1).try_cast("int")
-    from tlcn_oer_lakehouse_spark.queries.base import persist_replacing
-
     # counts persisted (≤9 rows): the total aggregate and the χ² output
     # both read it — uncached, the full amounts scan ran twice (r11)
-    counts = persist_replacing(
-        "benford/counts",
+    counts = (
         amounts.select(digit.alias("digit"))
         .filter(F.col("digit") >= 1)
         .groupBy("digit")
-        .agg(F.count(F.lit(1)).alias("n_obs")),
+        .agg(F.count(F.lit(1)).alias("n_obs"))
+        .persist()
     )
     tot = counts.agg(F.sum("n_obs").alias("n_total"))
     # per-digit Benford share as an exact 9-dp literal — identical on

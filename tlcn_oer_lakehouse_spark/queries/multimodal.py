@@ -787,11 +787,7 @@ def mm_video_frames(spark: SparkSession, sf: str) -> DataFrame:
     # persist the (n_frames-sized) feature rows before the global sort:
     # rangepartitioning SAMPLES its child, so an unpersisted orderBy ran
     # the whole synth+decode upstream twice (r12; guide §1.2)
-    from tlcn_oer_lakehouse_spark.queries.base import persist_replacing
-
-    feats = persist_replacing(
-        "mm_video_frames/features", video_frame_features(vids)
-    )
+    feats = video_frame_features(vids).persist()
     return feats.orderBy("doc_id", "frame_no")
 
 
@@ -865,11 +861,7 @@ def mm_mp4_frames(spark: SparkSession, sf: str) -> DataFrame:
     docs = _doc_ids(spark, sf)
     vids = docs.mapInPandas(_synth, schema="doc_id long, payload binary")
     # same persist-before-sort as mm_video_frames (sampling double-eval)
-    from tlcn_oer_lakehouse_spark.queries.base import persist_replacing
-
-    feats = persist_replacing(
-        "mm_mp4_frames/features", mp4_frame_features(vids)
-    )
+    feats = mp4_frame_features(vids).persist()
     return feats.orderBy("doc_id", "frame_no")
 
 

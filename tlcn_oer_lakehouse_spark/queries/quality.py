@@ -186,16 +186,12 @@ def _surprisal_per_token(spark: SparkSession, sf: str) -> DataFrame:
     """Per-token integer surprisal frame (doc_id, sbits) — the shared
     core of ``unigram_surprisal`` and ``td_ccnet_buckets``: explode →
     vocab groupBy → 1:N vocab join (1-row total broadcast)."""
-    from tlcn_oer_lakehouse_spark.queries.base import persist_replacing
-
     docs = load(spark, sf, "documents").select("doc_id", "text")
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("t"))
     # vocab persisted (bounded, vocabulary-sized): it feeds BOTH the
     # total aggregate and the per-token join — uncached, the corpus
     # explode + groupBy replayed once per consumer (r11, guide §1.2)
-    vocab = persist_replacing(
-        "surprisal/vocab", tok.groupBy("t").agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    vocab = tok.groupBy("t").agg(F.count(F.lit(1)).alias("cnt")).persist()
     totals = vocab.agg(F.sum("cnt").alias("n_total"))
     sbits = F.length(F.bin(F.expr("n_total div cnt"))) - 1
     return (

@@ -620,16 +620,12 @@ def er_sorted_neighborhood(spark: SparkSession, sf: str) -> DataFrame:
     from tlcn_oer_lakehouse_spark.operators.blocking import (
         sorted_neighborhood_pairs,
     )
-    from tlcn_oer_lakehouse_spark.queries.base import persist_replacing
 
     part = load(spark, sf, "part").select("p_partkey", "p_name")
     return (
         sorted_neighborhood_pairs(
             part, "p_partkey", "p_name",
             window=_SNM_WINDOW, threshold=0.5,
-            persist=lambda key, frame: persist_replacing(
-                f"er_sorted_neighborhood/{key}", frame
-            ),
         )
         .filter((F.col("id_a") <= _SNM_PANEL) & (F.col("id_b") <= _SNM_PANEL))
         .orderBy("id_a", "id_b")

@@ -96,20 +96,17 @@ def bm25_score_frame(
     row) is PERSISTED: the stats aggregate and the scoring join both
     consume it, and uncached the expensive tokenize pass over the full
     corpus text runs once per consumer (guide §1.2/§2.4 — the r11 bench
-    measured the double scan as ~2× the query).  persist_replacing
-    bounds a long-lived session to one live frame per corpus shape.
+    measured the double scan as ~2× the query).  The plan is fixed by
+    the frame and ``terms``, so a rebuild reuses the cached entry, but
+    every distinct term set caches one more frame: per-request callers
+    use :func:`fused_scores`, which reads the cached corpus index.
     """
-    from tlcn_oer_lakehouse_spark.queries.base import persist_replacing
-
     toks = tokens(F.col(text_col))
-    scored = persist_replacing(
-        f"bm25_score_frame/{','.join(id_cols)}",
-        frame.select(
-            *id_cols,
-            F.size(toks).alias("dl"),
-            *[_tf(toks, term).alias(f"tf_{i}") for i, term in enumerate(terms)],
-        ),
-    )
+    scored = frame.select(
+        *id_cols,
+        F.size(toks).alias("dl"),
+        *[_tf(toks, term).alias(f"tf_{i}") for i, term in enumerate(terms)],
+    ).persist()
     stats = scored.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").alias("sum_dl"),
@@ -957,7 +954,7 @@ def context_mmr(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: corpus-sized work is exactly the shared BM25 scan plus
     one embeddings equi-join; the candidate pool is then a constant
     O(MMR_POOL)-row frame, ``localCheckpoint(eager=False)``-ed (same
-    rationale as ``kmeans_fit``'s centroid checkpoint — the greedy
+    rationale as ``kmeans_fit``'s materialized centroids — the greedy
     unroll references it ~2 references/step, and without truncation
     every reference replays the corpus scan).  ``eager=False`` keeps
     plan construction metadata-only (ADVICE r8: the eager default ran

@@ -202,32 +202,27 @@ def _pack_context(spark: SparkSession, sf: str, fused: DataFrame) -> DataFrame:
             token_count(F.col("text")).alias("n_tokens"),
         )
     )
-    # persisted: 10 rows — the relevance gate aggregates `top` and the
-    # packed output re-reads it; uncached, the ENTIRE fused-scoring
-    # pipeline upstream replays once per consumer (guide §1.2 — this
-    # was the largest subtree duplication in the serve plan: 36 parquet
-    # scans before, each corpus tokenize ran up to 4×)
-    from tlcn_oer_lakehouse_spark.queries.base import persist_replacing
-
-    top = persist_replacing(
-        "pack_context/top",
-        kept.orderBy(F.col("fused_raw").desc(), F.col("doc_id").asc()).limit(10),
-    )
-    gate = top.agg(F.avg("fused_raw").alias("avg_score"))  # Q5 relevance gate
+    # nothing is cached: `top` is 10 rows read by ONE plan, so the gate
+    # (mean top-10 fused score, the whole-frame window) and the pack's
+    # running token sum are both windows over it — a per-request cache
+    # would only pile up one frame per distinct request
+    top = kept.orderBy(F.col("fused_raw").desc(), F.col("doc_id").asc()).limit(10)
+    gate = F.avg("fused_raw").over(Window.partitionBy())  # Q5 relevance gate
     w = Window.orderBy(F.col("fused_raw").desc(), F.col("doc_id").asc()).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     cum = F.sum("n_tokens").over(w)
     return (  # Q6 token-budget pack
-        top.crossJoin(F.broadcast(gate))
-        .filter(F.col("avg_score") >= 0.15)
-        .select(
+        top.select(
             "doc_id",
             F.round(F.col("fused_raw"), 9).alias("serve_score"),
             "n_tokens",
             cum.alias("cum_tokens"),
             (cum <= CONTEXT_BUDGET_TOKENS).alias("packed"),
+            gate.alias("avg_score"),
         )
+        .filter(F.col("avg_score") >= 0.15)
+        .drop("avg_score")
         .orderBy(F.col("serve_score").desc(), F.col("doc_id").asc())
     )
 

@@ -213,14 +213,9 @@ HAVING COUNT(*) > 1
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
-    from tlcn_oer_lakehouse_spark.queries.base import persist_replacing
-
     return minhash_near_duplicates(
         augmented_corpus(spark, sf), "doc_id", "text",
         shingle_n=3, num_hashes=16, bands=4, threshold=0.5,
-        persist=lambda key, frame: persist_replacing(
-            f"dedup_minhash_lsh/{key}", frame
-        ),
     )
 
 
@@ -378,14 +373,10 @@ def dedup_prefix_filter(spark: SparkSession, sf: str) -> DataFrame:
     from tlcn_oer_lakehouse_spark.operators.dedup import (
         prefix_filter_jaccard_pairs,
     )
-    from tlcn_oer_lakehouse_spark.queries.base import persist_replacing
 
     return _panel_pairs(prefix_filter_jaccard_pairs(
         augmented_corpus(spark, sf), "doc_id", "text",
         shingle_n=3, threshold=0.5,
-        persist=lambda key, frame: persist_replacing(
-            f"dedup_prefix_filter/{key}", frame
-        ),
     ))
 
 
@@ -411,7 +402,6 @@ def dedup_prefix_incremental(spark: SparkSession, sf: str) -> DataFrame:
     from tlcn_oer_lakehouse_spark.operators.dedup import (
         prefix_filter_incremental_pairs,
     )
-    from tlcn_oer_lakehouse_spark.queries.base import persist_replacing
 
     corpus = augmented_corpus(spark, sf)
     existing = corpus.filter(F.col("doc_id") < COPY_OFFSET)
@@ -424,9 +414,6 @@ def dedup_prefix_incremental(spark: SparkSession, sf: str) -> DataFrame:
     return _panel_pairs(prefix_filter_incremental_pairs(
         existing, batch, "doc_id", "text",
         shingle_n=3, threshold=0.5,
-        persist=lambda key, frame: persist_replacing(
-            f"dedup_prefix_incremental/{key}", frame
-        ),
     ))
 
 
@@ -1095,7 +1082,6 @@ def dedup_recall_eval(spark: SparkSession, sf: str) -> DataFrame:
         minhash_doc_arrays,
         minhash_near_duplicates,
     )
-    from tlcn_oer_lakehouse_spark.queries.base import persist_replacing
 
     corpus = augmented_corpus(spark, sf).filter(
         (F.col("doc_id") % COPY_OFFSET) < _RECALL_PANEL
@@ -1105,9 +1091,7 @@ def dedup_recall_eval(spark: SparkSession, sf: str) -> DataFrame:
     # banded index under test (handed in via doc_arrays) — r11 array
     # form: the panel tokenize runs once, and the truth verify moves
     # one array row per pair side instead of ~|A| exploded rows.
-    base = persist_replacing(
-        "dedup_recall_eval/arr", minhash_doc_arrays(corpus, "doc_id", "text", 3)
-    )
+    base = minhash_doc_arrays(corpus, "doc_id", "text", 3).persist()
     docs_arr = base.filter(F.size("tok_arr") > 0).select(
         "doc", "tok_arr", F.size("tok_arr").alias("n_shingles")
     )
@@ -1271,6 +1255,7 @@ def g_jaccard_neighbors(spark: SparkSession, sf: str) -> DataFrame:
     # (count, Σcommon, Σ(nu+nv)) checksums.  The groupBy(nu, nv) count
     # aggregate — the operator's fundamental Σdeg² shuffle — is
     # unchanged, as are the cap semantics (degree = array size).
+    from tlcn_oer_lakehouse_spark.functions.ids import packed_pairs, unpacked_pair
     from tlcn_oer_lakehouse_spark.operators.components import _symmetric_edges
 
     nbrs = (
@@ -1280,9 +1265,10 @@ def g_jaccard_neighbors(spark: SparkSession, sf: str) -> DataFrame:
         .localCheckpoint()
     )
     deg = nbrs.select("u", F.size("ns").alias("d"))
-    # r12: the wedge pair is PACKED into one long (shiftleft(nu,32)|nv —
-    # partkeys are < 2^31 below SF ≈ 10⁴, far past any realizable corpus
-    # here) through the Σdeg² groupBy, and unpacked after the common≥2
+    # r12: the wedge pair is PACKED into one long (functions/ids.py:
+    # packed_pairs — partkeys are < 2^31 below SF ≈ 10⁴, far past any
+    # realizable corpus here, and a larger one fails the query) through
+    # the Σdeg² groupBy, and unpacked after the common≥2
     # filter.  A single 8-byte key halves the aggregate's key bytes and
     # hashes as one long instead of a struct (guide §2.3 narrow types):
     # interleaved A/B at sf1.0 — where the wedge aggregate dominates —
@@ -1292,27 +1278,14 @@ def g_jaccard_neighbors(spark: SparkSession, sf: str) -> DataFrame:
     # drop ~5% — lz4 already squeezed the struct — the win is aggregate
     # hashing, not wire bytes.)
     combos = nbrs.filter(F.size("ns") <= _JACC_NBR_CAP).select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ns"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ns"), i + 2, F.size(F.col("ns"))),
-                        lambda y: F.shiftleft(x, 32).bitwiseOR(y),
-                    ),
-                )
-            )
-        ).alias("p")
+        F.explode(packed_pairs("ns")).alias("p")
     )
+    nu, nv = unpacked_pair("p")
     common = (
         combos.groupBy("p")
         .agg(F.count(F.lit(1)).alias("common"))
         .filter(F.col("common") >= 2)
-        .select(
-            F.shiftrightunsigned("p", 32).alias("nu"),
-            F.col("p").bitwiseAND(F.lit((1 << 32) - 1)).alias("nv"),
-            "common",
-        )
+        .select(nu.alias("nu"), nv.alias("nv"), "common")
     )
     du = deg.select(F.col("u").alias("nu"), F.col("d").alias("du"))
     dv = deg.select(F.col("u").alias("nv"), F.col("d").alias("dv"))

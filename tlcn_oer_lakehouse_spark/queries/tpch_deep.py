@@ -278,19 +278,16 @@ def q15_top_supplier(spark: SparkSession, sf: str) -> DataFrame:
     """Q15 shape: supplier(s) with the maximum 1996-Q1 revenue.  The MAX
     is computed on the exact decimal aggregate and equality-matched on
     decimal (double round-trips would risk ties breaking differently)."""
-    from tlcn_oer_lakehouse_spark.queries.base import persist_replacing
-
     li = load(spark, sf, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01")
     )
     # rev persisted (one row per supplier): the MAX aggregate and the
     # equality match both read it — uncached, the lineitem scan + agg
     # ran twice (r11)
-    rev = persist_replacing(
-        "q15/rev",
-        li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-            F.sum(_rev()).alias("rev_dec")
-        ),
+    rev = (
+        li.groupBy(F.col("l_suppkey").alias("supplier_no"))
+        .agg(F.sum(_rev()).alias("rev_dec"))
+        .persist()
     )
     top = rev.agg(F.max("rev_dec").alias("max_rev"))
     supp = load(spark, sf, "supplier")

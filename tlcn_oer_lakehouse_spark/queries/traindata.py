@@ -575,25 +575,23 @@ def contamination_check_scalable(spark: SparkSession, sf: str) -> DataFrame:
       gracefully to a shuffle equi-join on ``word_idx`` — still one
       join, still no row multiplication.
     """
-    from tlcn_oer_lakehouse_spark.queries.base import persist_replacing
-
     max_df = 1000
     docs = load(spark, sf, "documents")
     with_split = _split_shingles(docs)
-    train = persist_replacing(
-        "td_contamination_scalable.train",
+    train = (
         with_split.filter(F.col("is_train"))
         .groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df_train"))
         .filter(F.col("df_train") <= max_df)
-        .select("shingle"),
+        .select("shingle")
+        .persist()
     )
     # size the bitset to the data: ~9.6 bits/key (blocked layout, see
     # docstring), with the key cardinality bounded statically from the
     # parquet footer (driver-side metadata read, no Spark job — plan
-    # construction must stay lazy; the train persist is bounded to one
-    # live frame by persist_replacing, and sweeping callers clear the
-    # cache per query).  45 ≈ measured distinct 5-gram shingles/doc
+    # construction must stay lazy; a rebuild reuses the train frame's
+    # plan-keyed cache entry, and sweeping callers clear the cache per
+    # query).  45 ≈ measured distinct 5-gram shingles/doc
     # (≈50) × 0.8 train fraction × ~0.95 cross-doc dedup, stable across
     # sf0.001–sf10.
     n_train_bound = max(1, 45 * _parquet_num_rows(sf, "documents"))
@@ -1147,7 +1145,6 @@ def bloom_contamination_prefilter(spark: SparkSession, sf: str) -> DataFrame:
     the realized false-positive count is visible.  The oracle replays
     the bit positions hash-for-hash."""
     from tlcn_oer_lakehouse_spark.functions.text import shingles, tokens
-    from tlcn_oer_lakehouse_spark.queries.base import persist_replacing
 
     depth, mbits, n = 3, 1 << 18, 5
     docs = load(spark, sf, "documents")
@@ -1173,9 +1170,8 @@ def bloom_contamination_prefilter(spark: SparkSession, sf: str) -> DataFrame:
     # train-frame precedent; bounded by the Bloom build side either
     # way) and the bloom positions derive from the cache — the former
     # two-branch form re-ran the train tokenize+shingle scan per branch.
-    train_set = persist_replacing(
-        "td_bloom_contamination.train_set",
-        with_split.filter(F.col("is_train")).select("shingle").distinct(),
+    train_set = (
+        with_split.filter(F.col("is_train")).select("shingle").distinct().persist()
     )
     bloom = train_set.select(F.explode(_positions()).alias("pos")).distinct()
 

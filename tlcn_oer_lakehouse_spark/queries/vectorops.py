@@ -375,10 +375,7 @@ def dedup_semdedup(spark: SparkSession, sf: str) -> DataFrame:
         kmeans_assign_once,
         kmeans_fit,
     )
-    from tlcn_oer_lakehouse_spark.queries.base import (
-        parquet_num_rows,
-        persist_replacing,
-    )
+    from tlcn_oer_lakehouse_spark.queries.base import parquet_num_rows
 
     corpus = _augmented_embeddings(spark, sf)
     k = max(4, math.isqrt(parquet_num_rows(sf, "embeddings", required=True)))
@@ -398,12 +395,10 @@ def dedup_semdedup(spark: SparkSession, sf: str) -> DataFrame:
     # pair-scan sides + the final anti-join) — without it each reference
     # replays the full N×k assignment pass (measured 3× the runtime at
     # sf1.0).  In production this frame IS the stored IVF-layout table.
-    # persist_replacing bounds a long-lived session to ONE live cached
-    # frame for this query — a rebuild releases the prior build's cache
-    # (ADVICE r8); sweeping callers additionally clearCache() per query.
-    assigned = persist_replacing(
-        "dedup_semdedup.assigned", kmeans_assign_once(work, cents, "vec_id", "__v")
-    )
+    # The trained centroids are a local relation, so a rebuild plans
+    # the same frame and reuses its cache entry (ADVICE r8: one live
+    # cached frame per query); sweeping callers clearCache() per query.
+    assigned = kmeans_assign_once(work, cents, "vec_id", "__v").persist()
 
     # Hoist each vector's norm OUT of the pair scan: cosine(a,b) is
     # dot/(|a|·|b|), and computing |·| once per row (2N folds) instead

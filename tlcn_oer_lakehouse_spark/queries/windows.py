@@ -891,14 +891,17 @@ def rec_item_item_cf(spark: SparkSession, sf: str) -> DataFrame:
     the item-based formulation the scale-path over user-based CF."""
     from pyspark.sql import Window
 
+    from tlcn_oer_lakehouse_spark.functions.ids import packed_pairs, unpacked_pair
+
     # ARRAY-COMBINATION pair generation (r12, the g_jaccard_neighbors
     # wedge precedent): one groupBy(ok) collects each order's sorted
     # distinct item array (collect_set dedups in the same aggregate the
     # former separate li.distinct() shuffle paid), and the co-occurrence
     # pairs are the C(k,2) i<j combinations, emitted PACKED into one
-    # long (shiftleft(u,32)|v — partkeys are < 2^31 at any TPC-H scale
-    # under ~10k, and the packed key halves the pair-aggregate's key
-    # bytes, guide §2.3 narrow types).  This replaces the ok-self-join +
+    # long (functions/ids.py:packed_pairs — partkeys are < 2^31 at any
+    # TPC-H scale under ~10k, a larger one fails the query, and the
+    # packed key halves the pair-aggregate's key bytes, guide §2.3
+    # narrow types).  This replaces the ok-self-join +
     # two-long groupBy: interleaved A/B at sf0.1 min 4.48 → 3.16 s
     # (1.42×), identical checksums.  The per-order frame feeds both the
     # frequency aggregate and the pair explode — localCheckpoint, the
@@ -915,27 +918,12 @@ def rec_item_item_cf(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("pk")
         .agg(F.count(F.lit(1)).alias("n"))
     )
+    u, v = unpacked_pair("p")
     co = (
-        orders.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("items"),
-                        lambda x, i: F.transform(
-                            F.slice(F.col("items"), i + 2, F.size(F.col("items"))),
-                            lambda y: F.shiftleft(x, 32).bitwiseOR(y),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
+        orders.select(F.explode(packed_pairs("items")).alias("p"))
         .groupBy("p")
         .agg(F.count(F.lit(1)).alias("c"))
-        .select(
-            F.shiftrightunsigned("p", 32).alias("u"),
-            F.col("p").bitwiseAND(F.lit((1 << 32) - 1)).alias("v"),
-            "c",
-        )
+        .select(u.alias("u"), v.alias("v"), "c")
     )
     # both orientations from ONE pass over the co-occurrence aggregate
     # (the union form replayed the lineitem self-join + groupBy twice)
@@ -1947,10 +1935,7 @@ def ks_over_events(ev: DataFrame) -> DataFrame:
     """Core of :func:`ml_ks_drift` over an (event_type, day_idx, value)
     frame — split out so constructed-input unit tests can pin the exact
     statistic and the argmax tie-break (tests/test_queries_r10.py)."""
-    from tlcn_oer_lakehouse_spark.queries.base import (
-        persist_replacing,
-        prefix_sum_partitions,
-    )
+    from tlcn_oer_lakehouse_spark.queries.base import prefix_sum_partitions
 
     spark = ev.sparkSession
     drange = ev.agg(F.min("day_idx").alias("mn_d"), F.max("day_idx").alias("mx_d"))
@@ -1971,12 +1956,9 @@ def ks_over_events(ev: DataFrame) -> DataFrame:
             F.sum(F.when(F.col("is_b"), 1).otherwise(0)).alias("nb"),
         )
     )
-    parts = persist_replacing(
-        "ml_ks_drift/hist",
-        hist.repartitionByRange(
-            prefix_sum_partitions(spark), "event_type", "value"
-        ).withColumn("pid", F.spark_partition_id()),
-    )
+    parts = hist.repartitionByRange(
+        prefix_sum_partitions(spark), "event_type", "value"
+    ).withColumn("pid", F.spark_partition_id()).persist()
     totals = parts.groupBy("pid", "event_type").agg(
         F.sum("na").alias("pa"), F.sum("nb").alias("pb")
     ).collect()
