@@ -27,6 +27,7 @@ TERM_SETS = [
 REBUILT = [
     "dedup_semdedup", "q15_top_supplier", "dq_benford_digits", "ml_ks_drift",
     "medallion_e2e", "rag_serve_e2e", "q_tiered_search", "dedup_minhash_lsh",
+    "q5_context_mmr",
 ]
 
 

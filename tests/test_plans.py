@@ -230,7 +230,7 @@ _BNLJ_ALLOWED = {
     "q3_hybrid_fusion",       # 1-row max-score normalizers
     "q3_hybrid_lang_weighted",
     "q5_context_rerank",      # 1-row avg-score gate
-    "q5_context_mmr",         # 1-row max-norm + <=5-row selected-set broadcasts
+    "q5_context_mmr",         # <=5-row selected-set broadcasts
     "knn_bruteforce",         # 1-row query vector
     "ann_ivf_topk",           # 1-row query + 8-row centroids
     "ann_kmeans_assign",      # k=4 broadcast centroid set (O(k) rows)
@@ -301,44 +301,6 @@ def test_registry_wide_no_accidental_cross_products(spark):
         elif "BroadcastNestedLoopJoin" in plan and name not in _BNLJ_ALLOWED:
             offenders[name] = "BroadcastNestedLoopJoin (not allowlisted)"
     assert not offenders, offenders
-
-
-def test_priority_queries_inside_driver_window():
-    """The driver's correctness gate samples the FIRST 50 registry
-    entries. Every query needing a fresh driver row this round — the
-    changed-since-green re-verifies plus every never-driver-sampled
-    query — must sort inside that window, or it silently goes
-    unverified."""
-    from tlcn_oer_lakehouse_spark.queries import (
-        REGISTRY,
-        _DRIVER_GREEN,
-        _REVERIFY_FIRST,
-        _SAMPLE_LAST,
-    )
-
-    order = list(REGISTRY)
-    window = set(order[:50])
-    # _SAMPLE_LAST may only demote queries that are ALREADY driver-proven
-    # (rank 4) — a non-green name there would rank 2, sort past the window
-    # cut, and silently go driver-unverified while the subtraction below
-    # hides it from `never_sampled`.
-    not_green_demotions = _SAMPLE_LAST - _DRIVER_GREEN
-    assert not not_green_demotions, (
-        f"_SAMPLE_LAST must be a subset of _DRIVER_GREEN; "
-        f"non-green: {sorted(not_green_demotions)}"
-    )
-    never_sampled = (
-        set(order) - _DRIVER_GREEN - set(_REVERIFY_FIRST) - _SAMPLE_LAST
-    )
-    needs_row = set(_REVERIFY_FIRST) | never_sampled
-    missing = needs_row - window
-    assert not missing, f"outside the driver's 50-entry window: {sorted(missing)}"
-    # every demotion must be deliberate (documented in _SAMPLE_LAST),
-    # never an accidental overflow of the 50-slot window
-    assert len(needs_row) <= 50, (
-        f"window over-subscribed by {len(needs_row) - 50}: demote "
-        "deliberately via _SAMPLE_LAST or stop adding queries"
-    )
 
 
 def test_medallion_e2e_exchange_budget(spark):

@@ -1,4 +1,5 @@
-"""Merged query registry — one QuerySpec per SURVEY §2 operator."""
+"""Merged query registry — one QuerySpec per SURVEY §2 operator, in
+``_MODULES`` order, then each module's ``SPECS`` order."""
 
 from __future__ import annotations
 
@@ -27,291 +28,6 @@ _MODULES = (
 )
 
 
-# Driver-verified-green union across CORRECTNESS_r01..r09, keyed by the
-# LATEST round each query's newest green row was produced in (its
-# "vintage"; a name in several rounds resolves to the LAST set that
-# contains it — insertion order matters).  CORRECTNESS_r09 was 50/50
-# green — the cross-round union is 227/227 pre-round-10 queries: every
-# registry query has a driver-proven row.  The vintage drives the
-# rank-3 ordering below so each round's spare window slots refresh the
-# OLDEST driver rows first.  Round-10 window budget: 3 changed-builder
-# re-verifies (_REVERIFY_FIRST — the ADVICE-r9 exact-bounds, floor-cell
-# and lag-select fixes), 2 never-sampled round-10 additions
-# (dedup_prefix_incremental, layout_dpp_star_join) at rank 1, and ~45
-# spare slots retiring the r4 green vintage (VERDICT r9 #1) with
-# r5-vintage rows behind them.
-_GREEN_VINTAGE: dict[int, frozenset[str]] = {
-    2: frozenset({
-        "td_vocab_coverage"
-    }),
-    3: frozenset({
-        "a1_grouped_multi_agg", "a_approx_percentile",
-        "j4_left_anti", "j5_broadcast_dim", "j8_fk_validation",
-        "j_semi_exists", "mm_pdf_hierarchical",
-        "o7_intersect_except", "p2_derived_columns",
-        "p3_nullsafe_incremental_filter", "p6_conditional_ladder",
-        "pii_scrub", "semantic_match_subjects", "td_pack_sequences",
-        "td_repetition_quality", "td_token_budget_shards",
-        "td_unigram_surprisal", "w4_distribution_ranks"
-    }),
-    4: frozenset({
-        "a_countmin_sketch", "ann_knn_join", "ann_recall_eval",
-        "chunk_udtf", "dedup_soft_sample", "f_null_handling",
-        "f_url_extract", "j_full_outer_reconcile",
-        "j_fuzzy_deletion", "j_range_interval", "mm_gif_decode",
-        "mm_image_decode", "mm_jpeg_decode", "mm_png_decode",
-        "mm_video_frames", "mm_wav_decode", "mm_wav_windows",
-        "qual_gopher_rules", "rec_item_item_cf",
-        "s8_inferred_reference", "silver_normalize",
-        "st_session_window", "st_sliding_window",
-        "st_tumbling_window", "td_bigram_surprisal",
-        "td_bloom_contamination", "td_bpe_merges",
-        "td_bpe_tokenize", "td_curriculum_order", "td_domain_caps",
-        "td_pipeline_e2e", "td_temperature_mixing",
-        "td_weighted_sample", "td_wordpiece_merges",
-        "ts_mad_anomalies", "ts_subsequence_search",
-        "w10_cooccurrence_pairs", "w11_rfm_segmentation",
-        "w5_funnel", "w6_cohort_retention", "w7_event_transitions",
-        "w8_activity_streaks", "w9_max_concurrency"
-    }),
-    5: frozenset({
-        "a_cube", "a_kmv_distinct", "ann_kmeans_assign",
-        "ann_pq_adc", "dedup_clusters", "dedup_clusters_star",
-        "dedup_recall_eval", "dq_expectations", "embed_and_rank",
-        "embed_documents", "f_array_functions",
-        "g_label_propagation", "g_lpa_converged",
-        "g_pointer_doubling_depth", "ivm_incremental_aggregate",
-        "j_salted_hot_key", "k1_merge_upsert", "k2_merge_delete",
-        "ml_chi2_features", "ml_confusion_metrics",
-        "ml_covariance_block", "ml_feature_scaling",
-        "ml_kaplan_meier", "ml_lift_gain", "ml_ols_regression",
-        "ml_quantile_bucketize", "ml_welch_ttest", "mm_phash_dedup",
-        "mm_wav_quadrature", "qual_boilerplate_strip",
-        "td_contamination_check", "td_data_card",
-        "td_domain_caps_scalable", "td_unigram_segment",
-        "text_quality_langid", "ts_holt_forecast",
-        "ts_seasonal_decompose", "w12_attribution_last_touch",
-        "w13_conversion_time_quantiles"
-    }),
-    6: frozenset({
-        "a_approx_count_distinct", "a_grouping_sets",
-        "chunk_hierarchical", "dedup_simhash",
-        "g_jaccard_neighbors", "g_kcore", "g_modularity",
-        "g_pagerank", "g_triangle_count", "j_asof_event_order",
-        "ml_auc_roc", "ml_naive_bayes_langid", "q10_returned_items",
-        "q11_important_parts", "q12_ship_priority",
-        "q13_customer_distribution", "q14_promo_revenue",
-        "q15_top_supplier", "q16_supplier_variety",
-        "q17_small_quantity_revenue", "q18_big_orders",
-        "q19_disjunctive_filter", "q1_bm25_topk",
-        "q1_pricing_summary", "q20_heavy_shippers",
-        "q21_waiting_suppliers", "q22_idle_customers",
-        "q2_min_cost_supplier", "q3_hybrid_fusion",
-        "q3_hybrid_lang_weighted", "q3_hybrid_recency",
-        "q3_shipping_priority", "q4_order_priority",
-        "q5_context_rerank", "q5_local_supplier_volume",
-        "q6_context_pack", "q6_forecast_revenue",
-        "q7_volume_shipping", "q8_market_share",
-        "q9_product_profit", "q_tiered_search",
-        "s1_json_extraction", "s4_local_collection",
-        "s6_range_source", "td_bpe_merges_delta",
-        "td_hard_negatives", "td_token_budget_shards_scalable"
-    }),
-    7: frozenset({
-        "a5_distinct_dedup", "a6_collect_list_struct",
-        "a_column_profile", "a_exact_percentile", "a_hll_sketch",
-        "a_kmv_set_ops", "a_pivot", "a_rollup", "ann_ivf_topk",
-        "ann_sign_bucket", "chunk_char_budget",
-        "chunk_token_windows", "dedup_embedding_cosine",
-        "dedup_exact", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-        "f_datetime_dim", "f_hash_identities",
-        "gold_bridge_weighted", "gold_dim_customer",
-        "gold_fact_coverage", "knn_bruteforce", "match_subjects",
-        "medallion_e2e", "mm_binary_metadata", "mm_frame_sample",
-        "mm_image_features", "mm_mp4_frames", "mm_pdf_pages",
-        "mm_pdf_toc", "o2_top1_limit", "o5_union_by_name",
-        "o6_posexplode", "q1_inverted_index", "q4_keyword_extract",
-        "q7_index_diff", "rag_serve_ann", "rag_serve_e2e",
-        "summarize_extractive", "td_contamination_scalable",
-        "td_corpus_mixing", "td_exact_substring_dedup",
-        "td_exact_substring_keepone", "td_stratified_sample",
-        "td_train_test_split", "text_cdc_fingerprint", "text_stats",
-        "w1_latest_record_dedup", "w2_topk_per_group",
-        "w3_running_and_lag"
-    }),
-    8: frozenset({
-        "a1_grouped_multi_agg", "a_approx_percentile",
-        "ann_kmeans_assign", "ann_knn_join", "ann_pq_adc",
-        "ann_recall_eval", "chunk_udtf", "dedup_clusters",
-        "dedup_clusters_star", "dedup_embedding_cosine",
-        "dedup_minhash_lsh", "dedup_ngram_jaccard",
-        "dedup_recall_eval", "dedup_semdedup",
-        "dedup_soft_sample", "f_null_handling", "f_url_extract",
-        "g_pagerank", "j4_left_anti", "j5_broadcast_dim",
-        "j8_fk_validation", "j_full_outer_reconcile",
-        "j_fuzzy_deletion", "j_semi_exists",
-        "medallion_incremental", "mm_pdf_hierarchical",
-        "o7_intersect_except", "p2_derived_columns",
-        "p3_nullsafe_incremental_filter", "p6_conditional_ladder",
-        "pii_scrub", "q17_small_quantity_revenue",
-        "q5_context_mmr", "qual_gopher_rules",
-        "s8_inferred_reference", "semantic_match_subjects",
-        "silver_normalize", "td_bigram_surprisal",
-        "td_ccnet_buckets", "td_contamination_scalable",
-        "td_curriculum_order", "td_domain_caps", "td_dsir_sample",
-        "td_pack_sequences", "td_repetition_quality",
-        "td_ssl_prototypes", "td_token_budget_shards",
-        "td_unigram_surprisal", "td_vocab_coverage",
-        "w4_distribution_ranks"
-    }),
-    9: frozenset({
-        "a_skyline_pareto", "dedup_clusters", "dedup_clusters_star",
-        "dedup_embedding_cosine", "dedup_exact",
-        "dedup_minhash_incremental", "dedup_minhash_lsh",
-        "dedup_ngram_jaccard", "dedup_prefix_filter",
-        "dedup_recall_eval", "dedup_semdedup", "dedup_simhash",
-        "dedup_soft_sample", "g_jaccard_neighbors", "g_kcore",
-        "g_label_propagation", "g_lpa_converged", "g_modularity",
-        "g_pagerank", "g_pointer_doubling_depth", "g_scc",
-        "g_triangle_count", "ivm_incremental_join",
-        "j_interval_overlap", "j_range_interval", "j_spatial_grid",
-        "layout_compaction_plan", "layout_zorder",
-        "ml_calibration_bins", "ml_psi_drift", "ml_ranking_metrics",
-        "o8_unpivot", "pii_k_anonymity", "q10_returned_items",
-        "q3_hybrid_rrf", "q5_context_mmr", "q_phrase_search",
-        "st_sliding_window", "st_tumbling_window", "td_ccnet_buckets",
-        "td_contamination_scalable", "td_curation_model_e2e",
-        "td_data_card", "td_dataset_overlap", "td_fractional_epochs",
-        "td_quality_classifier", "td_ssl_prototypes",
-        "ts_autocorrelation", "ts_cusum_changepoint",
-        "w14_association_rules"
-    }),
-    10: frozenset({
-        "a_aqp_estimate", "a_countmin_sketch", "a_cube",
-        "dedup_prefix_filter", "dedup_prefix_incremental",
-        "dedup_recall_eval", "dq_benford_digits", "dq_expectations",
-        "er_sorted_neighborhood", "f_array_functions",
-        "ivm_incremental_aggregate", "j_salted_hot_key",
-        "j_scd2_point_in_time", "j_spatial_grid", "k1_merge_upsert",
-        "k2_merge_delete", "layout_analyze_stats",
-        "layout_dpp_star_join", "ml_ks_drift", "mm_gif_decode",
-        "mm_image_decode", "mm_jpeg_decode", "mm_png_decode",
-        "mm_video_frames", "mm_wav_decode", "mm_wav_windows",
-        "qual_boilerplate_strip", "rec_item_item_cf",
-        "st_session_window", "td_bloom_contamination",
-        "td_bpe_merges", "td_bpe_tokenize",
-        "td_domain_caps_scalable", "td_pipeline_e2e",
-        "td_temperature_mixing", "td_weighted_sample",
-        "td_wordpiece_merges", "text_quality_langid",
-        "ts_autocorrelation", "ts_holt_forecast",
-        "ts_mad_anomalies", "ts_subsequence_search",
-        "ts_theilsen_trend", "w10_cooccurrence_pairs",
-        "w11_rfm_segmentation", "w5_funnel", "w6_cohort_retention",
-        "w7_event_transitions", "w8_activity_streaks",
-        "w9_max_concurrency"
-    }),
-    11: frozenset({
-        "a_approx_count_distinct", "a_grouping_sets", "a_kmv_distinct",
-        "dedup_minhash_incremental", "dedup_prefix_filter",
-        "dedup_prefix_incremental", "embed_and_rank", "embed_documents",
-        "er_sorted_neighborhood", "j_asof_event_order",
-        "layout_dpp_star_join", "layout_write_skew_plan",
-        "ml_chi2_features", "ml_confusion_metrics",
-        "ml_covariance_block", "ml_feature_scaling", "ml_kaplan_meier",
-        "ml_ks_drift", "ml_lift_gain", "ml_ols_regression",
-        "ml_quantile_bucketize", "ml_welch_ttest", "mm_phash_dedup",
-        "mm_wav_quadrature", "q11_important_parts", "q12_ship_priority",
-        "q13_customer_distribution", "q14_promo_revenue",
-        "q15_top_supplier", "q16_supplier_variety", "q18_big_orders",
-        "q19_disjunctive_filter", "q1_pricing_summary",
-        "q20_heavy_shippers", "q21_waiting_suppliers",
-        "q22_idle_customers", "q2_min_cost_supplier",
-        "q3_shipping_priority", "q4_order_priority",
-        "q5_local_supplier_volume", "q6_forecast_revenue",
-        "q7_volume_shipping", "q8_market_share", "q9_product_profit",
-        "summarize_extractive", "td_contamination_check",
-        "td_unigram_segment", "ts_seasonal_decompose",
-        "w12_attribution_last_touch", "w13_conversion_time_quantiles"
-    }),
-}
-
-_DRIVER_GREEN = frozenset().union(*_GREEN_VINTAGE.values())
-
-_VINTAGE_OF = {n: r for r, names in _GREEN_VINTAGE.items() for n in names}
-
-
-# Queries whose green driver row predates a material round-12 code
-# change — pinned to the very front of the window so round 12 produces
-# a fresh row for each.  Every output was proven identical BEFORE the
-# rotation (strict driver sim at sf0.01 AND sf0.1, full-result
-# checksums in the interleaved A/B probes — OPTIMIZATION_r12.md):
-#
-#   td_contamination_check / td_contamination_scalable: staged tokenize
-#   + post-explode xxhash64 (the hash left the interpreted transform
-#   lambda); 4.1×/3.3× interleaved.
-#   td_exact_substring_dedup / _keepone: same post-explode hash move.
-#   rec_item_item_cf: co-occurrence pairs now generated as packed
-#   array combinations per order (no ok-self-join); 1.42×.
-#   mm_* decode fixtures: doc_id spine hash-repartitioned to session
-#   parallelism before the synth/decode mapInPandas; video/mp4
-#   additionally persist frame features before the global sort; the
-#   JPEG codec's entropy/DCT internals vectorized byte-identically.
-#   medallion_e2e: broadcast_changed pinned on the landing-batch
-#   merges (SMJ 2→0).
-#   match_subjects / td_bloom_contamination / td_dataset_overlap /
-#   td_repetition_quality / dedup_minhash_lsh: the heaviest consumers
-#   of the rebound shingles() (tokens bound once per row instead of
-#   re-evaluated per shingle position; 8.0×/2.8×/2.5×/6.2×/1.33×).
-#
-# Round-11 list (kept for the record — all sampled green in r11):
-#   dedup_prefix_filter / dedup_prefix_incremental: (a) the prefix/
-#   overlap ceil bounds widened to BIGINT literals (ADVICE r10 — INT
-#   overflow for large-denominator thresholds), (b) the pair OUTPUT is
-#   now restricted to the fixed 20k-base-id audit panel (VERDICT r10
-#   #2; covers the whole corpus at sf ≤ 0.1, so gate-scale values are
-#   unchanged, but builder and oracle both changed).
-#   er_sorted_neighborhood: verified-pair output restricted to the
-#   ≤200k-key audit panel (sort ranks stay global; covers the whole
-#   part table at sf ≤ 1.0).
-#   ml_ks_drift: the value grouping key is sign-normalized (+0.0) on
-#   both engines (ADVICE r10 — the SPARK-26021 −0.0 divergence class).
-#   layout_dpp_star_join: the scratch store is now (realpath, PID)-
-#   keyed and written once per process (ADVICE r10 race); the probe
-#   plan is unchanged, the builder body is not.
-#   dedup_minhash_incremental: gained the persist-callback parameter
-#   (ADVICE r10 streaming cache hygiene); plan unchanged, builder
-#   signature changed.
-_REVERIFY_FIRST = (
-    "td_contamination_check",
-    "td_contamination_scalable",
-    "rec_item_item_cf",
-    "medallion_e2e",
-    "dedup_minhash_lsh",
-    "match_subjects",
-    "td_bloom_contamination",
-    "td_dataset_overlap",
-    "td_repetition_quality",
-    "td_exact_substring_dedup",
-    "td_exact_substring_keepone",
-    "mm_video_frames",
-    "mm_mp4_frames",
-    "mm_jpeg_decode",
-    "mm_png_decode",
-    "mm_gif_decode",
-    "mm_image_decode",
-    "mm_wav_decode",
-    "mm_wav_windows",
-    "mm_wav_quadrature",
-    "mm_phash_dedup",
-)
-
-
-# Round-12 rotation (VERDICT r11 #8): greens freshly sampled in ROUND
-# 11 go to the very back; the 21 r12-changed builders re-verify first;
-# the ~29 spare slots refresh the oldest remaining vintage (r6) first.
-_SAMPLE_LAST: frozenset[str] = _GREEN_VINTAGE[11]
-
-
 def _collect() -> dict[str, QuerySpec]:
     import importlib
 
@@ -322,27 +38,7 @@ def _collect() -> dict[str, QuerySpec]:
             if spec.name in registry:
                 raise ValueError(f"duplicate query name: {spec.name}")
             registry[spec.name] = spec
-    order = list(registry)
-    pinned = {n: i for i, n in enumerate(_REVERIFY_FIRST)}
-    green = _DRIVER_GREEN
-
-    def rank(n: str) -> tuple[int, int]:
-        # 0: stale-changed queries needing fresh driver rows;
-        # 1: never driver-sampled (rotations + new round-6 work);
-        # 2: explicitly demoted below the window cut when over-subscribed;
-        # 3: green on older-round rows — fill spare slots to refresh;
-        # 4: green AND freshly sampled last round — very back.
-        if n in pinned:
-            return (0, pinned[n])
-        if n not in green:
-            return ((2, order.index(n)) if n in _SAMPLE_LAST
-                    else (1, order.index(n)))
-        if n in _SAMPLE_LAST:
-            return (4, order.index(n))
-        # oldest driver rows first: vintage round, then registry order
-        return (3, _VINTAGE_OF[n] * 10000 + order.index(n))
-
-    return {n: registry[n] for n in sorted(order, key=rank)}
+    return registry
 
 
 REGISTRY: dict[str, QuerySpec] = _collect()

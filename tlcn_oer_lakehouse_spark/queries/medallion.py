@@ -157,8 +157,9 @@ def medallion_e2e(spark: SparkSession, sf: str) -> DataFrame:
     in production) and the three delta-sized change frames.  Their
     plans are fixed by ``(spark, sf)``, so a rebuild reuses the cached
     entries.  Sweeping callers clear the cache after the consuming
-    action (bench.py per rep, oracle_harness/driver_sim per query); a
-    one-shot caller can simply let session teardown drop them."""
+    action (perfbench analytics, oracle_harness and driver_sim, each per
+    query); a one-shot caller can simply let session teardown drop
+    them."""
     bron = _bronze_fixture(load(spark, sf, "documents"))
     parsed = bron.select(
         "v", F.from_json("payload", _BRONZE_SCHEMA).alias("r")

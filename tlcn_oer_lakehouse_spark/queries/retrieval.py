@@ -953,17 +953,17 @@ def context_mmr(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale shape: corpus-sized work is exactly the shared BM25 scan plus
     one embeddings equi-join; the candidate pool is then a constant
-    O(MMR_POOL)-row frame, ``localCheckpoint(eager=False)``-ed (same
-    rationale as ``kmeans_fit``'s materialized centroids — the greedy
-    unroll references it ~2 references/step, and without truncation
-    every reference replays the corpus scan).  ``eager=False`` keeps
-    plan construction metadata-only (ADVICE r8: the eager default ran
-    the full BM25 corpus scan at build time, breaking the registry's
-    lazy-builder contract); the checkpoint materializes once inside the
-    first consuming action and is reused by every later reference.
-    Selection depth is a constant, so the unrolled plan size is fixed
-    and data-independent; every step joins ≤MMR_POOL rows against a
-    broadcast ≤MMR_K-row selected set."""
+    O(MMR_POOL)-row frame, collected when the query is built and
+    re-planted as a local relation from its Arrow table (as
+    ``kmeans_fit`` does with its centroids): the greedy unroll
+    references the pool ~2 times per step, and without this every
+    reference replays the corpus scan.  Building therefore runs one
+    Spark job over the corpus (like the corpus index); in exchange the
+    pool's rows plan equal on every rebuild, so a rebuild reuses the
+    BM25 frame's cache entry (a checkpoint would persist a fresh RDD
+    per build).  Selection depth is a constant, so the unrolled plan
+    size is fixed and data-independent; every step joins ≤MMR_POOL rows
+    against a broadcast ≤MMR_K-row selected set."""
     emb = load(spark, sf, "embeddings").select(
         F.col("vec_id").alias("doc_id"),
         F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("vec"),
@@ -976,15 +976,12 @@ def context_mmr(spark: SparkSession, sf: str) -> DataFrame:
         .limit(MMR_POOL)
     )
     mx = pool.agg(F.max("raw").alias("mx"))
-    cands = (
-        pool.crossJoin(F.broadcast(mx))
-        .select(
-            "doc_id",
-            F.round(F.col("raw") / F.col("mx"), 9).alias("rel"),
-            "vec",
-        )
-        .localCheckpoint(eager=False)
+    cands = pool.crossJoin(F.broadcast(mx)).select(
+        "doc_id",
+        F.round(F.col("raw") / F.col("mx"), 9).alias("rel"),
+        "vec",
     )
+    cands = spark.createDataFrame(cands.toArrow().sort_by("doc_id"), cands.schema)
 
     sel = (
         cands.orderBy(F.col("rel").desc(), F.col("doc_id").asc())

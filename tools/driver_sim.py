@@ -1,6 +1,6 @@
 """Strict driver-canonicalization simulator.
 
-The per-round driver compares Spark ``toPandas()`` output against DuckDB
+An external checker compares Spark ``toPandas()`` output against DuckDB
 ``.df()`` output: columns sorted by name, rows sorted with
 ``DataFrame.sort_values`` over all columns, then a value hash.  That
 pipeline is dtype-sensitive in ways the stringifying local oracle harness
@@ -100,51 +100,13 @@ def check(spark, con, name: str, spec) -> dict:
     return r
 
 
-def _select(args: list[str]) -> tuple[list[str], int | None, int | None]:
-    """Parse [--since-round N] [--window N] [name_substring ...].
-
-    ``--since-round N`` keeps queries whose latest driver-green vintage
-    is round ≥ N, plus never-sampled queries — the vintage-aware
-    selector (VERDICT r9 #6) that keeps a per-session sweep tractable
-    as the registry grows ~25 queries/round (the full 227-query sweep
-    already costs ~212 s at sf0.01).  ``--window N`` keeps only the
-    first N registry entries (the driver samples the first 50)."""
-    filters: list[str] = []
-    since: int | None = None
-    window: int | None = None
-    exact = False
-    it = iter(args)
-    for a in it:
-        if a == "--since-round":
-            since = int(next(it))
-        elif a == "--window":
-            window = int(next(it))
-        elif a == "--exact":
-            # whole-name matching for scripted sweeps (a substring like
-            # "td_domain_caps" would otherwise also select its
-            # "_scalable" superstring sibling)
-            exact = True
-        else:
-            filters.append(a)
-    return filters, since, window, exact
-
-
 def main() -> None:
-    filters, since, window, exact = _select(sys.argv[1:])
-    from tlcn_oer_lakehouse_spark.queries import _VINTAGE_OF
-
+    filters = sys.argv[1:]
     spark = get_spark(app_name="driver_sim")
     con = duckdb_con(SF_DIR)
     bad = []
-    for pos, (name, spec) in enumerate(REGISTRY.items()):
-        if filters and not (
-            name in filters if exact else any(f in name for f in filters)
-        ):
-            continue
-        if window is not None and pos >= window:
-            continue
-        # never-sampled queries (no vintage) always qualify for --since-round
-        if since is not None and _VINTAGE_OF.get(name, 10**9) < since:
+    for name, spec in REGISTRY.items():
+        if filters and not any(f in name for f in filters):
             continue
         try:
             res = check(spark, con, name, spec)
