@@ -182,10 +182,10 @@ def test_rollback_feed_folds_to_restored_state(spark, tmp_path):
 
 
 def test_changes_stream_tails_the_feed(spark, tmp_path):
-    """Streaming CDF source: a file stream over the per-commit change
-    logs delivers exactly the rows the batch feed reports, with
-    _commit_version recovered from the path — and a second availableNow
-    run against the same checkpoint picks up ONLY commits made since."""
+    """Streaming CDF source: the change stream delivers exactly the rows
+    the batch feed reports, with their _commit_version — and a second
+    availableNow run against the same checkpoint picks up ONLY commits
+    made since."""
     from tlcn_oer_lakehouse_spark.streaming.ingest import changes_stream
 
     t = _table(spark, tmp_path)

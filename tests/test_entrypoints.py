@@ -1,11 +1,13 @@
 """The entry points that stay: the ``__spark_entry__.py`` contract
 (``entry``/``queries``/``oracle_sql``) and the command-line tools under
-``tools/``, whose in-repo imports must still resolve."""
+``tools/``, whose in-repo imports must still resolve — plus the module
+boundary that keeps the merge table's snapshot format inside ``sinks/``."""
 
 from __future__ import annotations
 
 import ast
 import importlib.util
+import re
 from pathlib import Path
 
 import pytest
@@ -92,3 +94,60 @@ def test_import_check_flags_a_deleted_name(tmp_path):
     assert _missing_imports(tool) == [
         "tlcn_oer_lakehouse_spark.queries._NOT_DEFINED", "tools.no_such_tool",
     ]
+
+
+PACKAGE = REPO / "tlcn_oer_lakehouse_spark"
+SIDECAR = re.compile(r"(?<![A-Za-z0-9])(_epoch_|_tombstones|_changes|__staging)")
+
+
+def _snapshot_format_uses(source: str) -> list[tuple[int, str]]:
+    """(line, literal) for every string literal, docstrings aside, that
+    names a snapshot sidecar or builds or parses a ``__v`` version dir:
+    in an f-string, joined with ``+``, or inside a path or pattern.  A
+    bare ``"__v"`` column alias is not a path."""
+    tree = ast.parse(source)
+    docstrings = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                             ast.AsyncFunctionDef))
+        and node.body and isinstance(node.body[0], ast.Expr)
+    }
+    built: set[int] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.JoinedStr):
+            built |= {id(v) for v in node.values}
+        elif isinstance(node, ast.BinOp):
+            built |= {id(node.left), id(node.right)}
+    return sorted(
+        (node.lineno, node.value)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant) and isinstance(node.value, str)
+        and id(node) not in docstrings
+        and (SIDECAR.search(node.value) or "__v" in node.value and (
+            id(node) in built or not re.fullmatch(r"[\w.]+", node.value)))
+    )
+
+
+def test_only_sinks_know_the_snapshot_format():
+    outside = [p for p in sorted(PACKAGE.rglob("*.py"))
+               if p.relative_to(PACKAGE).parts[0] != "sinks"]
+    hits = {
+        str(p.relative_to(REPO)): uses for p in outside
+        if (uses := _snapshot_format_uses(p.read_text()))
+    }
+    assert hits == {}
+
+
+def test_snapshot_format_check_flags_paths_not_aliases():
+    src = "\n".join([
+        'a = f"{path}__v{n:06d}"',
+        'b = os.path.basename(path) + "__v"',
+        'c = re.compile(r"__v(\\d+)/")',
+        'd = os.path.join(snap, "_tombstones")',
+        'e = f"_epoch_{batch_id}"',
+        'f = F.col("v").alias("__v")',
+        'g = F.col("va.__v")',
+        'h = format("oer_mergetable_changes")',
+    ])
+    assert [line for line, _ in _snapshot_format_uses(src)] == [1, 2, 3, 4, 5]

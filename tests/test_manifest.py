@@ -195,3 +195,61 @@ def test_hidden_bucket_partitioning_equality_prune(spark, tmp_path):
     assert [r.id for r in rows] == [123]
     # range predicates must NOT be mapped through the hash bucket
     assert len(t.pruned_files([("id", ">=", 0)])) == len(all_files)
+
+
+def test_every_commit_publishes_a_sound_manifest(spark, tmp_path):
+    """The commit reuses the head's manifest entries for inherited files
+    and reads footers only for new ones.  After every kind of commit the
+    published manifest must equal one written from scratch over a copy
+    of the version dir."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+
+    from tlcn_oer_lakehouse_spark.sources import pyds
+
+    pyds.register(spark)
+
+    def assert_sound(path):
+        snap = os.path.realpath(path)
+        copy = str(tmp_path / "copies" / os.path.basename(snap))
+        shutil.copytree(snap, copy)
+        write_manifest(copy)
+        published, fresh = (
+            {e["path"]: e for e in read_manifest(d)["files"]} for d in (snap, copy)
+        )
+        assert published and published == fresh
+
+    # hive-partitioned: inherited files keep their nested relative paths
+    t = ParquetMergeTable(spark, str(tmp_path / "t"), key="id",
+                          partition_by=("grp",))
+    df = spark.range(200).select(
+        F.col("id"), (F.col("id") % 3).alias("grp"),
+        F.md5(F.col("id").cast("string")).alias("record_fingerprint"),
+    )
+    for commit in (
+        lambda: t.create(df),
+        lambda: t.merge_upsert(
+            df.filter("id < 10").withColumn("record_fingerprint", F.lit("x"))
+        ),
+        lambda: t.merge_delete(df.filter("id >= 20").select("id")),
+        lambda: t.delete_where_mor([("id", ">=", 150)]),
+        t.compact,
+        lambda: t.rollback(t.versions()[0]),
+    ):
+        commit()
+        assert_sound(t.path)
+
+    path = str(tmp_path / "py")
+    for n, mode in ((50, "append"), (80, "append"), (30, "overwrite")):
+        spark.range(n).write.format("oer_mergetable").option(
+            "path", path
+        ).mode(mode).save()
+        assert_sound(path)
+    w = pyds._MergeTableStreamWriter({"path": path})
+    batch = pa.record_batch({"id": pa.array([900, 901], type=pa.int64())})
+    w.commit([w.write(iter([batch]))], 0)
+    assert_sound(path)
+    assert sorted(r.id for r in ParquetMergeTable(spark, path, key="id")
+                  .read().collect()) == list(range(30)) + [900, 901]

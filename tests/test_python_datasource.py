@@ -5,6 +5,8 @@ manifest-fed file pruning, MOR tombstones, hive partitions — and
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -119,6 +121,14 @@ def test_changes_stream_matches_batch_feed(spark, tmp_path):
             F.md5(F.col("id").cast("string")).alias("record_fingerprint"),
         )
     )  # 3 inserts
+    t.merge_upsert(
+        spark.range(3000, 3002).select(
+            F.col("id"), (F.col("id") % 7).alias("grp"),
+            (F.col("id") * 3).cast("double").alias("val"),
+            F.md5(F.col("id").cast("string")).alias("record_fingerprint"),
+            F.lit("new").alias("extra"),
+        )
+    )  # 2 inserts that add a column (schema evolution)
     out = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
     q = (
@@ -140,10 +150,17 @@ def test_changes_stream_matches_batch_feed(spark, tmp_path):
     assert got.count() == want.count()
     by_type = {r["_change_type"]: r["n"] for r in
                got.groupBy("_change_type").agg(F.count("*").alias("n")).collect()}
-    assert by_type["insert"] == 1003  # create's 1000 + second upsert's 3
+    assert by_type["insert"] == 1005  # create's 1000 + the upserts' 3 + 2
     assert by_type["update_preimage"] == by_type["update_postimage"] == 5
     assert got.agg(F.min("_commit_version")).collect()[0][0] == 0
     assert got.agg(F.max("_commit_version")).collect()[0][0] == head
+    # the stream keeps the evolved column and null-fills older commits,
+    # row for row like the batch feed
+    cols = sorted(want.columns)
+    assert sorted(got.columns) == cols
+    assert Counter(map(tuple, got.select(*cols).collect())) == Counter(
+        map(tuple, want.select(*cols).collect())
+    )
 
 
 def test_changes_stream_restart_delivers_only_new_commits(spark, tmp_path):
@@ -402,3 +419,85 @@ def test_batch_overwrite_carries_stream_epoch_ledger_forward(spark, tmp_path):
     commit_epoch(w2, 2, 30)  # genuinely new epoch
     ids = {r.id for r in t.read().collect()}
     assert ids == {0, 1, 2, 3, 4, 30, 31}  # replay discarded, epoch 2 landed
+
+
+def test_changes_stream_raises_on_vacuumed_versions(spark, tmp_path):
+    """A stream over vacuumed versions fails like ``read_changes`` does,
+    instead of delivering the retained tail as if the gone versions were
+    commits without a change log; a retained commit without one
+    (compact) still reads as an empty batch."""
+    t = _table(spark, tmp_path, name="gap")
+    for lo in (3000, 4000, 5000):
+        t.merge_upsert(_df(spark, lo + 2).filter(F.col("id") >= lo))
+    assert t.vacuum(keep_last=0) == 3  # only v3 is left
+    with pytest.raises(ValueError, match="not retained"):
+        t.read_changes(-1)
+
+    def drain(since, name):
+        out = str(tmp_path / name)
+        q = (spark.readStream.format("oer_mergetable_changes")
+             .option("path", t.path).option("since_version", since).load()
+             .writeStream.format("parquet").option("path", out)
+             .option("checkpointLocation", out + "_ck")
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        return spark.read.parquet(out)
+
+    with pytest.raises(Exception, match="not retained"):
+        drain(-1, "all")
+    t.compact()  # v4 logs no changes
+    tail = drain(2, "tail")
+    assert sorted(r.id for r in tail.collect()) == [5000, 5001]
+
+
+def _commit_epoch(writer, epoch, lo):
+    import pyarrow as pa
+
+    batch = pa.record_batch({
+        "id": pa.array([lo, lo + 1], type=pa.int64()),
+        "val": pa.array(["a", "b"]),
+        "record_fingerprint": pa.array([f"f{lo}", f"f{lo + 1}"]),
+    })
+    writer.commit([writer.write(iter([batch]))], epoch)
+
+
+def _upsert_20(spark, t):
+    t.merge_upsert(spark.createDataFrame(
+        [(20, "z", "fz")], "id long, val string, record_fingerprint string"
+    ))
+
+
+# each commit kind, and the ids left once a replay of epoch 0 is discarded
+_LEDGER_COMMITS = {
+    "compact": (lambda spark, t: t.compact(), [10, 11, 20, 21]),
+    "merge_upsert": (_upsert_20, [10, 11, 20, 21]),
+    "merge_delete": (
+        lambda spark, t: t.merge_delete(
+            spark.createDataFrame([(10,), (11,), (20,)], "id long")
+        ),
+        [10, 11, 20],
+    ),
+    "rollback": (lambda spark, t: t.rollback(t.versions()[0]), [10, 11]),
+    "delete_where_mor": (
+        lambda spark, t: t.delete_where_mor([("id", "=", 21)]), [10, 11, 20]
+    ),
+}
+
+
+@pytest.mark.parametrize("commit", list(_LEDGER_COMMITS))
+def test_every_commit_carries_the_epoch_ledger(spark, tmp_path, commit):
+    """The exactly-once ledger survives any commit after the stream's
+    epochs: once vacuum has dropped every older version, a replayed epoch
+    is still recognised and discarded."""
+    from tlcn_oer_lakehouse_spark.sources.pyds import _MergeTableStreamWriter
+
+    path = str(tmp_path / "ledger")
+    w1 = _MergeTableStreamWriter({"path": path})
+    _commit_epoch(w1, 0, 10)
+    _commit_epoch(w1, 1, 20)
+    t = ParquetMergeTable(spark, path, key="id")
+    run, want = _LEDGER_COMMITS[commit]
+    run(spark, t)
+    t.vacuum(keep_last=0)
+    _commit_epoch(_MergeTableStreamWriter({"path": path}), 0, 10)  # replay
+    assert sorted(r.id for r in t.read().collect()) == want

@@ -97,46 +97,59 @@ def _file_bounds(path: str) -> tuple[int, dict[str, list]]:
     return md.num_rows, bounds
 
 
-def _data_files(snapshot_dir: str) -> list[str]:
+def data_files(snapshot_dir: str) -> list[str]:
+    """Sorted paths of the data files under ``snapshot_dir``.  ``_``- and
+    ``.``-prefixed entries at every level (``_tombstones/``, ``_changes/``,
+    ``_manifest.json``, checksum files) are sidecars, invisible to
+    Spark's file listing — the one visibility rule the manifest, the
+    readers and the commit share."""
     out = []
     for root, dirs, files in os.walk(snapshot_dir):
-        # _-prefixed dirs (_tombstones, _changes) are sidecar metadata,
-        # invisible to Spark's file listing — keep the manifest's notion
-        # of "data file" identical to the reader's
         dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in sorted(files):
+        for f in files:
             if f.endswith(".parquet") and not f.startswith(("_", ".")):
                 out.append(os.path.join(root, f))
     return sorted(out)
 
 
-def write_manifest(snapshot_dir: str) -> dict:
-    """Collect footer bounds for every data file under ``snapshot_dir``
-    and persist them as ``_manifest.json`` in that dir.  Returns the
-    manifest dict."""
-    entries = []
-    for path in _data_files(snapshot_dir):
-        rows, bounds = _file_bounds(path)
-        rel = os.path.relpath(path, snapshot_dir)
-        # hive-style partition dirs (col=val) become point bounds, so the
-        # same pruner does partition pruning and file skipping
-        for seg in rel.split(os.sep)[:-1]:
-            if "=" in seg:
-                col, raw = seg.split("=", 1)
-                for cast in (int, float, str):
-                    try:
-                        v = cast(raw)
-                        break
-                    except ValueError:
-                        continue
-                bounds.setdefault(col, [v, v])
-        entries.append({"path": rel, "rows": rows, "bounds": bounds})
+def file_entry(snapshot_dir: str, path: str) -> dict:
+    """The manifest entry of one data file: footer row count and bounds,
+    keyed by its path relative to ``snapshot_dir``."""
+    rows, bounds = _file_bounds(path)
+    rel = os.path.relpath(path, snapshot_dir)
+    # hive-style partition dirs (col=val) become point bounds, so the
+    # same pruner does partition pruning and file skipping
+    for seg in rel.split(os.sep)[:-1]:
+        if "=" in seg:
+            col, raw = seg.split("=", 1)
+            for cast in (int, float, str):
+                try:
+                    v = cast(raw)
+                    break
+                except ValueError:
+                    continue
+            bounds.setdefault(col, [v, v])
+    return {"path": rel, "rows": rows, "bounds": bounds}
+
+
+def save_manifest(snapshot_dir: str, entries: list[dict]) -> dict:
+    """Persist ``entries`` as ``_manifest.json`` in ``snapshot_dir``
+    (tmp file + rename).  Returns the manifest dict."""
     manifest = {"files": entries}
     tmp = os.path.join(snapshot_dir, MANIFEST_NAME + ".tmp")
     with open(tmp, "w") as fh:
         json.dump(manifest, fh)
     os.replace(tmp, os.path.join(snapshot_dir, MANIFEST_NAME))
     return manifest
+
+
+def write_manifest(snapshot_dir: str) -> dict:
+    """Manifest from scratch: read the footer of every data file under
+    ``snapshot_dir``.  The commit (``merge.py:publish_snapshot``) reads
+    footers only for new files and must publish exactly this."""
+    return save_manifest(
+        snapshot_dir, [file_entry(snapshot_dir, p) for p in data_files(snapshot_dir)]
+    )
 
 
 def read_manifest(snapshot_dir: str) -> dict | None:

@@ -18,19 +18,34 @@ Semantics, matching the reference write path:
 Scale notes: on a real deployment this class is swapped for Delta/Iceberg
 ``MERGE INTO`` (ACID, partition-level conflict detection); the
 transformation layer (operators/incremental.py) is shared and format
-agnostic.  The emulation writes every snapshot to an immutable
-``__v{n}`` directory and publishes it by atomically replacing a symlink
-at the table path (``os.replace`` of a fresh symlink — one atomic
-metadata op), so the table path ALWAYS resolves: readers racing a merge
-see either the old or the new snapshot, never a missing or half-written
-table.  Isolation contract, stated honestly: SINGLE WRITER (no
-writer-writer conflict detection — concurrent merges can lose one
-writer's snapshot; Iceberg's optimistic commit protocol is the real
-fix), snapshot-isolated readers (a reader holding a DataFrame over a
-version dir is unaffected by later swaps until ``vacuum`` removes that
-version).  Writes are partitioned (``partition_by``) so downstream
+agnostic.  Writes are partitioned (``partition_by``) so downstream
 scans prune; the changed-set filter keeps write amplification
 proportional to the changed rows, not the batch size.
+
+The snapshot format and its one commit.  Every snapshot is an immutable
+``__v{n}`` directory: data files (hive dirs allowed), ``_manifest.json``
+(footer bounds, sinks/manifest.py), and three sidecars — ``_changes/``
+(this commit's change log), ``_tombstones/`` (merge-on-read deleted
+keys) and ``_epoch_{id}`` markers (the stream writer's exactly-once
+ledger).  The table path is a symlink to the head version.  Only this
+module and sinks/manifest.py know that layout; every writer —
+``ParquetMergeTable``'s mutators and the Python DataSource batch and
+stream writers (sources/pyds.py) — stages only its own new files and
+publishes through :func:`publish_snapshot`, Iceberg's one commit
+protocol in miniature.  The commit inherits the head's data files when
+asked (append and merge-on-read writers; rewrites start empty), copies
+the head's ``_epoch_*`` ledger forward on EVERY commit — so the newest
+snapshot always holds the whole ledger and ``vacuum``, which keeps the
+newest versions, can never erase an epoch's marker — writes the
+manifest, and swaps the head symlink with one atomic ``os.replace``:
+readers racing a commit see the old or the new snapshot, never a
+missing or half-written table.
+
+Isolation contract, stated honestly: SINGLE WRITER (no writer-writer
+conflict detection — concurrent commits can lose one writer's snapshot;
+Iceberg's optimistic commit protocol is the real fix), snapshot-isolated
+readers (a reader holding a DataFrame over a version dir is unaffected
+by later swaps until ``vacuum`` removes that version).
 """
 
 from __future__ import annotations
@@ -50,40 +65,129 @@ from tlcn_oer_lakehouse_spark.operators.incremental import (
 )
 from tlcn_oer_lakehouse_spark.sinks.manifest import (
     Predicate,
+    data_files,
+    file_entry,
     prune_files,
-    write_manifest,
+    read_manifest,
+    save_manifest,
 )
+
+_EPOCH = "_epoch_"  # exactly-once ledger marker prefix
+_CHANGES = "_changes"  # per-commit change log (Delta CDF analog)
+_TOMBSTONES = "_tombstones"  # merge-on-read deleted keys
 
 
 def version_dir(path: str, n: int) -> str:
     return f"{path}__v{n:06d}"
 
 
+def _version_of(path: str, name: str) -> int | None:
+    """The version number ``name`` (a sibling dir name) encodes, if any."""
+    base = os.path.basename(path) + "__v"
+    tail = name[len(base):]
+    return int(tail) if name.startswith(base) and tail.isdigit() else None
+
+
 def all_version_nums(path: str) -> list[int]:
     parent = os.path.dirname(path) or "."
-    base = os.path.basename(path) + "__v"
     if not os.path.isdir(parent):
         return []
-    out = []
-    for name in os.listdir(parent):
-        if name.startswith(base) and name[len(base):].isdigit():
-            out.append(int(name[len(base):]))
-    return sorted(out)
+    nums = (_version_of(path, name) for name in os.listdir(parent))
+    return sorted(n for n in nums if n is not None)
 
 
-def publish_snapshot(path: str, staging: str) -> str:
-    """Rename ``staging`` to ``path``'s next immutable version dir and
-    swap the head symlink to it (one atomic ``os.replace``).  Module-level
-    so non-Spark writers — the Python DataSource writer in
-    :mod:`sources.pyds` — publish through the exact same commit protocol
-    as :class:`ParquetMergeTable`."""
+def head_version(path: str) -> int | None:
+    """Version number the head symlink points at (None: no table, or a
+    legacy plain-dir head)."""
+    if not os.path.islink(path):
+        return None
+    return _version_of(path, os.path.basename(os.readlink(path)))
+
+
+def require_retained(path: str, versions: list[int]) -> None:
+    """Raise if any of ``versions`` was vacuumed: a change feed over the
+    range would have silent gaps."""
+    retained = set(all_version_nums(path))
+    missing = [v for v in versions if v not in retained]
+    if missing:
+        raise ValueError(
+            f"versions {missing} not retained (vacuumed?) — change "
+            "feed would have silent gaps"
+        )
+
+
+def staging_dir(path: str) -> str:
+    """A fresh staging dir name for one commit to ``path``."""
+    return f"{path}__staging_{uuid.uuid4().hex[:8]}"
+
+
+def changes_dir(snapshot: str) -> str:
+    """The commit's change log (Delta CDF analog) inside a snapshot or
+    staging dir."""
+    return os.path.join(snapshot, _CHANGES)
+
+
+def tombstone_dir(snapshot: str) -> str:
+    """The merge-on-read deleted-key files inside a snapshot dir; the
+    ``_`` prefix keeps them out of Spark's file listing."""
+    return os.path.join(snapshot, _TOMBSTONES)
+
+
+def mark_epoch(staging: str, batch_id: int) -> None:
+    """Stamp a staged commit with stream epoch ``batch_id``'s marker."""
+    open(os.path.join(staging, f"{_EPOCH}{batch_id}"), "w").close()
+
+
+def epoch_committed(path: str, batch_id: int) -> bool:
+    """Whether any retained snapshot of ``path`` holds epoch
+    ``batch_id``'s marker."""
+    marker = f"{_EPOCH}{batch_id}"
+    return any(
+        os.path.isfile(os.path.join(version_dir(path, v), marker))
+        for v in all_version_nums(path)
+    )
+
+
+def publish_snapshot(path: str, staging: str, inherit: bool = False) -> str:
+    """THE commit: turn ``staging`` (holding only the writer's new files
+    and sidecars) into ``path``'s next immutable version dir.
+
+    1. ``inherit=True`` hardlinks the head's data files into staging at
+       the same relative paths (append and merge-on-read writers; a
+       rewrite starts from nothing).  Never ``_changes/`` (per commit)
+       or ``_tombstones/`` (the writer stages the full key set).
+    2. The head's ``_epoch_*`` ledger is copied forward on every commit.
+    3. The manifest is written; inherited files reuse the head's entry,
+       so footers are read only for new files.
+    4. Staging is renamed to the next version dir and the head symlink
+       swapped to it (one atomic ``os.replace``).  Returns the version
+       dir."""
+    head = os.path.realpath(path)
+    known: dict[str, dict] = {}
+    if os.path.isdir(head):
+        if inherit:
+            manifest = read_manifest(head)
+            entries = {e["path"]: e for e in manifest["files"]} if manifest else {}
+            for f in data_files(head):
+                rel = os.path.relpath(f, head)
+                dst = os.path.join(staging, rel)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.link(f, dst)
+                if rel in entries:
+                    known[rel] = entries[rel]
+        for name in os.listdir(head):
+            if name.startswith(_EPOCH):
+                open(os.path.join(staging, name), "w").close()
+    save_manifest(staging, [
+        known.get(os.path.relpath(f, staging)) or file_entry(staging, f)
+        for f in data_files(staging)
+    ])
     # one-time migration of a legacy plain-dir head to a version dir
     if os.path.isdir(path) and not os.path.islink(path):
         nums = all_version_nums(path)
         os.rename(path, version_dir(path, nums[-1] + 1 if nums else 0))
     nums = all_version_nums(path)
-    next_v = (nums[-1] + 1) if nums else 0
-    vdir = version_dir(path, next_v)
+    vdir = version_dir(path, nums[-1] + 1 if nums else 0)
     os.rename(staging, vdir)
     tmp_link = f"{path}__ln_{uuid.uuid4().hex[:8]}"
     os.symlink(os.path.basename(vdir), tmp_link)
@@ -91,9 +195,20 @@ def publish_snapshot(path: str, staging: str) -> str:
     return vdir
 
 
+def _filtered(df: DataFrame, predicates: list[Predicate]) -> DataFrame:
+    """Apply conjunctive ``(column, op, value)`` predicates as row filters."""
+    for col, op, val in predicates:
+        c = F.col(col)
+        df = df.filter(
+            {"=": c == val, ">=": c >= val, ">": c > val,
+             "<=": c <= val, "<": c < val}[op]
+        )
+    return df
+
+
 class ParquetMergeTable:
-    TOMBSTONE_DIR = "_tombstones"  # _-prefix: invisible to Spark's file listing
-    CHANGES_DIR = "_changes"  # per-commit change log (Delta CDF analog)
+    TOMBSTONE_DIR = _TOMBSTONES
+    CHANGES_DIR = _CHANGES
 
     def __init__(
         self,
@@ -132,9 +247,7 @@ class ParquetMergeTable:
     # -- state ------------------------------------------------------------
 
     def exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            not n.startswith(("_", ".")) for n in os.listdir(self.path)
-        )
+        return os.path.isdir(self.path) and bool(data_files(self.path))
 
     def read(self) -> DataFrame:
         # pin the scan to the RESOLVED version dir, not the symlink: a
@@ -144,14 +257,19 @@ class ParquetMergeTable:
         # readers snapshot-isolated (see module docstring).
         return self._read_snapshot_dir(os.path.realpath(self.path))
 
-    def _read_snapshot_dir(self, snap: str) -> DataFrame:
-        """Read one immutable snapshot dir: strip hidden partition
-        columns and apply merge-on-read tombstones (both pinned to this
-        snapshot — later head swaps don't affect the plan)."""
-        df = self.spark.read.parquet(snap)
+    def _read_snapshot_dir(
+        self, snap: str, files: list[str] | None = None
+    ) -> DataFrame:
+        """Read one immutable snapshot dir (or just its data ``files``):
+        strip hidden partition columns and apply merge-on-read tombstones
+        (both pinned to this snapshot — later head swaps don't affect the
+        plan)."""
+        # basePath keeps hive-style partition columns resolvable when
+        # reading an explicit file subset
+        df = self.spark.read.option("basePath", snap).parquet(*(files or [snap]))
         if self.partition_transforms:
             df = df.drop(*self.partition_transforms)
-        tomb = os.path.join(snap, self.TOMBSTONE_DIR)
+        tomb = tombstone_dir(snap)
         if os.path.isdir(tomb):
             df = df.join(
                 self.spark.read.parquet(tomb), self.key, "left_anti"
@@ -183,28 +301,10 @@ class ParquetMergeTable:
         analog of Iceberg manifest pruning."""
         snap = os.path.realpath(self.path)
         files = self.pruned_files(predicates)
-        if files is None:
-            df = self.read()
-        elif not files:
-            df = self.read().limit(0)
-        else:
-            # basePath keeps hive-style partition columns resolvable when
-            # reading an explicit file subset
-            df = self.spark.read.option("basePath", snap).parquet(*files)
-            if self.partition_transforms:
-                df = df.drop(*self.partition_transforms)
-            tomb = os.path.join(snap, self.TOMBSTONE_DIR)
-            if os.path.isdir(tomb):
-                df = df.join(
-                    self.spark.read.parquet(tomb), self.key, "left_anti"
-                )
-        for col, op, val in predicates:
-            c = F.col(col)
-            df = df.filter(
-                {"=": c == val, ">=": c >= val, ">": c > val,
-                 "<=": c <= val, "<": c < val}[op]
-            )
-        return df
+        df = self._read_snapshot_dir(snap, files)
+        if files == []:
+            df = df.limit(0)
+        return _filtered(df, predicates)
 
     # -- writes -----------------------------------------------------------
 
@@ -216,13 +316,7 @@ class ParquetMergeTable:
 
     def _head_version(self) -> int | None:
         """Version number the head symlink currently points at."""
-        if not os.path.islink(self.path):
-            return None
-        target = os.path.basename(os.readlink(self.path))
-        base = os.path.basename(self.path) + "__v"
-        if target.startswith(base) and target[len(base):].isdigit():
-            return int(target[len(base):])
-        return None
+        return head_version(self.path)
 
     def versions(self) -> list[int]:
         """Retained (non-head) snapshot version numbers, oldest first."""
@@ -230,19 +324,18 @@ class ParquetMergeTable:
         return [v for v in self._all_version_nums() if v != head]
 
     def _write_snapshot(self, df: DataFrame, changes: DataFrame | None = None) -> None:
-        """Write the snapshot to an immutable ``__v{n}`` dir, then publish
-        it with ONE atomic ``os.replace`` of the head symlink — the table
-        path always resolves, and the displaced snapshot stays retained
-        (the Iceberg snapshot-log analog enabling time travel/rollback).
-        Single-writer by contract (see module docstring).
+        """Copy-on-write commit: write ``df`` as the whole new snapshot
+        and publish it (``publish_snapshot``, nothing inherited).  The
+        displaced snapshot stays retained (the Iceberg snapshot-log
+        analog enabling time travel/rollback).
 
         ``changes`` (table columns + ``_change_type``) is the commit's
-        change log, written to ``_changes/`` INSIDE the staging dir so it
-        publishes atomically with the snapshot — change capture at write
-        time costs O(changed rows), which is why ``read_changes`` never
-        has to diff snapshots (the O(table) trap).  ``None`` records an
-        empty log (physical-only rewrites like ``compact``)."""
-        staging = f"{self.path}__staging_{uuid.uuid4().hex[:8]}"
+        change log, staged next to the data so it publishes atomically
+        with the snapshot — change capture at write time costs O(changed
+        rows), which is why ``read_changes`` never has to diff snapshots
+        (the O(table) trap).  ``None`` records an empty log
+        (physical-only rewrites like ``compact``)."""
+        staging = staging_dir(self.path)
         if self.partition_transforms:
             from tlcn_oer_lakehouse_spark.sinks.partitioning import (
                 transform_column,
@@ -274,14 +367,8 @@ class ParquetMergeTable:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(staging)
         if changes is not None:
-            changes.write.mode("overwrite").parquet(
-                os.path.join(staging, self.CHANGES_DIR)
-            )
-        write_manifest(staging)  # footer-stats manifest rides inside the snapshot
-        self._publish(staging)
-
-    def _publish(self, staging: str) -> str:
-        return publish_snapshot(self.path, staging)
+            changes.write.mode("overwrite").parquet(changes_dir(staging))
+        publish_snapshot(self.path, staging)
 
     # -- time travel -------------------------------------------------------
 
@@ -299,12 +386,10 @@ class ParquetMergeTable:
         no data scan), layout declarations, MOR tombstone debt, and
         retained-version count.  Metadata-only: one manifest JSON read
         plus directory stats."""
-        from tlcn_oer_lakehouse_spark.sinks.manifest import read_manifest
-
         snap = os.path.realpath(self.path)
         manifest = read_manifest(snap) if self.exists() else None
         files = manifest["files"] if manifest else []
-        tomb = os.path.join(snap, self.TOMBSTONE_DIR)
+        tomb = tombstone_dir(snap)
         n_tomb_files = (
             len([f for f in os.listdir(tomb) if f.endswith(".parquet")])
             if os.path.isdir(tomb) else 0
@@ -324,7 +409,7 @@ class ParquetMergeTable:
             "hidden_transforms": list(self.partition_transforms),
             "n_tombstone_files": n_tomb_files,
             "retained_versions": len(self.versions()),  # non-head history
-            "has_change_feed": os.path.isdir(os.path.join(snap, self.CHANGES_DIR)),
+            "has_change_feed": os.path.isdir(changes_dir(snap)),
         }
 
     def history(self) -> list[dict]:
@@ -363,17 +448,11 @@ class ParquetMergeTable:
         end = head if end_version is None else end_version
         if end is None or end <= since_version:
             raise ValueError(f"empty version range ({since_version}, {end}]")
-        retained = set(self._all_version_nums())
         want = list(range(since_version + 1, end + 1))
-        missing = [v for v in want if v not in retained]
-        if missing:
-            raise ValueError(
-                f"versions {missing} not retained (vacuumed?) — change "
-                "feed would have silent gaps"
-            )
+        require_retained(self.path, want)
         out: DataFrame | None = None
         for v in want:
-            cdir = os.path.join(self._version_dir(v), self.CHANGES_DIR)
+            cdir = changes_dir(self._version_dir(v))
             if not os.path.isdir(cdir):
                 continue  # physical-only commit (compact) or pre-CDF
             part = self.spark.read.parquet(cdir).withColumn(
@@ -552,18 +631,14 @@ class ParquetMergeTable:
         else:
             df = df.coalesce(target_files_per_partition)
         self._write_snapshot(df)
-        return sum(
-            1
-            for _, _, files in os.walk(self.path)
-            for f in files
-            if f.endswith(".parquet")
-        )
+        return len(data_files(self.path))
 
     def delete_where_mor(self, predicates: list[Predicate]) -> int:
         """Merge-on-read delete (Iceberg v2 delete-file analog): the new
-        snapshot HARDLINKS the current data files — no data rewrite, so
+        snapshot inherits the current data files (``publish_snapshot``
+        with ``inherit=True`` hardlinks them) — no data rewrite, so
         deleting 100 rows from a 100 TB table costs one key-file write —
-        and adds the matching keys to a ``_tombstones/`` parquet that
+        and stages the matching keys in a ``_tombstones/`` parquet that
         every reader anti-joins.  Copy-on-write paths (``merge_upsert``,
         ``compact``, ``rollback``) read through the tombstones and drop
         them in their rewritten snapshot, so tombstone debt never
@@ -572,19 +647,13 @@ class ParquetMergeTable:
         if not self.exists():
             return 0
         snap = os.path.realpath(self.path)
-        doomed = self._read_snapshot_dir(snap)
-        for col, op, val in predicates:
-            c = F.col(col)
-            doomed = doomed.filter(
-                {"=": c == val, ">=": c >= val, ">": c > val,
-                 "<=": c <= val, "<": c < val}[op]
-            )
+        doomed = _filtered(self._read_snapshot_dir(snap), predicates)
         new_keys = doomed.select(self.key).distinct().persist()
         n_new = new_keys.count()
         if n_new == 0:
             new_keys.unpersist()
             return 0
-        tomb_src = os.path.join(snap, self.TOMBSTONE_DIR)
+        tomb_src = tombstone_dir(snap)
         if os.path.isdir(tomb_src):
             all_keys = (
                 self.spark.read.parquet(tomb_src)
@@ -593,29 +662,15 @@ class ParquetMergeTable:
             )
         else:
             all_keys = new_keys
-        staging = f"{self.path}__staging_{uuid.uuid4().hex[:8]}"
-        for root, dirs, files in os.walk(snap):
-            # _changes is per-commit, never inherited: hardlinking the
-            # old log would replay the previous commit's changes as this
-            # version's
-            dirs[:] = [
-                d for d in dirs if d not in (self.TOMBSTONE_DIR, self.CHANGES_DIR)
-            ]
-            dst_root = os.path.join(staging, os.path.relpath(root, snap))
-            os.makedirs(dst_root, exist_ok=True)
-            for f in files:
-                os.link(os.path.join(root, f), os.path.join(dst_root, f))
-        # data files and _manifest.json are shared with the old snapshot
-        # (relative paths unchanged -> manifest bounds stay sound: a
-        # tombstone only removes rows, never widens a file's range)
-        all_keys.write.mode("overwrite").parquet(
-            os.path.join(staging, self.TOMBSTONE_DIR)
-        )
+        staging = staging_dir(self.path)
+        all_keys.write.mode("overwrite").parquet(tombstone_dir(staging))
         doomed.withColumn("_change_type", F.lit("delete")).write.mode(
             "overwrite"
-        ).parquet(os.path.join(staging, self.CHANGES_DIR))
+        ).parquet(changes_dir(staging))
         new_keys.unpersist()
-        self._publish(staging)
+        # inherited files keep their manifest entries: a tombstone only
+        # removes rows, never widens a file's range
+        publish_snapshot(self.path, staging, inherit=True)
         return n_new
 
     def merge_delete(self, current_keys: DataFrame) -> int:

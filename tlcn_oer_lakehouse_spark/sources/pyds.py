@@ -32,11 +32,17 @@ Batch reader (`MergeTableDataSource`):
 - hidden partition-transform columns are dropped via the ``hidden``
   option, mirroring ``ParquetMergeTable.read``.
 
+Writers (`MergeTableDataSource.writer` / ``streamWriter``): tasks write
+Arrow batches as parquet files plus their ``insert`` change logs; the
+driver-side ``commit`` checks the append and publishes through the
+table's one commit, ``sinks/merge.py:publish_snapshot``.
+
 Streaming reader (`MergeTableChangesDataSource`): offsets are COMMIT
-VERSIONS.  Each micro-batch reads the ``_changes/`` logs of the versions
-in ``(start, end]`` — O(changed rows), the same contract as
-``read_changes`` — with ``_commit_version`` recovered from the version
-dir.  A checkpointed restart resumes from the last committed version, so
+VERSIONS.  Each micro-batch reads the change logs of the versions in
+``(start, end]`` — O(changed rows), the same contract as
+``read_changes``, including its loud failure on vacuumed versions —
+with ``_commit_version`` taken from the planned version.  A
+checkpointed restart resumes from the last committed version, so
 consumers see every commit exactly once.
 
 Scale note: planning lists one directory and reads one JSON manifest;
@@ -68,23 +74,19 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StructField, StructType
 
-_HIDDEN_PREFIXES = ("_", ".")
-
-
-def _is_data_file(name: str) -> bool:
-    return name.endswith(".parquet") and not name.startswith(_HIDDEN_PREFIXES)
-
-
-def _walk_data_files(snapshot: str) -> list[str]:
-    """All data-file paths under ``snapshot``, skipping ``_``/``.``-prefixed
-    entries at every level (the same visibility rule Spark applies)."""
-    out: list[str] = []
-    for root, dirs, files in os.walk(snapshot):
-        dirs[:] = sorted(d for d in dirs if not d.startswith(_HIDDEN_PREFIXES))
-        for f in sorted(files):
-            if _is_data_file(f):
-                out.append(os.path.join(root, f))
-    return out
+from tlcn_oer_lakehouse_spark.sinks.manifest import data_files, prune_files
+from tlcn_oer_lakehouse_spark.sinks.merge import (
+    all_version_nums,
+    changes_dir,
+    epoch_committed,
+    head_version,
+    mark_epoch,
+    publish_snapshot,
+    require_retained,
+    staging_dir,
+    tombstone_dir,
+    version_dir,
+)
 
 
 def _hive_values(snapshot: str, file_path: str) -> dict[str, str]:
@@ -102,7 +104,7 @@ def _hive_values(snapshot: str, file_path: str) -> dict[str, str]:
 
 def _resolve_snapshot(path: str, version: str | None) -> str:
     if version is not None:
-        snap = f"{path}__v{int(version):06d}"
+        snap = version_dir(path, int(version))
         if not os.path.isdir(snap):
             raise ValueError(f"version {version} not retained for {path}")
         return snap
@@ -110,17 +112,6 @@ def _resolve_snapshot(path: str, version: str | None) -> str:
     if not os.path.isdir(snap):
         raise ValueError(f"no merge table at {path}")
     return snap
-
-
-def _head_version(path: str) -> int:
-    """Version number the head symlink points at (0 for legacy dirs)."""
-    if not os.path.islink(path):
-        return 0
-    target = os.path.basename(os.readlink(path))
-    base = os.path.basename(path) + "__v"
-    if target.startswith(base) and target[len(base):].isdigit():
-        return int(target[len(base):])
-    return 0
 
 
 @dataclass
@@ -140,8 +131,8 @@ class _MergeTableReader(DataSourceReader):
             c for c in options.get("hidden", "").split(",") if c
         ]
         # pyarrow dataset: footer schema + inferred hive partition columns
-        # ('_'-prefixed dirs like _changes/_tombstones are skipped by
-        # pyarrow's default ignore_prefixes, matching Spark's rule)
+        # ('_'-prefixed sidecar dirs are skipped by pyarrow's default
+        # ignore_prefixes, matching Spark's rule)
         dataset = pds.dataset(self._snapshot, format="parquet",
                               partitioning="hive")
         self._arrow_schema = dataset.schema
@@ -151,7 +142,7 @@ class _MergeTableReader(DataSourceReader):
     def _load_tombstones(self, options: dict):
         import pyarrow.parquet as pq
 
-        tomb_dir = os.path.join(self._snapshot, "_tombstones")
+        tomb_dir = tombstone_dir(self._snapshot)
         if not os.path.isdir(tomb_dir):
             return None, None
         key = options.get("key")
@@ -160,10 +151,8 @@ class _MergeTableReader(DataSourceReader):
                 "snapshot has merge-on-read tombstones; pass "
                 ".option('key', <merge key>) so the reader can anti-filter"
             )
-        files = [os.path.join(tomb_dir, f) for f in sorted(os.listdir(tomb_dir))
-                 if _is_data_file(f)]
         keys: set = set()
-        for f in files:
+        for f in data_files(tomb_dir):
             keys.update(pq.read_table(f, columns=[key]).column(key).to_pylist())
         return keys, key
 
@@ -187,13 +176,11 @@ class _MergeTableReader(DataSourceReader):
         return iter(filters)
 
     def partitions(self) -> Sequence[_FilePartition]:
-        from tlcn_oer_lakehouse_spark.sinks.manifest import prune_files
-
         files = None
         if self._predicates:
             files = prune_files(self._snapshot, self._predicates)
         if files is None:
-            files = _walk_data_files(self._snapshot)
+            files = data_files(self._snapshot)
         return [
             _FilePartition(path=f, hive=_hive_values(self._snapshot, f))
             for f in files
@@ -246,153 +233,111 @@ class _FileCommit(WriterCommitMessage):
     columns: tuple
 
 
-class _MergeTableWriter(DataSourceArrowWriter):
-    """Append/overwrite writer publishing through the table's own commit
-    protocol (``sinks/merge.py:publish_snapshot``) — staging dir, footer
-    manifest, version dir, atomic head-symlink swap.
+def _write_task(iterator, out_dir: str, log_inserts: bool) -> _FileCommit:
+    """Executor side of both writers: stream one task's Arrow batches into
+    one parquet file under ``out_dir`` and, with ``log_inserts``, the same
+    rows tagged ``_change_type='insert'`` into ``out_dir``'s change log,
+    so CDF consumers see appended rows with no driver-side data movement."""
+    import uuid
 
-    Each TASK streams its Arrow batches into one parquet file in staging,
-    and — on append — dual-writes the same batches into the commit's
-    ``_changes/`` log tagged ``_change_type='insert'``, so CDF consumers
-    (``read_changes``, the streaming source above) see appended rows with
-    no driver-side data movement.  Overwrite commits log no changes, the
-    same physical-only semantics as ``ParquetMergeTable.create``.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    commit() is driver-side METADATA work only: hardlink the previous
-    snapshot's data files into staging (append), verify schema agreement
-    from footers, write the manifest, publish.  This writer is the plain
-    CTAS/append surface (reference K3/K8 sinks); keyed MERGE stays on
-    ``ParquetMergeTable.merge_upsert``.  Appending to a hive-partitioned
-    or tombstone-carrying snapshot raises — those layouts need the
-    table-class writers."""
-
-    def __init__(self, options: dict, overwrite: bool) -> None:
-        import uuid
-
-        if "path" not in options:
-            raise ValueError("oer_mergetable write requires .option('path', ...)")
-        self._path = options["path"]
-        self._overwrite = overwrite
-        self._staging = f"{self._path}__staging_py_{uuid.uuid4().hex[:8]}"
-        os.makedirs(self._staging, exist_ok=True)
-        if not overwrite:
-            os.makedirs(os.path.join(self._staging, "_changes"), exist_ok=True)
-
-    # -- executors --------------------------------------------------------
-
-    def write(self, iterator) -> _FileCommit:
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        name = f"part-{uuid.uuid4().hex}.parquet"
-        writer = None
-        changes_writer = None
-        columns: tuple = ()
-        for batch in iterator:
-            if writer is None:
-                columns = tuple(batch.schema.names)
-                writer = pq.ParquetWriter(
-                    os.path.join(self._staging, name), batch.schema
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    writer = changes_writer = None
+    columns: tuple = ()
+    for batch in iterator:
+        if writer is None:
+            columns = tuple(batch.schema.names)
+            writer = pq.ParquetWriter(os.path.join(out_dir, name), batch.schema)
+            if log_inserts:
+                changes_writer = pq.ParquetWriter(
+                    os.path.join(changes_dir(out_dir), name),
+                    batch.schema.append(pa.field("_change_type", pa.string())),
                 )
-                if not self._overwrite:
-                    ch_schema = batch.schema.append(
-                        pa.field("_change_type", pa.string())
-                    )
-                    changes_writer = pq.ParquetWriter(
-                        os.path.join(self._staging, "_changes", name), ch_schema
-                    )
-            writer.write_batch(batch)
-            if changes_writer is not None:
-                tagged = pa.RecordBatch.from_arrays(
+        writer.write_batch(batch)
+        if changes_writer is not None:
+            changes_writer.write_batch(
+                pa.RecordBatch.from_arrays(
                     list(batch.columns)
                     + [pa.array(["insert"] * batch.num_rows, type=pa.string())],
                     schema=changes_writer.schema,
                 )
-                changes_writer.write_batch(tagged)
-        for w in (writer, changes_writer):
-            if w is not None:
-                w.close()
-        if writer is None:  # empty task partition
-            return _FileCommit(filename="", columns=())
-        return _FileCommit(filename=name, columns=columns)
+            )
+    for w in (writer, changes_writer):
+        if w is not None:
+            w.close()
+    if writer is None:  # empty task partition
+        return _FileCommit(filename="", columns=())
+    return _FileCommit(filename=name, columns=columns)
 
-    # -- driver -----------------------------------------------------------
+
+def _check_append(head: str, new_files: list[str]) -> None:
+    """Reject an append the python writers cannot express: onto a
+    snapshot with merge-on-read tombstones or a hive-partitioned layout,
+    or with a schema other than the table's."""
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(tombstone_dir(head)):
+        raise ValueError(
+            "append to a snapshot with MOR tombstones is not supported "
+            "by the python writers — compact first"
+        )
+    old_files = data_files(head)
+    if any(os.sep in os.path.relpath(f, head) for f in old_files):
+        raise ValueError(
+            "append to a hive-partitioned snapshot is not supported by "
+            "the python writers"
+        )
+    if old_files and new_files:
+        # compare (name, type) pairs from the parquet footers, not just
+        # name sets — a same-named column written at a different type
+        # (id as int32) would otherwise publish a snapshot with mixed
+        # per-file schemas that later reads fail on or silently coerce
+        old_sig = {f.name: f.type for f in pq.read_schema(old_files[0])}
+        new_sig = {f.name: f.type for f in pq.read_schema(new_files[0])}
+        if old_sig != new_sig:
+            raise ValueError(
+                f"append schema {sorted(new_sig.items(), key=str)} "
+                "does not match table schema "
+                f"{sorted(old_sig.items(), key=str)}"
+            )
+
+
+class _MergeTableWriter(DataSourceArrowWriter):
+    """Append/overwrite writer.  Each TASK writes one parquet file into
+    the commit's staging dir (``_write_task``); an append also logs the
+    rows as CDF inserts, an overwrite logs nothing (physical-only, like
+    ``ParquetMergeTable.compact``).  ``commit`` is driver-side metadata
+    work only: check the append, then ``publish_snapshot`` — inheriting
+    the head's files on append, not on overwrite.  This writer is the
+    plain CTAS/append surface (reference K3/K8 sinks); keyed MERGE stays
+    on ``ParquetMergeTable.merge_upsert``."""
+
+    def __init__(self, options: dict, overwrite: bool) -> None:
+        if "path" not in options:
+            raise ValueError("oer_mergetable write requires .option('path', ...)")
+        self._path = options["path"]
+        self._overwrite = overwrite
+        self._staging = staging_dir(self._path)
+        os.makedirs(self._staging, exist_ok=True)
+        if not overwrite:
+            os.makedirs(changes_dir(self._staging), exist_ok=True)
+
+    def write(self, iterator) -> _FileCommit:
+        return _write_task(iterator, self._staging, not self._overwrite)
 
     def commit(self, messages) -> None:
-        import shutil
-
-        from tlcn_oer_lakehouse_spark.sinks.manifest import write_manifest
-        from tlcn_oer_lakehouse_spark.sinks.merge import publish_snapshot
-
         written = [m for m in messages if m is not None and m.filename]
         col_sets = {m.columns for m in written}
         if len(col_sets) > 1:
             raise ValueError(f"tasks wrote divergent schemas: {col_sets}")
-        head_exists = os.path.isdir(os.path.realpath(self._path)) and os.path.exists(
-            self._path
-        )
-        if not self._overwrite and head_exists:
-            snap = os.path.realpath(self._path)
-            if os.path.isdir(os.path.join(snap, "_tombstones")):
-                raise ValueError(
-                    "append to a snapshot with MOR tombstones is not "
-                    "supported by the python writer — compact first"
-                )
-            old_files = _walk_data_files(snap)
-            for f in old_files:
-                rel = os.path.relpath(f, snap)
-                if os.sep in rel:
-                    raise ValueError(
-                        "append to a hive-partitioned snapshot is not "
-                        "supported by the python writer"
-                    )
-            if old_files and written:
-                import pyarrow.parquet as pq
-
-                # compare (name, type) pairs from the parquet footers, not
-                # just name sets — a same-named column written at a
-                # different type (id as int32) would otherwise publish a
-                # snapshot with mixed per-file schemas that later reads
-                # fail on or silently coerce
-                old_schema = pq.read_schema(old_files[0])
-                new_schema = pq.read_schema(
-                    os.path.join(self._staging, written[0].filename)
-                )
-                old_sig = {f.name: f.type for f in old_schema}
-                new_sig = {f.name: f.type for f in new_schema}
-                if old_sig != new_sig:
-                    raise ValueError(
-                        f"append schema {sorted(new_sig.items(), key=str)} "
-                        "does not match table schema "
-                        f"{sorted(old_sig.items(), key=str)}"
-                    )
-            for f in old_files:
-                os.link(f, os.path.join(self._staging, os.path.basename(f)))
-            # a batch append between stream epochs must not orphan the
-            # stream writer's exactly-once ledger (see
-            # _MergeTableStreamWriter.commit) — carry markers forward
-            for marker in os.listdir(snap):
-                if marker.startswith("_epoch_"):
-                    open(os.path.join(self._staging, marker), "w").close()
-        if self._overwrite:
-            # physical-only commit — same CDF semantics as create()
-            ch = os.path.join(self._staging, "_changes")
-            if os.path.isdir(ch):
-                shutil.rmtree(ch)
-            # the exactly-once ledger records epoch DELIVERY, which is
-            # independent of the data being replaced: an overwrite that
-            # dropped the head's _epoch_* markers would let a restarted
-            # stream re-commit an already-delivered epoch and
-            # double-append — so overwrite carries markers forward too
-            if head_exists:
-                snap = os.path.realpath(self._path)
-                for marker in os.listdir(snap):
-                    if marker.startswith("_epoch_"):
-                        open(os.path.join(self._staging, marker), "w").close()
-        write_manifest(self._staging)
-        publish_snapshot(self._path, self._staging)
+        head = os.path.realpath(self._path)
+        if not self._overwrite and os.path.isdir(head):
+            _check_append(
+                head, [os.path.join(self._staging, m.filename) for m in written]
+            )
+        publish_snapshot(self._path, self._staging, inherit=not self._overwrite)
 
     def abort(self, messages) -> None:
         import shutil
@@ -403,21 +348,16 @@ class _MergeTableWriter(DataSourceArrowWriter):
 class _MergeTableStreamWriter(DataSourceStreamArrowWriter):
     """Streaming append sink with EXACTLY-ONCE epoch commits.
 
-    Tasks stream their Arrow batches into a query-scoped pending dir
-    (they do not know the epoch id; only ``commit`` does).  ``commit``
-    assembles exactly the task-reported files into a staging snapshot —
-    hardlinking the previous head's data files, carrying the dual-written
-    ``_changes/`` insert logs — stamps it with an ``_epoch_{batchId}``
-    marker, and publishes through the shared ``publish_snapshot``
-    protocol.  A restarted query re-committing an epoch finds its marker
-    in a retained version dir and discards the replayed files instead of
-    double-appending: the marker IS the idempotence ledger, and it rides
-    inside the atomically-published snapshot so there is no window where
-    data landed but the marker did not.  Every commit (stream epoch or
-    batch append) copies the head's ``_epoch_*`` markers forward, so the
-    newest snapshot carries the complete ledger and ``vacuum()`` —
-    which retains the newest versions — never deletes the only copy of
-    an epoch's marker."""
+    Tasks write their files and CDF insert logs into a query-scoped
+    pending dir (they do not know the epoch id; only ``commit`` does).
+    ``commit`` moves exactly the task-reported files into a staging dir,
+    stamps it with the epoch's marker and publishes it with
+    ``publish_snapshot(inherit=True)``.  A restarted query re-committing
+    an epoch finds its marker in a retained snapshot and discards the
+    replayed files instead of double-appending: the marker IS the
+    idempotence ledger, it publishes atomically with the data, and the
+    commit carries it into every later snapshot, so ``vacuum()`` never
+    deletes its only copy."""
 
     def __init__(self, options: dict) -> None:
         if "path" not in options:
@@ -429,103 +369,37 @@ class _MergeTableStreamWriter(DataSourceStreamArrowWriter):
         # One pending dir per table is safe under the table's existing
         # single-writer contract; file names inside are uuid-unique.
         self._pending = f"{self._path}__pending_stream"
-        os.makedirs(os.path.join(self._pending, "_changes"), exist_ok=True)
+        os.makedirs(changes_dir(self._pending), exist_ok=True)
 
     def write(self, iterator) -> _FileCommit:
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        name = f"part-{uuid.uuid4().hex}.parquet"
-        writer = changes_writer = None
-        columns: tuple = ()
-        for batch in iterator:
-            if writer is None:
-                columns = tuple(batch.schema.names)
-                writer = pq.ParquetWriter(
-                    os.path.join(self._pending, name), batch.schema
-                )
-                changes_writer = pq.ParquetWriter(
-                    os.path.join(self._pending, "_changes", name),
-                    batch.schema.append(pa.field("_change_type", pa.string())),
-                )
-            writer.write_batch(batch)
-            changes_writer.write_batch(
-                pa.RecordBatch.from_arrays(
-                    list(batch.columns)
-                    + [pa.array(["insert"] * batch.num_rows, type=pa.string())],
-                    schema=changes_writer.schema,
-                )
-            )
-        for w in (writer, changes_writer):
-            if w is not None:
-                w.close()
-        if writer is None:
-            return _FileCommit(filename="", columns=())
-        return _FileCommit(filename=name, columns=columns)
-
-    def _epoch_already_committed(self, batch_id: int) -> bool:
-        parent = os.path.dirname(self._path) or "."
-        base = os.path.basename(self._path) + "__v"
-        for name in os.listdir(parent):
-            if name.startswith(base) and os.path.isfile(
-                os.path.join(parent, name, f"_epoch_{batch_id}")
-            ):
-                return True
-        return False
+        return _write_task(iterator, self._pending, True)
 
     def _drop_pending(self, messages) -> None:
         for m in messages:
             if m is not None and m.filename:
-                for p in (os.path.join(self._pending, m.filename),
-                          os.path.join(self._pending, "_changes", m.filename)):
+                for d in (self._pending, changes_dir(self._pending)):
+                    p = os.path.join(d, m.filename)
                     if os.path.exists(p):
                         os.remove(p)
 
     def commit(self, messages, batchId: int) -> None:
-        import shutil
-        import uuid
-
-        from tlcn_oer_lakehouse_spark.sinks.manifest import write_manifest
-        from tlcn_oer_lakehouse_spark.sinks.merge import publish_snapshot
-
-        if self._epoch_already_committed(batchId):
+        if epoch_committed(self._path, batchId):
             self._drop_pending(messages)  # replayed epoch: no double-append
             return
         written = [m for m in messages if m is not None and m.filename]
-        staging = f"{self._path}__staging_stream_{uuid.uuid4().hex[:8]}"
-        os.makedirs(os.path.join(staging, "_changes"), exist_ok=True)
         head = os.path.realpath(self._path)
-        if os.path.isdir(head) and os.path.exists(self._path):
-            if os.path.isdir(os.path.join(head, "_tombstones")):
-                raise ValueError(
-                    "stream append to a tombstone-carrying snapshot is not "
-                    "supported — compact first"
-                )
-            for f in _walk_data_files(head):
-                if os.sep in os.path.relpath(f, head):
-                    raise ValueError(
-                        "stream append to a hive-partitioned snapshot is "
-                        "not supported"
-                    )
-                os.link(f, os.path.join(staging, os.path.basename(f)))
-            # carry the epoch ledger forward: the newest snapshot always
-            # holds EVERY committed epoch marker, so vacuum() — which
-            # keeps the newest versions — cannot drop the idempotence
-            # record an old version dir held, and a post-vacuum epoch
-            # replay is still detected instead of double-appending
-            for name in os.listdir(head):
-                if name.startswith("_epoch_"):
-                    open(os.path.join(staging, name), "w").close()
+        if os.path.isdir(head):
+            _check_append(
+                head, [os.path.join(self._pending, m.filename) for m in written]
+            )
+        staging = staging_dir(self._path)
+        os.makedirs(changes_dir(staging))
         for m in written:
-            os.rename(os.path.join(self._pending, m.filename),
-                      os.path.join(staging, m.filename))
-            os.rename(os.path.join(self._pending, "_changes", m.filename),
-                      os.path.join(staging, "_changes", m.filename))
-        open(os.path.join(staging, f"_epoch_{batchId}"), "w").close()
-        write_manifest(staging)
-        publish_snapshot(self._path, staging)
+            for src, dst in ((self._pending, staging),
+                             (changes_dir(self._pending), changes_dir(staging))):
+                os.rename(os.path.join(src, m.filename), os.path.join(dst, m.filename))
+        mark_epoch(staging, batchId)
+        publish_snapshot(self._path, staging, inherit=True)
 
     def abort(self, messages, batchId: int) -> None:
         self._drop_pending(messages)
@@ -574,36 +448,23 @@ class _ChangesStreamReader(DataSourceStreamReader):
             raise ValueError("oer_mergetable_changes requires .option('path', ...)")
         self._path = options["path"]
         # since_version is an EXCLUSIVE start; the default -1 therefore
-        # includes commit version 0.  Tables created by the python
-        # batch/stream writers log CDF inserts at v0 (unlike
-        # ParquetMergeTable.create, which is physical-only), so a 0
-        # default would silently skip a py-written table's first commit.
+        # includes commit version 0, whose log holds the table's first
+        # inserts; a 0 default would silently skip them.
         self._since = int(options.get("since_version", -1))
         self._arrow_schema = self._infer_changes_schema()
 
-    def _all_versions(self) -> list[int]:
-        parent = os.path.dirname(self._path) or "."
-        base = os.path.basename(self._path) + "__v"
-        out = []
-        for name in os.listdir(parent):
-            if name.startswith(base) and name[len(base):].isdigit():
-                out.append(int(name[len(base):]))
-        return sorted(out)
-
-    def _changes_dir(self, v: int) -> str:
-        return os.path.join(f"{self._path}__v{v:06d}", "_changes")
-
     def _infer_changes_schema(self):
+        """The NEWEST retained change log's schema: schema evolution only
+        adds columns, so older logs are null-filled to it in ``read``,
+        as ``read_changes`` does."""
         import pyarrow.parquet as pq
 
-        for v in self._all_versions():
-            d = self._changes_dir(v)
-            if os.path.isdir(d):
-                for f in sorted(os.listdir(d)):
-                    if _is_data_file(f):
-                        return pq.read_schema(os.path.join(d, f))
+        for v in reversed(all_version_nums(self._path)):
+            logs = data_files(changes_dir(version_dir(self._path, v)))
+            if logs:
+                return pq.read_schema(logs[0])
         raise ValueError(
-            f"{self._path}: no _changes logs found — the table predates "
+            f"{self._path}: no change logs found — the table predates "
             "change capture or has never committed row changes"
         )
 
@@ -619,27 +480,28 @@ class _ChangesStreamReader(DataSourceStreamReader):
         return {"version": self._since}
 
     def latestOffset(self) -> dict:
-        return {"version": max(_head_version(self._path), self._since)}
+        return {"version": max(head_version(self._path) or 0, self._since)}
 
     def partitions(self, start: dict, end: dict) -> Sequence[_CommitPartition]:
+        versions = list(range(start["version"] + 1, end["version"] + 1))
+        require_retained(self._path, versions)
         return [
-            _CommitPartition(version=v, changes_dir=self._changes_dir(v))
-            for v in range(start["version"] + 1, end["version"] + 1)
+            _CommitPartition(
+                version=v, changes_dir=changes_dir(version_dir(self._path, v))
+            )
+            for v in versions
         ]
 
     def read(self, partition: _CommitPartition):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        if not os.path.isdir(partition.changes_dir):
-            return  # physical-only commit (compact): empty batch
-        for f in sorted(os.listdir(partition.changes_dir)):
-            if not _is_data_file(f):
-                continue
-            t = pq.read_table(os.path.join(partition.changes_dir, f))
+        # a retained commit without a log (compact) yields an empty batch
+        for f in data_files(partition.changes_dir):
+            t = pq.read_table(f)
             cols = []
-            # align to the planned schema: fill columns this commit lacks
-            # with nulls, drop ones it added later (schema evolution)
+            # align to the planned schema: null-fill columns an older
+            # commit lacks, drop ones added after the stream was planned
             for field in self._arrow_schema:
                 if field.name in t.column_names:
                     cols.append(t.column(field.name).cast(field.type))

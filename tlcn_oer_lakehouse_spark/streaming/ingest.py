@@ -612,37 +612,24 @@ def hll_merged_registers(spark: SparkSession, registers_dir: str) -> DataFrame:
 
 def changes_stream(table: ParquetMergeTable) -> DataFrame:
     """Streaming tail of a merge table's change data feed — the Delta
-    "table as a streaming source" analog.  Every commit writes its change
-    log to ``{table}__v{n}/_changes/`` (sinks/merge.py); a file-source
-    stream over that glob discovers each commit's log files exactly once,
-    so a consumer runs the same fold it would run on ``read_changes``
-    batches, continuously, with checkpointed progress.
+    "table as a streaming source" analog.  This is the
+    ``oer_mergetable_changes`` source (sources/pyds.py, registered here):
+    commit versions are the stream offsets, so a consumer runs the same
+    fold it would run on ``read_changes`` batches, continuously, with
+    checkpointed progress, and rows carry ``_commit_version`` like the
+    batch feed.
 
-    ``_commit_version`` is recovered from the file path (the version dir
-    name), keeping the streamed rows schema-identical to the batch feed.
+    Retention: a micro-batch whose versions were vacuumed raises, as
+    ``read_changes`` does, instead of silently skipping them — run
+    ``vacuum`` slower than the consumer's lag (the trade Delta documents
+    for VACUUM vs streaming reads)."""
+    from tlcn_oer_lakehouse_spark.sources import pyds
 
-    Retention caveat (same trade Delta documents for VACUUM vs streaming
-    reads): ``vacuum`` may delete a version dir whose log a lagging
-    stream has not processed yet — run retention slower than consumer
-    lag.  The batch path raises on vacuumed gaps; a file stream cannot
-    see files that no longer exist, so this is an operational contract.
-    """
-    from pyspark.sql.types import StringType, StructField
-
-    feed_schema = StructType(
-        list(table.read().schema.fields)
-        + [StructField("_change_type", StringType(), True)]
-    )
-    glob = f"{table.path}__v*/{table.CHANGES_DIR}"
+    pyds.register(table.spark)
     return (
-        table.spark.readStream.schema(feed_schema)
-        .parquet(glob)
-        .withColumn(
-            "_commit_version",
-            F.regexp_extract(
-                F.input_file_name(), r"__v(\d+)/" , 1
-            ).cast("long"),
-        )
+        table.spark.readStream.format("oer_mergetable_changes")
+        .option("path", table.path)
+        .load()
     )
 
 
