@@ -1,7 +1,8 @@
 """The serving index behind ``retrieval.fused_scores``: every reply equals
 an independent numpy BM25 + cosine fusion, across corpus rewrites,
 ``clearCache``, back-to-back rebuilds and concurrent requests; a warm
-request reads only the cached index and runs at most two Spark jobs."""
+request reads only a local relation of the scores and runs at most one
+Spark job; the index's BM25 agrees with the registry's Spark BM25."""
 
 from __future__ import annotations
 
@@ -13,7 +14,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from pyspark import InheritableThread, StorageLevel
+from pyspark import InheritableThread
 from pyspark.sql import functions as F
 
 from tlcn_oer_lakehouse_spark.plans import audit
@@ -93,10 +94,6 @@ def _check(spark, sf, terms) -> None:
     _assert_matches(_serve(spark, sf, terms), _reference(sf, terms))
 
 
-def _cached(sf) -> bool:
-    return retrieval._INDEXES[str(sf)].frame.storageLevel != StorageLevel.NONE
-
-
 @pytest.fixture(scope="module")
 def corpus(tmp_path_factory):
     sf = tmp_path_factory.mktemp("corpus_index")
@@ -130,44 +127,36 @@ def test_rewritten_corpus_is_served_fresh(spark, tmp_path):
     _check(spark, sf, ("spark", "lake"))
 
 
-def test_clear_cache_recaches_the_index(spark, tmp_path):
+def test_clear_cache_keeps_the_index(spark, tmp_path):
+    """The index holds no Spark object, so ``clearCache`` leaves it
+    whole: the next request is served from it, not rebuilt."""
     sf = str(tmp_path)
     _write_corpus(sf, seed=4)
     _check(spark, sf, ("merge",))
+    idx = retrieval.corpus_index(spark, sf)
     spark.catalog.clearCache()
-    assert not _cached(sf)
     _check(spark, sf, ("merge", "delta"))
-    assert _cached(sf)
+    assert retrieval.corpus_index(spark, sf) is idx
 
 
-def test_back_to_back_rebuilds_keep_their_cache(spark, tmp_path):
-    """The stale frame's plan equals the new one's, so unpersisting it
-    after the rebuild would drop the new cache entry as well."""
+def test_back_to_back_rewrites_rebuild_the_index(spark, tmp_path):
+    """Each rewrite of the corpus builds a new index, and the reply after
+    it is computed from the new corpus."""
     sf = str(tmp_path)
     _write_corpus(sf, seed=5)
     _check(spark, sf, ("graph",))
+    seen = [retrieval.corpus_index(spark, sf)]
     for seed in (6, 7):
         _write_documents(sf, seed)
-        idx = retrieval.corpus_index(spark, sf)
-        assert idx.frame.storageLevel != StorageLevel.NONE
         _check(spark, sf, ("graph", "column"))
-        assert retrieval.corpus_index(spark, sf) is idx
-
-
-def _without_cached_subtrees(plan: str) -> str:
-    """The plan lines a request executes: InMemoryRelation subtrees (the
-    cached index's own build plan) are dropped."""
-    out, cut = [], None
-    for line in plan.splitlines():
-        depth = re.match(r"[\s:+\-]*", line).end()
-        if cut is not None and depth > cut:
-            continue
-        cut = depth if "InMemoryRelation" in line else None
-        out.append(line)
-    return "\n".join(out)
+        idx = retrieval.corpus_index(spark, sf)
+        assert all(idx is not old for old in seen)
+        seen.append(idx)
 
 
 def test_warm_request_reads_only_the_index(spark, corpus):
+    """The scores reach Spark as a local relation: the request plan reads
+    no file and no cached frame and tokenizes nothing."""
     _serve(spark, corpus, ("batch",))
     sc = spark.sparkContext
     group = "corpus-index-warm-request"
@@ -179,12 +168,28 @@ def test_warm_request_reads_only_the_index(spark, corpus):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     plan = audit.simple_plan(top)
-    assert "InMemoryTableScan" in plan
-    request = _without_cached_subtrees(plan)
-    assert "InMemoryRelation" in request
-    for banned in ("documents.parquet", "FileScan", "split(", "regexp_replace("):
-        assert banned not in request, request
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert re.search(r"LocalTableScan \[doc_id#\d+L, fused_raw#\d+\]", plan), plan
+    for banned in ("FileScan", "InMemoryRelation", "split(", "regexp_replace("):
+        assert banned not in plan, plan
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+
+
+@pytest.mark.parametrize("terms", [retrieval.QUERY_TERMS,
+                                   ("hash", "join", "table", "dup"),
+                                   ("zzzqx",)],
+                         ids=["query-terms", "four-terms", "unknown-term"])
+def test_lexical_scores_match_spark_bm25(spark, sf_correct, terms):
+    """The serve path scores BM25 in numpy (``lexical_scores``) and the
+    registry in Spark (``bm25_scores``); the k1/b/idf conventions and
+    the operation order must not drift apart."""
+    idx = retrieval.corpus_index(spark, sf_correct)
+    got = dict(zip(idx.doc_id.tolist(), retrieval.lexical_scores(idx, terms).tolist()))
+    want = {r["doc_id"]: r["bm25_raw"]
+            for r in retrieval.bm25_scores(spark, sf_correct, terms).collect()
+            if r["doc_id"] in got}
+    assert want.keys() == got.keys()
+    assert max(abs(got[d] - want[d]) for d in got) <= 1e-12
+    assert sorted(got, key=lambda d: (-got[d], d)) == sorted(want, key=lambda d: (-want[d], d))
 
 
 def test_concurrent_requests_match_reference(spark, corpus):

@@ -31,8 +31,10 @@ keyed by plan, so rebuilding the query reuses the one cached entry,
 concurrent builds share it instead of unpersisting each other, and
 sweeping callers release everything with ``clearCache()``.  A frame
 whose plan varies per request (a query's terms, a request's top-k) is
-never persisted: the serve path reads the corpus index cached by
-``retrieval.fused_scores`` and computes the rest inline.
+never persisted: the serve path scores from the driver-local corpus
+index of ``retrieval.fused_scores`` (its postings must fit in driver
+memory, and each request ships one row per embedded document to Spark
+as a local relation) and computes the rest inline.
 """
 
 from __future__ import annotations

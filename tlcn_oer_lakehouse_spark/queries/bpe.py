@@ -436,8 +436,10 @@ def _wordpiece_oracle(n_merges: int = N_MERGES) -> str:
             f"JOIN sc{k} rc ON pc.r = rc.s "
             f"ORDER BY score DESC, pc.l ASC, pc.r ASC LIMIT 1)"
         )
+        # MATERIALIZED: every stage reads enc{k} three times, and DuckDB
+        # inlining it into each consumer grows the plan exponentially in k
         parts.append(
-            f"enc{k} AS (SELECT word, freq, {_SQL_REPLACE} AS enc "
+            f"enc{k} AS MATERIALIZED (SELECT word, freq, {_SQL_REPLACE} AS enc "
             f"FROM {prev}, best{k} b)"
         )
     selects = "\nUNION ALL\n".join(

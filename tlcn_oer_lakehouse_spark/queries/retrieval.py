@@ -12,39 +12,47 @@ Reference parity:
 Scale design (100 TB): the hybrid search serves from a :class:`CorpusIndex`
 built once per corpus version, the way the reference serves from an
 Elasticsearch index built ahead of time.  The version key is the (path,
-size, mtime_ns) of ``documents.parquet`` and ``embeddings.parquet``.  The
-index is a cached one-partition frame with one row per embedded document
-(doc_id, doc length, a term → tf map, the query-independent cosine
-score) plus O(vocabulary) driver-side scalars (N, sum of doc lengths,
-per-term df, max cosine score).  Building it tokenizes the corpus with
-no shuffle: each document's sorted tokens become its tf map in one
-row-local pass.  A request turns its 1-4 terms into a column expression
-over the cached frame and takes the lexical max in a window over that
-one partition: one Spark job, no corpus scan, no tokenizing.  Rebuild
-rule: when a file's key changes, the next request rebuilds the index;
-when ``clearCache`` evicts the frame, the next request re-caches it.  A
-corpus too large for one task would instead keep the frame partitioned
-and fold the lexical max back as a 1-row broadcast.  The one-shot
-registry BM25 queries keep the original shape: per-term tf as a
-JVM-side array expression over each row's tokens, and corpus stats as a
-1-row aggregate broadcast back.  For batched query workloads (many
-queries at once) the request shape generalizes: explode the query set,
-broadcast-join terms, aggregate scores by (query_id, doc_id).
+size, mtime_ns) of ``documents.parquet`` and ``embeddings.parquet``.
+Building it tokenizes the corpus in Spark with no shuffle (each
+document's sorted tokens become its term → tf map in one row-local
+pass) and collects the maps in one Arrow transfer.  The index is held in
+driver memory as numpy arrays: per embedded document its doc_id, doc
+length and query-independent cosine score, per term the postings (row,
+tf) over the embedded documents, plus O(vocabulary) scalars
+(N, sum of doc lengths, per-term df, max cosine score).  A request
+scores its 1-4 terms from their postings in numpy and hands Spark the
+fused scores as a local relation: one Spark job, no corpus scan, no
+tokenizing, no cached frame.  Rebuild rule: when a file's key changes,
+the next request rebuilds the index; ``clearCache`` does not touch it.
+Two limits bound this design: the postings must fit in driver memory,
+and each request ships N_embedded rows to Spark as a local relation.
+A corpus larger than that would instead keep the index as a cached,
+partitioned (doc_id, dl, tf, vec_raw) frame, score each request as a
+column expression over it and fold the lexical max back as a 1-row
+broadcast.  The one-shot registry BM25 queries keep the original shape:
+per-term tf as a JVM-side array expression over each row's tokens, and
+corpus stats as a 1-row aggregate broadcast back.  For batched query
+workloads (many queries at once) the request shape generalizes: explode
+the query set, broadcast-join terms, aggregate scores by (query_id,
+doc_id).
 """
 
 from __future__ import annotations
 
+import math
 import os
 import threading
 from dataclasses import dataclass
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, Window
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tlcn_oer_lakehouse_spark.functions.text import tokens
 from tlcn_oer_lakehouse_spark.functions.vectors import cosine
-from tlcn_oer_lakehouse_spark.queries.base import QuerySpec, load, parquet_num_rows
+from tlcn_oer_lakehouse_spark.queries.base import QuerySpec, load
 
 QUERY_TERMS = ("spark", "merge", "vector")
 K1 = 1.2
@@ -99,7 +107,8 @@ def bm25_score_frame(
     measured the double scan as ~2× the query).  The plan is fixed by
     the frame and ``terms``, so a rebuild reuses the cached entry, but
     every distinct term set caches one more frame: per-request callers
-    use :func:`fused_scores`, which reads the cached corpus index.
+    use :func:`fused_scores`, which scores from the driver-local corpus
+    index with the same conventions (:func:`lexical_scores`).
     """
     toks = tokens(F.col(text_col))
     scored = frame.select(
@@ -280,10 +289,10 @@ def hybrid_search(spark: SparkSession, sf: str) -> DataFrame:
     documents; vector branch = (cosine+1) of each embedding vs the
     vec_id=0 query vector (ES ``cosineSimilarity(...)+1`` convention,
     chatbot_api.py:233). Each branch max-normalized, then fused 0.5/0.5;
-    top-10.  Served from the cached corpus index (:func:`fused_scores`).
+    top-10.  Served from the driver-local corpus index (:func:`fused_scores`).
 
     documents.doc_id and embeddings.vec_id share the 0..N id space — the
-    equi-join runs once, in the index build.
+    join runs once, in the index build.
     """
     return (
         fused_scores(spark, sf)
@@ -293,25 +302,30 @@ def hybrid_search(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@dataclass
+@dataclass(frozen=True)
 class CorpusIndex:
-    """The serving index of one corpus version (see the module docstring).
+    """The serving index of one corpus version (see the module docstring),
+    held in driver memory as numpy arrays; no Spark object.
 
-    ``frame`` is cached and holds one row per embedded document:
-    ``doc_id``, doc length ``dl``, ``tf`` (term → occurrences) and
-    ``vec_raw`` = (cosine vs the vec_id 0 embedding) + 1.  The scalars
-    are over the whole corpus (``n_docs``, ``sum_dl``, ``df``) or over
-    the frame (``max_vec``)."""
+    One row per embedded document, at the same position in each array:
+    ``doc_id``, doc length ``dl`` and ``vec_raw`` = (cosine vs the vec_id
+    0 embedding) + 1.  ``postings`` maps a term to the (rows, tf) of the
+    embedded documents it occurs in.  The scalars are over the whole corpus
+    (``n_docs``, ``sum_dl``, ``df``) or over the embedded documents
+    (``max_vec``).  Bound: the postings must fit in driver memory."""
 
-    spark: SparkSession
     version: tuple
-    frame: DataFrame
+    doc_id: np.ndarray
+    dl: np.ndarray
+    vec_raw: np.ndarray
+    postings: dict[str, tuple[np.ndarray, np.ndarray]]
     n_docs: int
     sum_dl: int
     df: dict[str, int]
     max_vec: float
 
 
+_NO_POSTINGS = (np.zeros(0, np.int64), np.zeros(0))
 _INDEX_LOCK = threading.Lock()
 _INDEXES: dict[str, CorpusIndex] = {}  # one per corpus directory
 
@@ -355,30 +369,47 @@ def _term_counts(docs: DataFrame) -> DataFrame:
 
 
 def _build_index(spark: SparkSession, sf: str, version: tuple) -> CorpusIndex:
-    """Tokenize the corpus once into per-doc term counts (no shuffle),
-    cache the rows of the embedded documents and collect the scalars."""
-    per_doc = _term_counts(load(spark, sf, "documents"))
+    """Tokenize the corpus once into per-doc term counts in Spark (no
+    shuffle), collect them with each document's ``vec_raw`` (null when
+    it has no embedding) in one Arrow transfer, and invert them into
+    postings on the driver."""
     emb = load(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
     vec = emb.crossJoin(F.broadcast(q)).select(
         F.col("vec_id").alias("doc_id"),
         (cosine(F.col("embedding"), F.col("q_emb")) + F.lit(1.0)).alias("vec_raw"),
     )
-    # one partition: a request's max_lex window needs every row in one
-    # task, so the rows are moved there once here, not on every request
-    frame = per_doc.join(vec, "doc_id").repartition(1).persist()
-    max_vec = frame.agg(F.max("vec_raw")).first()[0]  # also fills the cache
-    # Corpus stats over every document, from the plain token arrays: a
-    # consumer of ``tf`` would let the optimizer push its inferred
-    # filters through the projections and re-sort inside the lambdas.
-    toks = load(spark, sf, "documents").select(tokens(F.col("text")).alias("toks"))
-    df = toks.select(F.explode(F.array_distinct("toks")).alias("term")).groupBy("term").count()
+    t = _term_counts(load(spark, sf, "documents")).join(vec, "doc_id", "left").toArrow()
+    tf = t.column("tf").combine_chunks()
+    embedded = pc.is_valid(t.column("vec_raw")).to_numpy()
+    # one entry per (document, distinct term): a term's entries count its df
+    terms = pc.dictionary_encode(tf.keys)
+    vocab = terms.dictionary.to_pylist()
+    codes = terms.indices.to_numpy()
+    doc_row = np.repeat(np.arange(len(t)), np.diff(tf.offsets.to_numpy()))
+    # the embedded documents' entries, renumbered to their index row and
+    # grouped by term
+    keep = embedded[doc_row]
+    row = (np.cumsum(embedded) - 1)[doc_row[keep]]
+    counts = tf.items.to_numpy()[keep].astype(np.float64)
+    kept = codes[keep]
+    order = np.argsort(kept, kind="stable")
+    bounds = np.searchsorted(kept[order], np.arange(len(vocab) + 1))
+    dl = t.column("dl").to_numpy()
+    vec_raw = t.column("vec_raw").to_numpy()[embedded]
     return CorpusIndex(
-        spark, version, frame,
-        n_docs=parquet_num_rows(sf, "documents", required=True),
-        sum_dl=toks.agg(F.sum(F.size("toks"))).first()[0],
-        df={r["term"]: r["count"] for r in df.collect()},
-        max_vec=max_vec,
+        version,
+        doc_id=t.column("doc_id").to_numpy()[embedded],
+        dl=dl[embedded].astype(np.float64),
+        vec_raw=vec_raw,
+        postings={
+            term: (row[order[a:b]], counts[order[a:b]])
+            for term, a, b in zip(vocab, bounds[:-1], bounds[1:]) if b > a
+        },
+        n_docs=len(t),
+        sum_dl=int(dl.sum()),
+        df=dict(zip(vocab, np.bincount(codes, minlength=len(vocab)).tolist())),
+        max_vec=float(vec_raw.max(initial=0.0)),
     )
 
 
@@ -387,17 +418,25 @@ def corpus_index(spark: SparkSession, sf: str) -> CorpusIndex:
     version = _corpus_version(sf)
     with _INDEX_LOCK:
         idx = _INDEXES.get(sf)
-        if idx is None or idx.spark is not spark or idx.version != version:
-            if idx is not None and idx.spark is spark:
-                # Unpersist BEFORE building the new frame: the two plans
-                # are equal, so unpersisting the old one afterwards would
-                # drop the new cache entry too, and a still-cached old
-                # entry would be served for the new frame.
-                idx.frame.unpersist()
+        if idx is None or idx.version != version:
             idx = _INDEXES[sf] = _build_index(spark, sf, version)
-        elif idx.frame.storageLevel == StorageLevel.NONE:
-            idx.frame.persist()  # clearCache() evicted it; the scalars still hold
         return idx
+
+
+def lexical_scores(idx: CorpusIndex, terms: tuple[str, ...]) -> np.ndarray:
+    """BM25 of ``terms`` for each embedded document of ``idx``, with the
+    k1/b/idf conventions and the operation order of
+    :func:`bm25_score_frame`.  A document without the term adds
+    idf · 0.0 there, so only its postings are touched here."""
+    avgdl = idx.sum_dl / idx.n_docs
+    score = np.zeros(len(idx.doc_id))
+    for term in terms:
+        rows, tf = idx.postings.get(term, _NO_POSTINGS)
+        df = float(idx.df.get(term, 0))
+        idf = math.log(1.0 + (idx.n_docs - df + 0.5) / (df + 0.5))
+        norm = tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * idx.dl[rows] / avgdl))
+        score[rows] = score[rows] + idf * norm
+    return score
 
 
 def fused_scores(
@@ -411,32 +450,23 @@ def fused_scores(
     single presentation round.  ``terms`` parameterizes the lexical
     branch (the serve path feeds it from Q4 query preprocessing).
 
-    Reads the :class:`CorpusIndex` of ``sf``: built on the first call,
+    Reads the :class:`CorpusIndex` of ``sf``: built on the first call and
     rebuilt when the (path, size, mtime_ns) of ``documents.parquet`` or
-    ``embeddings.parquet`` changes, re-cached after ``clearCache``, so a
-    stale index is never served.  BM25 (same k1/b/idf and association
-    order as :func:`bm25_score_frame`) is a column expression over the
-    cached ``tf`` map with the corpus scalars as literals; max_lex is a
-    window max over the index's single partition, so a top-k over the
-    result is one Spark job.  A query matching no term of the embedded
-    documents has max_lex = 0: its lexical branch contributes 0 and the
-    ranking is vector-only, as Elasticsearch returns only the kNN hits
-    when BM25 matches nothing."""
+    ``embeddings.parquet`` changes, so a stale index is never served.
+    The scores are computed on the driver in numpy
+    (:func:`lexical_scores`) and handed to Spark as a local relation of
+    one row per embedded document, so a top-k over the result is one
+    Spark job with no scan.  Bounds: the postings must fit in driver
+    memory, and each request ships N_embedded rows.  A query matching no
+    term of the embedded documents has max_lex = 0: its lexical branch
+    contributes 0 and the ranking is vector-only, as Elasticsearch
+    returns only the kNN hits when BM25 matches nothing."""
     idx = corpus_index(spark, sf)
-    avgdl = idx.sum_dl / idx.n_docs
-    score = F.lit(0.0)
-    for term in terms:
-        tf = F.coalesce(F.col("tf")[term], F.lit(0)).cast("double")
-        df = float(idx.df.get(term, 0))
-        idf = F.log(F.lit(1.0) + (F.lit(idx.n_docs) - df + 0.5) / (df + 0.5))
-        norm = tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * F.col("dl") / avgdl))
-        score = score + idf * norm
-    max_lex = F.max("bm25_raw").over(Window.partitionBy())
-    lex = F.when(max_lex > 0, F.col("bm25_raw") / max_lex).otherwise(F.lit(0.0))
-    return idx.frame.select("doc_id", "vec_raw", score.alias("bm25_raw")).select(
-        "doc_id",
-        (F.lit(0.5) * lex + F.lit(0.5) * (F.col("vec_raw") / idx.max_vec)).alias("fused_raw"),
-    )
+    bm25 = lexical_scores(idx, terms)
+    max_lex = bm25.max(initial=0.0)
+    lex = bm25 / max_lex if max_lex > 0 else np.zeros(len(bm25))
+    fused = 0.5 * lex + 0.5 * (idx.vec_raw / idx.max_vec)
+    return spark.createDataFrame(pa.table({"doc_id": idx.doc_id, "fused_raw": fused}))
 
 
 _COS_DOT = (

@@ -23,10 +23,12 @@ Scale design (100 TB):
   selected chapters against the tier-3 partition — an equi-join on
   ``parent_chunk_id``, never a scan-side sort.
 - The e2e plan inherits each stage's shape: the fused scores come from
-  the cached corpus index (``retrieval.fused_scores``, built once per
-  corpus version), whose BM25 stats and vector max are driver-side
-  scalars; the gate and pack are 1-row or O(k)-row stages.  Zero
-  Python UDFs.
+  the driver-local corpus index (``retrieval.fused_scores``, built once
+  per corpus version) as a local relation of one row per embedded
+  document; the gate and pack are 1-row or O(k)-row stages.  Zero
+  Python UDFs.  The index's postings must fit in driver memory and each
+  request ships N_embedded rows; a larger corpus would serve from a
+  partitioned frame instead (``retrieval`` module docstring).
 """
 
 from __future__ import annotations
