@@ -65,6 +65,73 @@ def test_merge_delete_logs_full_rows(spark, tmp_path):
     assert _feed(t, v0) == [(v1, "delete", 2, "b")]
 
 
+def _seeded(spark, tmp_path, name):
+    t = ParquetMergeTable(spark, str(tmp_path / name), key="id")
+    t.create(_fp(spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c"), (4, "d")], ["id", "val"]
+    )))
+    return t, t._head_version()
+
+
+def _canon(df):
+    """Order-insensitive multiset of rows, ``_commit_version`` dropped."""
+    cols = sorted(c for c in df.columns if c != "_commit_version")
+    return sorted(tuple(str(v) for v in r) for r in df.select(*cols).collect())
+
+
+@pytest.mark.parametrize("evolve", [False, True], ids=["same_schema", "new_column"])
+def test_merge_equals_upsert_then_delete_in_one_version(spark, tmp_path, evolve):
+    """One MERGE with both clauses lands on the same rows and the same
+    change multiset as the upsert followed by the delete — in one
+    version, not two."""
+
+    def source():
+        df = _fp(spark.createDataFrame([(1, "a"), (2, "B"), (5, "e")], ["id", "val"]))
+        return df.withColumn("extra", F.upper("val")) if evolve else df
+
+    keys = spark.createDataFrame([(1,), (2,), (5,)], ["id"])  # 3, 4 stale
+    two, v2 = _seeded(spark, tmp_path, "two")
+    assert two.merge_upsert(source()) == 2
+    assert two.merge_delete(keys) == 2
+    one, v1 = _seeded(spark, tmp_path, "one")
+    assert one.merge(source(), current_keys=keys) == (2, 2)
+
+    assert two._head_version() == v2 + 2
+    assert one._head_version() == v1 + 1
+    assert _canon(one.read()) == _canon(two.read())
+    assert _canon(one.read_changes(v1)) == _canon(two.read_changes(v2))
+
+
+def test_merge_never_deletes_a_key_the_source_matches(spark, tmp_path):
+    """WHEN NOT MATCHED BY SOURCE: source keys absent from ``current_keys``
+    survive, changed (2, 5) or not (1); only their changes are logged."""
+    t, v0 = _seeded(spark, tmp_path, "t")
+    src = _fp(spark.createDataFrame([(1, "a"), (2, "B"), (5, "e")], ["id", "val"]))
+    assert t.merge(src, current_keys=spark.createDataFrame([(3,)], ["id"])) == (2, 1)
+    v1 = t._head_version()
+    assert v1 == v0 + 1
+    assert sorted((r.id, r.val) for r in t.read().collect()) == [
+        (1, "a"), (2, "B"), (3, "c"), (5, "e"),
+    ]
+    assert _feed(t, v0) == [
+        (v1, "delete", 4, "d"),
+        (v1, "insert", 5, "e"),
+        (v1, "update_postimage", 2, "B"),
+        (v1, "update_preimage", 2, "b"),
+    ]
+
+
+def test_merge_noop_writes_nothing(spark, tmp_path):
+    t, v0 = _seeded(spark, tmp_path, "t")
+    same = _fp(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "val"]))
+    all_keys = spark.createDataFrame([(k,) for k in (1, 2, 3, 4)], ["id"])
+    assert t.merge(same, current_keys=all_keys) == (0, 0)
+    assert t.merge(same) == (0, 0)
+    assert t.merge(current_keys=all_keys) == (0, 0)
+    assert t.merge() == (0, 0)
+    assert t._head_version() == v0
+
+
 def test_mor_delete_logs_and_does_not_inherit_old_log(spark, tmp_path):
     t = _table(spark, tmp_path)
     t.create(_fp(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "val"])))
@@ -302,6 +369,8 @@ def test_gold_fact_maintained_from_silver_cdf_scans_only_delta(spark, tmp_path):
         "documents_upserted": 2,  # D's two assets
         "documents_deleted": 1,   # A's stale a_1
     }
+    # the upsert and the stale-asset delete are ONE documents commit
+    assert wh.documents._head_version() == v_doc + 1
 
     def sign():
         return F.when(

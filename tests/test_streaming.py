@@ -383,9 +383,17 @@ def test_scd2_streaming_dimension(spark, tmp_path):
         )
         q.awaitTermination(120)
 
+    def canon(rows):
+        return sorted(
+            (r.cust_id, r.segment, str(r.valid_from), str(r.valid_to),
+             r.is_current)
+            for r in rows
+        )
+
     _land([(1, "basic", t1), (2, "pro", t1)], "b1")
     _run()
     assert table.read().filter("is_current").count() == 2
+    v1, before = table._head_version(), canon(table.read().collect())
 
     # batch 2: customer 1 upgrades -> old version closes at t2
     _land([(1, "pro", t2)], "b2")
@@ -396,11 +404,27 @@ def test_scd2_streaming_dimension(spark, tmp_path):
     assert str(rows[(1, "basic")].valid_to) == str(t2)
     assert rows[(1, "pro")].is_current and rows[(2, "pro")].is_current
 
+    # the commit's change feed folds the batch-1 dimension onto batch 2's
+    feed = table.read_changes(v1).collect()
+    assert sorted(r._change_type for r in feed) == [
+        "insert", "update_postimage", "update_preimage",
+    ]
+    folded = list(before)
+    for r in feed:
+        if r._change_type in ("delete", "update_preimage"):
+            folded.remove(canon([r])[0])
+    folded = sorted(folded + canon(
+        r for r in feed if r._change_type in ("insert", "update_postimage")
+    ))
+    assert folded == canon(table.read().collect())
+
     # same batch content re-landed as a new file: fingerprints match ->
-    # chain unchanged (no double-open)
+    # chain unchanged (no double-open), and the replay logs no change
+    v2 = table._head_version()
     _land([(1, "pro", t2)], "b3")
     _run()
     assert table.read().count() == 3
+    assert table.read_changes(v2).count() == 0
 
 
 def test_scd2_ingest_stream_equals_batch(spark, tmp_path):

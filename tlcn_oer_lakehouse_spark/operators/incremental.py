@@ -10,9 +10,10 @@ The reference's pattern (transformer.py:1519-1558, 2427-2484):
   5. anti-join to detect deletions, MERGE DELETE             (J4/K2)
 
 Steps 1-3 and 5 are engine-native below. Step 4 becomes
-``merge_upsert``: existing-not-matched ∪ changed, written back with
-dynamic partition overwrite — the classic pre-ACID emulation; on a
-Delta/Iceberg deployment the same changed-set feeds ``MERGE INTO``.
+``merge_upsert``: existing-not-matched ∪ changed, the frame a
+copy-on-write commit writes back as the table's whole next snapshot
+(``sinks/merge.py:publish_snapshot``); on a Delta/Iceberg deployment the
+same changed-set feeds ``MERGE INTO``.
 """
 
 from __future__ import annotations
@@ -75,9 +76,9 @@ def merge_upsert(
     key: str,
     broadcast_changed: bool = False,
 ) -> DataFrame:
-    """K1 without a table format: (existing ∖ changed-keys) ∪ changed.
-    Feed the result to a dynamic-partition-overwrite write; on
-    Delta/Iceberg replace with ``MERGE INTO`` SQL.
+    """K1 without a table format: (existing ∖ changed-keys) ∪ changed,
+    the whole next snapshot of a copy-on-write commit; on Delta/Iceberg
+    replace with ``MERGE INTO`` SQL.
 
     ``broadcast_changed`` pins a broadcast hint on the anti-join's build
     side.  The planner's size ESTIMATE for a change-detected delta is

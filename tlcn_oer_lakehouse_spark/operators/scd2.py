@@ -15,7 +15,8 @@ Row contract: ``(key, attrs..., valid_from, valid_to, is_current)`` where
   row opens at ``ts`` (change detected via an md5 fingerprint of the
   tracked columns, null-safe through ``concat_ws`` sentinels);
 - unchanged / absent key → untouched (absent ≠ deleted; deletions are a
-  separate ``merge_delete`` policy decision).
+  separate policy decision, ``ParquetMergeTable.merge``'s
+  ``current_keys``).
 
 Idempotent: re-merging the same batch at any ``ts`` detects zero changes
 and returns the dimension unchanged.
@@ -97,6 +98,32 @@ def scd2_merge(
         .unionByName(untouched_current.select(*attr_cols, *META_COLS))
         .unionByName(closed)
         .unionByName(opened)
+    )
+
+
+def scd2_changes(dim: DataFrame, merged: DataFrame, ts) -> DataFrame:
+    """The change log of one :func:`scd2_merge` at ``ts`` (table columns
+    + ``_change_type``), read off ``merged`` by its ``ts`` stamps: rows
+    opened at ``ts`` are inserts, rows closed at ``ts`` are update
+    postimages and their open form the preimages.  Rows ``dim`` already
+    holds with the same stamp (an earlier batch at the same ``ts``, or a
+    replay) are subtracted as a multiset, so a no-op merge logs nothing."""
+    ts_lit = F.lit(ts).cast("timestamp")
+    dim = dim.select(*merged.columns)
+
+    def stamped(cond: F.Column) -> DataFrame:
+        return merged.filter(cond).exceptAll(dim.filter(cond))
+
+    opened = stamped(F.col("is_current") & (F.col("valid_from") == ts_lit))
+    closed = stamped(F.col("valid_to") == ts_lit)
+    return (
+        opened.withColumn("_change_type", F.lit("insert"))
+        .unionByName(closed.withColumn("_change_type", F.lit("update_postimage")))
+        .unionByName(
+            closed.withColumn("valid_to", F.lit(None).cast("timestamp"))
+            .withColumn("is_current", F.lit(True))
+            .withColumn("_change_type", F.lit("update_preimage"))
+        )
     )
 
 

@@ -13,7 +13,8 @@ Reference parity:
   data-quality score (:340-368) — all pure column expressions, no RDDs.
 - ``run_silver``        ≙ §3.1 steps 3-8: normalize → W1 latest-wins →
   J1/P3 change detection → K1 MERGE resources → O6 explode assets →
-  K1 MERGE documents → J4/K2 deleted-asset cleanup.
+  one documents MERGE whose K1 upsert and J4/K2 deleted-asset cleanup
+  share one commit — at most one commit per Silver table per batch.
 - ``run_gold``          ≙ §3.2: source dim + coverage fact, full
   refresh, aggregate-before-join.
 
@@ -175,21 +176,19 @@ def run_silver(spark: SparkSession, bronze: DataFrame, warehouse_root: str) -> d
 
     n_resources = wh.resources.merge_upsert(normalized)
 
+    # deleted-asset propagation (J4/K2) is the documents MERGE's WHEN NOT
+    # MATCHED BY SOURCE DELETE clause, so upsert and delete are one
+    # commit: for resources present in this batch, any stored asset not
+    # in the current asset set is stale.  Keep = assets of untouched
+    # resources; MERGE never deletes this batch's own assets.
     docs = explode_documents(normalized)
-    n_docs = wh.documents.merge_upsert(docs)
-
-    # deleted-asset propagation (J4/K2): for resources present in this
-    # batch, any stored asset not in the current asset set is stale.
-    # Keep = assets of untouched resources ∪ this batch's assets.
-    n_deleted = 0
-    if wh.documents.exists():
-        keep = (
-            wh.documents.read()
-            .join(normalized.select("resource_uid"), "resource_uid", "left_anti")
-            .select("asset_uid")
-            .unionByName(docs.select("asset_uid"))
-        )
-        n_deleted = wh.documents.merge_delete(keep)
+    keep = (
+        wh.documents.read()
+        .join(normalized.select("resource_uid"), "resource_uid", "left_anti")
+        .select("asset_uid")
+        if wh.documents.exists() else None
+    )
+    n_docs, n_deleted = wh.documents.merge(docs, current_keys=keep)
 
     normalized.unpersist()
     return {"resources_upserted": n_resources, "documents_upserted": n_docs,

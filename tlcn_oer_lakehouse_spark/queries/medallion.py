@@ -441,7 +441,7 @@ def medallion_incremental(spark: SparkSession, sf: str) -> DataFrame:
     )
     old_fact = old_res.join(old_docs, "source_system", "full_outer")
 
-    # --- one commit's change feed (what merge_upsert/merge_delete log)
+    # --- one commit's change feed (what ParquetMergeTable.merge logs)
     # delta-sized and consumed twice (preimage semi-join keys + the
     # resource CDF) — persisted like medallion_e2e's change frames
     changed = changed_rows(normalized, existing, "resource_uid").persist()

@@ -4,12 +4,16 @@ K2 delete :2460-2484, K6 schema evolution :2421-2425) on a classpath
 without lakehouse-format jars.
 
 Semantics, matching the reference write path:
-- ``merge_upsert``: latest-wins dedup of the source batch (W1) →
-  change-detection against the current table (J1/P3, skips no-op rows)
-  → survivors ∪ changed written back.  Idempotent by construction:
-  re-merging the same batch detects zero changes and leaves the table
-  untouched (no write at all).
-- ``merge_delete``: anti-join survivors written back.
+- ``merge(source, current_keys)``: one ``MERGE INTO`` and one commit.
+  Latest-wins dedup of the source batch (W1) → change-detection against
+  the current table (J1/P3, skips no-op rows) → the stale set: head keys
+  in neither ``current_keys`` nor the source (J4, ``WHEN NOT MATCHED BY
+  SOURCE DELETE``) → head ∖ (changed ∪ stale) ∪ changed written back
+  with one change log.  Idempotent by construction: re-merging the same
+  batch detects zero changes and leaves the table untouched (no write
+  at all).
+- ``merge_upsert(source)`` and ``merge_delete(current_keys)``: ``merge``
+  with only its upsert (K1) or only its delete (K2) clause.
 - Schema evolution: source columns absent from the table are added
   (as nulls on old rows); table columns absent from the source are
   null-filled on new rows — the DataFrame analog of
@@ -61,7 +65,6 @@ from tlcn_oer_lakehouse_spark.operators.incremental import (
     changed_rows,
     deleted_keys,
     latest_wins,
-    merge_upsert,
 )
 from tlcn_oer_lakehouse_spark.sinks.manifest import (
     Predicate,
@@ -558,17 +561,27 @@ class ParquetMergeTable:
             ]
         )
 
-    def merge_upsert(self, source: DataFrame) -> int:
-        """MERGE WHEN MATCHED UPDATE / NOT MATCHED INSERT.  Returns the
-        number of upserted rows (0 → no write happened)."""
-        batch = latest_wins(source, self.key, self._order_cols(source))
+    def merge(
+        self,
+        source: DataFrame | None = None,
+        current_keys: DataFrame | None = None,
+    ) -> tuple[int, int]:
+        """One ``MERGE INTO`` statement, one commit: WHEN MATCHED (and
+        changed) UPDATE / WHEN NOT MATCHED INSERT for ``source``, and WHEN
+        NOT MATCHED BY SOURCE DELETE for head keys absent from
+        ``current_keys`` (the reference's stale-row cleanup).  A key the
+        source matches is never deleted, changed or not.  Returns
+        ``(upserted, deleted)``; ``(0, 0)`` means no write happened."""
         if not self.exists():
-            self._write_snapshot(
-                batch, changes=batch.withColumn("_change_type", F.lit("insert"))
-            )
-            return batch.count()
+            if source is None:
+                return 0, 0
+            self.create(source)
+            return self.read().count(), 0
 
         existing = self.read()
+        if source is None:
+            source = existing.limit(0)
+        batch = latest_wins(source, self.key, self._order_cols(source))
         all_cols = list(existing.columns) + [
             c for c in batch.columns if c not in existing.columns
         ]
@@ -588,32 +601,52 @@ class ParquetMergeTable:
             fingerprint_col=self.fingerprint_col,
             ts_col=self.ts_col,
         ).persist()
-        n_changed = changed.count()
-        if n_changed == 0 and all_cols == list(existing.columns):
-            changed.unpersist()
-            return 0
-        merged = merge_upsert(existing_aligned, changed, self.key)
-        # CDF capture at O(changed): split the changed set into inserts
-        # vs updates by one keyed semi/anti join pair against the
-        # existing keys, and pull preimages with a semi join the other
-        # way — never a table diff.
-        existing_keys = existing_aligned.select(self.key)
-        changes = (
-            changed.join(existing_keys, self.key, "left_anti")
-            .withColumn("_change_type", F.lit("insert"))
-            .unionByName(
-                changed.join(existing_keys, self.key, "semi")
-                .withColumn("_change_type", F.lit("update_postimage"))
+        cached = [changed]
+        n_changed, n_stale = changed.count(), 0
+        # the keys leaving the head, each tagged with the change row its
+        # old image becomes
+        gone = changed.select(self.key, F.lit("update_preimage").alias("_change_type"))
+        if current_keys is not None:
+            matched = current_keys.select(self.key).unionByName(source.select(self.key))
+            stale = deleted_keys(existing, matched, self.key).persist()
+            cached.append(stale)
+            n_stale = stale.count()
+            gone = gone.unionByName(stale.withColumn("_change_type", F.lit("delete")))
+        try:
+            if n_changed == n_stale == 0 and all_cols == list(existing.columns):
+                return 0, 0
+            merged = existing_aligned.join(gone, self.key, "left_anti").unionByName(
+                changed
             )
-            .unionByName(
-                existing_aligned.join(
-                    changed.select(self.key), self.key, "semi"
-                ).withColumn("_change_type", F.lit("update_preimage"))
+            # CDF capture at O(changed): split the changed set into inserts
+            # vs updates by one keyed semi/anti join pair against the
+            # existing keys, and pull preimages and deleted rows with one
+            # join the other way — never a table diff.
+            existing_keys = existing_aligned.select(self.key)
+            changes = (
+                changed.join(existing_keys, self.key, "left_anti")
+                .withColumn("_change_type", F.lit("insert"))
+                .unionByName(
+                    changed.join(existing_keys, self.key, "semi")
+                    .withColumn("_change_type", F.lit("update_postimage"))
+                )
+                .unionByName(existing_aligned.join(gone, self.key))
             )
-        )
-        self._write_snapshot(merged, changes=changes)
-        changed.unpersist()
-        return n_changed
+            self._write_snapshot(merged, changes=changes)
+            return n_changed, n_stale
+        finally:
+            for df in cached:
+                df.unpersist()
+
+    def merge_upsert(self, source: DataFrame) -> int:
+        """MERGE WHEN MATCHED UPDATE / NOT MATCHED INSERT: :meth:`merge`
+        without a delete clause.  Returns the number of upserted rows."""
+        return self.merge(source)[0]
+
+    def merge_delete(self, current_keys: DataFrame) -> int:
+        """MERGE WHEN NOT MATCHED BY SOURCE DELETE for keys absent from
+        ``current_keys``: :meth:`merge` without a source."""
+        return self.merge(current_keys=current_keys)[1]
 
     def compact(self, target_files_per_partition: int = 1) -> int:
         """Small-file compaction (the OPTIMIZE analog): rewrite the
@@ -639,7 +672,7 @@ class ParquetMergeTable:
         with ``inherit=True`` hardlinks them) — no data rewrite, so
         deleting 100 rows from a 100 TB table costs one key-file write —
         and stages the matching keys in a ``_tombstones/`` parquet that
-        every reader anti-joins.  Copy-on-write paths (``merge_upsert``,
+        every reader anti-joins.  Copy-on-write paths (``merge``,
         ``compact``, ``rollback``) read through the tombstones and drop
         them in their rewritten snapshot, so tombstone debt never
         outlives the next rewrite.  Returns the number of newly
@@ -672,23 +705,6 @@ class ParquetMergeTable:
         # removes rows, never widens a file's range
         publish_snapshot(self.path, staging, inherit=True)
         return n_new
-
-    def merge_delete(self, current_keys: DataFrame) -> int:
-        """MERGE WHEN MATCHED THEN DELETE for keys absent from
-        ``current_keys`` (the reference's stale-row cleanup)."""
-        if not self.exists():
-            return 0
-        existing = self.read()
-        stale = deleted_keys(existing, current_keys, self.key).persist()
-        n_stale = stale.count()
-        if n_stale:
-            survivors = existing.join(stale, self.key, "left_anti")
-            deleted_rows = existing.join(stale, self.key, "semi").withColumn(
-                "_change_type", F.lit("delete")
-            )
-            self._write_snapshot(survivors, changes=deleted_rows)
-        stale.unpersist()
-        return n_stale
 
 
 # ---------------------------------------------------------------------------
@@ -745,8 +761,6 @@ def sql_merge_upsert(
         # read — executor-side, never through the driver (a .collect()
         # here is a driver OOM at scale).  The warehouse dir is shared
         # storage on a real cluster, so staging there works everywhere.
-        import uuid
-
         warehouse = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
         staging = f"{warehouse}/__merge_staging_{uuid.uuid4().hex}"
         merged.write.mode("overwrite").parquet(staging)

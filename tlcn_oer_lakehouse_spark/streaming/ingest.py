@@ -74,8 +74,9 @@ def silver_ingest(
     """The medallion SILVER lifecycle as a streaming ingest: every
     micro-batch of bronze scrape records runs the full batch silver pass
     (U1 normalize → W1 latest-wins → J1/P3 change detection → K1 MERGE
-    resources → O6 asset explode → K1 MERGE documents → J4/K2
-    stale-asset delete) via :func:`pipelines.medallion.run_silver` —
+    resources → O6 asset explode → one documents MERGE whose K1 upsert
+    and J4/K2 stale-asset delete are a single commit) via
+    :func:`pipelines.medallion.run_silver` —
     the streaming twin of the composed ``medallion_e2e`` plan, closing
     the set (corpus-prep, near-dup, silver) of headline flows with a
     stream-equals-batch proof.
@@ -122,7 +123,11 @@ def scd2_ingest(
     batch and streaming — foreachBatch replay after a crash re-detects
     zero changes, so the version chain never double-opens."""
     from tlcn_oer_lakehouse_spark.operators.incremental import latest_wins
-    from tlcn_oer_lakehouse_spark.operators.scd2 import scd2_init, scd2_merge
+    from tlcn_oer_lakehouse_spark.operators.scd2 import (
+        scd2_changes,
+        scd2_init,
+        scd2_merge,
+    )
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -134,11 +139,12 @@ def scd2_ingest(
             table.create(scd2_init(rows, ts))
             return
         dim = table.read()
-        merged = scd2_merge(dim, rows, key, tracked_cols, ts)
         # materialize off the table being overwritten (localCheckpoint —
         # same lineage-cut as the components loop), then full refresh:
-        # SCD2 rewrites are row-level state transitions, not appends
-        table._write_snapshot(merged.localCheckpoint())
+        # SCD2 rewrites are row-level state transitions, not appends, and
+        # their change log is staged with the snapshot like any commit's
+        merged = scd2_merge(dim, rows, key, tracked_cols, ts).localCheckpoint()
+        table._write_snapshot(merged, changes=scd2_changes(dim, merged, ts))
 
     writer = (
         stream_df.writeStream.foreachBatch(_merge)
