@@ -107,3 +107,28 @@ def test_serve_tail_caches_nothing(spark, sf_correct, monkeypatch):
     rdds = spark.sparkContext._jsc.getPersistentRDDs()
     new = [rdds[i].name() for i in _persisted_ids(spark) - before]
     assert not new, new
+
+
+def test_landing_ingest_releases_its_parse(spark, tmp_path):
+    """``split_corrupt`` caches the parsed landing batch; once
+    ``run_silver_from_landing`` returns, nothing it persisted is left,
+    on the first (create) batch and on a later (merge) batch alike."""
+    import json
+
+    from tlcn_oer_lakehouse_spark.pipelines.medallion import (
+        run_silver_from_landing,
+    )
+
+    wh = str(tmp_path / "wh")
+    for i in range(2):
+        landing = tmp_path / f"landing{i}.json"
+        record = {"id": f"osx-{i}", "title": f"Book {i}",
+                  "url": f"https://openstax.org/books/{i}",
+                  "scraped_at": "2024-01-02T00:00:00",
+                  "pdf_paths": [f"bronze/osx/{i}.pdf"]}
+        landing.write_text(json.dumps(record) + f"\n{{broken json {i}\n")
+        before = _persisted_ids(spark)
+        stats = run_silver_from_landing(spark, str(landing), wh)
+        assert stats["resources_upserted"] == 1
+        assert stats["rows_quarantined"] == 1
+        assert not _persisted_ids(spark) - before

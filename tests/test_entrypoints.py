@@ -1,7 +1,8 @@
 """The entry points that stay: the ``__spark_entry__.py`` contract
 (``entry``/``queries``/``oracle_sql``) and the command-line tools under
 ``tools/``, whose in-repo imports must still resolve — plus the module
-boundary that keeps the merge table's snapshot format inside ``sinks/``."""
+boundary that keeps the merge table's snapshot format inside ``sinks/``
+and the streaming sinks behind one runner."""
 
 from __future__ import annotations
 
@@ -151,3 +152,23 @@ def test_snapshot_format_check_flags_paths_not_aliases():
         'h = format("oer_mergetable_changes")',
     ])
     assert [line for line, _ in _snapshot_format_uses(src)] == [1, 2, 3, 4, 5]
+
+
+def test_streaming_sinks_start_through_one_runner():
+    """Every foreachBatch sink starts through ``streaming/ingest.py``'s
+    one runner, whose trigger is always ``availableNow``: one
+    ``.writeStream`` access in the package, no per-sink trigger option."""
+    write_streams = [
+        (str(p.relative_to(PACKAGE)), node.lineno)
+        for p in sorted(PACKAGE.rglob("*.py"))
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr == "writeStream"
+    ]
+    assert [f for f, _ in write_streams] == ["streaming/ingest.py"], write_streams
+    ingest = ast.parse((PACKAGE / "streaming" / "ingest.py").read_text())
+    knobs = [
+        node.name for node in ast.walk(ingest)
+        if isinstance(node, ast.FunctionDef)
+        and "available_now" in [a.arg for a in node.args.args + node.args.kwonlyargs]
+    ]
+    assert knobs == []

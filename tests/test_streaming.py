@@ -106,6 +106,60 @@ def test_windowed_stream_matches_batch(spark, tmp_path):
     assert got == want
 
 
+def test_runner_skips_empty_micro_batches(spark, tmp_path):
+    """A zero-row landed file reaches foreachBatch as an empty
+    micro-batch; the runner never hands it to the sink's body."""
+    from tlcn_oer_lakehouse_spark.streaming.ingest import _foreach_batch
+
+    landing = str(tmp_path / "landing")
+    _write_batch(spark, landing, [(1, "a", "f1")], "b1")
+    _write_batch(spark, landing, [], "b2")
+    calls = []
+    q = _foreach_batch(
+        landing_stream(spark, f"{landing}/*", SCHEMA, max_files_per_trigger=1),
+        str(tmp_path / "ckpt"),
+        lambda df, batch_id: calls.append((batch_id, df.count())),
+    )
+    assert q.awaitTermination(120)
+    assert [p["batchId"] for p in q.recentProgress] == [0, 1]
+    assert calls == [(0, 1)]
+
+
+@pytest.mark.parametrize("sink", ["merge", "scd2"])
+def test_empty_landed_file_commits_nothing(spark, tmp_path, sink):
+    """A zero-row landed file after a real one leaves the table's head
+    where the real one put it, for the MERGE and the SCD2 sinks."""
+    import datetime as dt
+
+    from pyspark.sql.types import TimestampType
+
+    from tlcn_oer_lakehouse_spark.streaming.ingest import scd2_ingest
+
+    schema = StructType([*SCHEMA.fields, StructField("ts", TimestampType())])
+    landing = str(tmp_path / "landing")
+    table = ParquetMergeTable(spark, str(tmp_path / "t"), key="id")
+    ckpt = str(tmp_path / "ckpt")
+
+    def _drain(name, rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+            f"{landing}/{name}"
+        )
+        stream = landing_stream(spark, f"{landing}/*", schema)
+        if sink == "merge":
+            q = merge_ingest(stream, table, ckpt)
+        else:
+            q = scd2_ingest(stream, table, key="id", tracked_cols=["val"],
+                            ts_col="ts", checkpoint_dir=ckpt)
+        assert q.awaitTermination(120)
+        return q
+
+    _drain("b1", [(1, "a", "f1", dt.datetime(2024, 1, 1))])
+    head = table._head_version()
+    q = _drain("b2", [])
+    assert [p["numInputRows"] for p in q.recentProgress] == [0]
+    assert table._head_version() == head
+
+
 def test_replayed_batch_is_noop(spark, tmp_path):
     """Crash-replay safety: merging the same micro-batch twice leaves the
     table unchanged (foreachBatch + change detection)."""
@@ -419,12 +473,12 @@ def test_scd2_streaming_dimension(spark, tmp_path):
     assert folded == canon(table.read().collect())
 
     # same batch content re-landed as a new file: fingerprints match ->
-    # chain unchanged (no double-open), and the replay logs no change
+    # chain unchanged (no double-open), and the replay commits nothing
     v2 = table._head_version()
     _land([(1, "pro", t2)], "b3")
     _run()
     assert table.read().count() == 3
-    assert table.read_changes(v2).count() == 0
+    assert table._head_version() == v2
 
 
 def test_scd2_ingest_stream_equals_batch(spark, tmp_path):

@@ -216,25 +216,29 @@ def run_silver_from_landing(
         split_corrupt,
     )
 
-    good, quarantine = split_corrupt(
-        read_bronze_json(spark, landing_path, schema=schema, multiline=multiline)
-    )
-    q_rows = quarantine.select(
-        F.sha2(F.col("_corrupt_record"), 256).alias("payload_hash"),
-        F.col("_corrupt_record").alias("payload"),
-        "bronze_source_path",
-        "ingested_at",
-    )
-    # payload_hash doubles as the fingerprint: replaying the same broken
-    # file matches on key + identical fingerprint → 0 upserts (no-op).
-    qt = ParquetMergeTable(
-        spark,
-        f"{warehouse_root}/bronze_quarantine",
-        key="payload_hash",
-        fingerprint_col="payload_hash",
-    )
-    n_quarantined = qt.merge_upsert(q_rows)
-    stats = run_silver(spark, good, warehouse_root)
+    # split_corrupt caches the parse and ``cache()`` returns the same
+    # frame, so ``parsed`` is what to release once both merges are done.
+    parsed = read_bronze_json(spark, landing_path, schema=schema, multiline=multiline)
+    try:
+        good, quarantine = split_corrupt(parsed)
+        q_rows = quarantine.select(
+            F.sha2(F.col("_corrupt_record"), 256).alias("payload_hash"),
+            F.col("_corrupt_record").alias("payload"),
+            "bronze_source_path",
+            "ingested_at",
+        )
+        # payload_hash doubles as the fingerprint: replaying the same broken
+        # file matches on key + identical fingerprint → 0 upserts (no-op).
+        qt = ParquetMergeTable(
+            spark,
+            f"{warehouse_root}/bronze_quarantine",
+            key="payload_hash",
+            fingerprint_col="payload_hash",
+        )
+        n_quarantined = qt.merge_upsert(q_rows)
+        stats = run_silver(spark, good, warehouse_root)
+    finally:
+        parsed.unpersist()
     stats["rows_quarantined"] = n_quarantined
     return stats
 

@@ -8,6 +8,13 @@ and streaming share one sink, one change-detection predicate, and one
 idempotence guarantee.  Late data is bounded with an event-time watermark
 before any stateful aggregation.
 
+Every foreachBatch sink here is a per-batch body started by one runner,
+:func:`_foreach_batch`, which skips empty micro-batches and always
+triggers ``availableNow``: drain what has landed, then stop, with the
+checkpoint carrying progress to the next drain.  That is the reference's
+operating model — Airflow-scheduled batch runs over the landing prefix —
+so it is the only trigger the sinks offer.
+
 Scale notes: file discovery is O(new files) per trigger
 (``maxFilesPerTrigger`` bounds batch size); foreachBatch MERGE keeps
 write amplification proportional to changed rows; watermark state is
@@ -15,6 +22,8 @@ per-key bounded and spills via RocksDB state store on a real cluster.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,38 +47,50 @@ def landing_stream(
     return reader.format(fmt).load(landing_dir)
 
 
+def _foreach_batch(
+    stream_df: DataFrame,
+    checkpoint_dir: str,
+    process: Callable[[DataFrame, int], object],
+) -> StreamingQuery:
+    """Start ``stream_df`` as an ``availableNow`` drain that calls
+    ``process(batch_df, batch_id)`` on every non-empty micro-batch.  A
+    zero-row landed file reaches foreachBatch as an empty micro-batch;
+    no sink has work to do on one, and a sink whose table does not exist
+    yet would create it from nothing (SCD2 stamped with a ``None`` event
+    time)."""
+
+    def _run(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            process(batch_df, batch_id)
+
+    return (
+        stream_df.writeStream.foreachBatch(_run)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def merge_ingest(
     stream_df: DataFrame,
     table: ParquetMergeTable,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Upsert every micro-batch into ``table`` (K1 as a streaming sink).
 
-    foreachBatch gives exactly-once-per-batch semantics together with the
-    sink's change detection: a replayed batch after a crash re-merges and
-    detects zero changes — idempotent end-to-end."""
-
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        table.merge_upsert(batch_df)
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    foreachBatch is at-least-once: a batch may be re-delivered after a
+    crash.  The sink's change detection makes that replay a no-op — it
+    re-merges, detects zero changes and commits nothing."""
+    return _foreach_batch(
+        stream_df, checkpoint_dir, lambda batch_df, _: table.merge_upsert(batch_df)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def silver_ingest(
     stream_df: DataFrame,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """The medallion SILVER lifecycle as a streaming ingest: every
     micro-batch of bronze scrape records runs the full batch silver pass
@@ -92,19 +113,11 @@ def silver_ingest(
     byte-identical tables (``test_silver_ingest_replay_is_idempotent``)."""
     from tlcn_oer_lakehouse_spark.pipelines.medallion import run_silver
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        run_silver(batch_df.sparkSession, batch_df, warehouse_root)
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _foreach_batch(
+        stream_df,
+        checkpoint_dir,
+        lambda batch_df, _: run_silver(batch_df.sparkSession, batch_df, warehouse_root),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def scd2_ingest(
@@ -114,14 +127,14 @@ def scd2_ingest(
     tracked_cols: list[str],
     ts_col: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming type-2 dimension maintenance: each micro-batch is
     latest-wins-deduped, then SCD2-merged into ``table`` (history rows
     close out, new versions open at the batch's max event time).  The
     same :mod:`~tlcn_oer_lakehouse_spark.operators.scd2` algebra runs in
     batch and streaming — foreachBatch replay after a crash re-detects
-    zero changes, so the version chain never double-opens."""
+    zero changes, so the version chain never double-opens, and a batch
+    whose change log is empty commits nothing."""
     from tlcn_oer_lakehouse_spark.operators.incremental import latest_wins
     from tlcn_oer_lakehouse_spark.operators.scd2 import (
         scd2_changes,
@@ -130,8 +143,6 @@ def scd2_ingest(
     )
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch = latest_wins(batch_df, key, [ts_col])
         ts = batch.agg(F.max(ts_col)).first()[0]
         rows = batch.drop(ts_col)
@@ -144,16 +155,14 @@ def scd2_ingest(
         # SCD2 rewrites are row-level state transitions, not appends, and
         # their change log is staged with the snapshot like any commit's
         merged = scd2_merge(dim, rows, key, tracked_cols, ts).localCheckpoint()
-        table._write_snapshot(merged, changes=scd2_changes(dim, merged, ts))
+        changes = scd2_changes(dim, merged, ts).persist()
+        try:
+            if not changes.isEmpty():
+                table._write_snapshot(merged, changes=changes)
+        finally:
+            changes.unpersist()
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(stream_df, checkpoint_dir, _merge)
 
 
 def enrich_stream(
@@ -223,6 +232,52 @@ def windowed_counts_stream(
     )
 
 
+def _pairs_ingest(
+    stream_df: DataFrame,
+    corpus_table: ParquetMergeTable,
+    pairs_dir: str,
+    checkpoint_dir: str,
+    id_col: str,
+    text_col: str,
+    threshold: float,
+    pairs_op: Callable[..., DataFrame],
+) -> StreamingQuery:
+    """The dedup-at-ingest body :func:`near_dup_ingest` and
+    :func:`exact_dedup_ingest` share: each micro-batch's pairs against
+    the already-ingested corpus AND itself, from the incremental
+    ``pairs_op``, are appended to ``pairs_dir`` tagged with the batch
+    id, then the batch is admitted to ``corpus_table`` via MERGE."""
+
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
+        batch = batch_df.select(id_col, text_col).persist()
+        spark = batch.sparkSession
+        if corpus_table.exists():
+            existing = corpus_table.read().select(id_col, text_col)
+        else:
+            existing = spark.createDataFrame([], batch.schema)
+        # Per-trigger cache hygiene: the operators' internal
+        # persists include frames derived from the GROWING corpus (the
+        # prefix filter's sh_e / ordered_e are corpus-sized); a
+        # long-running stream that lets them default-persist accumulates
+        # one corpus copy per trigger.  Track and drop them per batch.
+        held: list[DataFrame] = []
+
+        def _track(_key: str, frame: DataFrame) -> DataFrame:
+            held.append(frame.persist())
+            return frame
+
+        pairs = pairs_op(
+            existing, batch, id_col, text_col, threshold=threshold, persist=_track
+        ).withColumn("batch_id", F.lit(batch_id))
+        pairs.write.mode("append").parquet(pairs_dir)
+        corpus_table.merge_upsert(batch)
+        batch.unpersist()
+        for frame in held:
+            frame.unpersist()
+
+    return _foreach_batch(stream_df, checkpoint_dir, _process)
+
+
 def near_dup_ingest(
     stream_df: DataFrame,
     corpus_table: ParquetMergeTable,
@@ -231,7 +286,6 @@ def near_dup_ingest(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming near-duplicate detection at ingest: each micro-batch is
     (1) checked against the already-ingested corpus AND itself with the
@@ -252,42 +306,10 @@ def near_dup_ingest(
     table is a persisted, bucketed output of previous batches)."""
     from tlcn_oer_lakehouse_spark.operators.dedup import minhash_incremental_pairs
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch = batch_df.select(id_col, text_col).persist()
-        spark = batch.sparkSession
-        if corpus_table.exists():
-            existing = corpus_table.read().select(id_col, text_col)
-        else:
-            existing = spark.createDataFrame([], batch.schema)
-        # Per-trigger cache hygiene (ADVICE r10): the operator's internal
-        # persists include frames derived from the GROWING corpus; a
-        # long-running stream that lets them default-persist accumulates
-        # one corpus copy per trigger.  Track and drop them per batch.
-        held: list[DataFrame] = []
-
-        def _track(_key: str, frame: DataFrame) -> DataFrame:
-            held.append(frame.persist())
-            return frame
-
-        pairs = minhash_incremental_pairs(
-            existing, batch, id_col, text_col, threshold=threshold, persist=_track
-        ).withColumn("batch_id", F.lit(batch_id))
-        pairs.write.mode("append").parquet(pairs_dir)
-        corpus_table.merge_upsert(batch)
-        batch.unpersist()
-        for frame in held:
-            frame.unpersist()
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _pairs_ingest(
+        stream_df, corpus_table, pairs_dir, checkpoint_dir,
+        id_col, text_col, threshold, minhash_incremental_pairs,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def exact_dedup_ingest(
@@ -298,7 +320,6 @@ def exact_dedup_ingest(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming EXACT set-similarity dedup at ingest — the prefix-filter
     twin of :func:`near_dup_ingest`: each micro-batch is (1) joined
@@ -318,42 +339,10 @@ def exact_dedup_ingest(
         prefix_filter_incremental_pairs,
     )
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch = batch_df.select(id_col, text_col).persist()
-        spark = batch.sparkSession
-        if corpus_table.exists():
-            existing = corpus_table.read().select(id_col, text_col)
-        else:
-            existing = spark.createDataFrame([], batch.schema)
-        # Per-trigger cache hygiene (ADVICE r10): without a tracking
-        # callback the operator caches four frames per trigger — two of
-        # them (sh_e / ordered_e) corpus-sized and re-derived from the
-        # growing standing corpus — and never frees them.
-        held: list[DataFrame] = []
-
-        def _track(_key: str, frame: DataFrame) -> DataFrame:
-            held.append(frame.persist())
-            return frame
-
-        pairs = prefix_filter_incremental_pairs(
-            existing, batch, id_col, text_col, threshold=threshold, persist=_track
-        ).withColumn("batch_id", F.lit(batch_id))
-        pairs.write.mode("append").parquet(pairs_dir)
-        corpus_table.merge_upsert(batch)
-        batch.unpersist()
-        for frame in held:
-            frame.unpersist()
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _pairs_ingest(
+        stream_df, corpus_table, pairs_dir, checkpoint_dir,
+        id_col, text_col, threshold, prefix_filter_incremental_pairs,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def corpus_prep_ingest(
@@ -366,7 +355,6 @@ def corpus_prep_ingest(
     min_quality: float = 0.55,
     window: int = 50,
     stride: int = 40,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming twin of queries/traindata.py:td_pipeline_e2e — the whole
     corpus-prep flow applied incrementally at ingest: each micro-batch is
@@ -392,8 +380,6 @@ def corpus_prep_ingest(
     from tlcn_oer_lakehouse_spark.operators.chunking import token_window_chunks
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         from pyspark.sql import Window
 
         scored = batch_df.select(
@@ -432,14 +418,7 @@ def corpus_prep_ingest(
             corpus_table.merge_upsert(admitted)
         admitted.unpersist()
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(stream_df, checkpoint_dir, _process)
 
 
 def cms_ingest(
@@ -449,7 +428,6 @@ def cms_ingest(
     text_col: str = "text",
     depth: int = 4,
     width: int = 1024,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming count-min sketch accumulation: each micro-batch's term
     stream collapses to its own ≤ depth×width partial sketch (a tiny
@@ -466,8 +444,6 @@ def cms_ingest(
     from tlcn_oer_lakehouse_spark.queries.traindata import _bucket
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         terms = batch_df.select(F.explode(tokens(F.col(text_col))).alias("term"))
         cells = terms.select(
             F.explode(
@@ -490,14 +466,7 @@ def cms_ingest(
             .parquet(sketch_dir)
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(stream_df, checkpoint_dir, _process)
 
 
 def cms_merged(spark: SparkSession, sketch_dir: str) -> DataFrame:
@@ -570,7 +539,6 @@ def hll_ingest(
     registers_dir: str,
     checkpoint_dir: str,
     text_col: str = "text",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming HyperLogLog accumulation: each micro-batch's term
     stream collapses to its register maxima (≤ HLL_M rows) appended
@@ -585,8 +553,6 @@ def hll_ingest(
     from tlcn_oer_lakehouse_spark.queries.traindata import hll_register_cols
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         terms = batch_df.select(F.explode(tokens(F.col(text_col))).alias("term"))
         idx, rank = hll_register_cols(F.col("term"))
         (
@@ -597,14 +563,7 @@ def hll_ingest(
             .parquet(registers_dir)
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(stream_df, checkpoint_dir, _process)
 
 
 def hll_merged_registers(spark: SparkSession, registers_dir: str) -> DataFrame:
@@ -646,7 +605,6 @@ def expectations_ingest(
     quarantine_dir: str,
     metrics_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming twin of the declarative expectations operator
     (`operators/expectations.py`, registered batch query
@@ -670,8 +628,6 @@ def expectations_ingest(
     from tlcn_oer_lakehouse_spark.operators.expectations import expect
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         res = expect(batch_df, rules)
         clean_table.merge_upsert(res.clean)
         res.quarantined.withColumn("_batch_id", F.lit(batch_id)).write.mode(
@@ -681,14 +637,7 @@ def expectations_ingest(
             "append"
         ).parquet(metrics_dir)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(stream_df, checkpoint_dir, _process)
 
 
 def dq_metrics_rollup(spark: SparkSession, metrics_dir: str) -> DataFrame:
