@@ -132,3 +132,37 @@ def test_landing_ingest_releases_its_parse(spark, tmp_path):
         assert stats["resources_upserted"] == 1
         assert stats["rows_quarantined"] == 1
         assert not _persisted_ids(spark) - before
+
+
+def test_scd2_ingest_releases_its_frames(spark, tmp_path):
+    """``scd2_ingest`` persists each trigger's merged dimension and change
+    log and releases both when the trigger ends: after every drain of a
+    stream into one dimension, nothing the sink persisted is left."""
+    import datetime as dt
+
+    from pyspark.sql.types import (
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampType,
+    )
+
+    from tlcn_oer_lakehouse_spark.sinks.merge import ParquetMergeTable
+    from tlcn_oer_lakehouse_spark.streaming.ingest import scd2_ingest
+
+    schema = StructType([StructField("id", LongType()), StructField("seg", StringType()),
+                         StructField("ts", TimestampType())])
+    landing = str(tmp_path / "landing")
+    table = ParquetMergeTable(spark, str(tmp_path / "dim"), key="id")
+    before = _persisted_ids(spark)
+    for i in range(4):
+        ts = dt.datetime(2024, 1, 1 + i)
+        spark.createDataFrame([(1, f"s{i}", ts), (10 + i, "new", ts)], schema).coalesce(
+            1).write.parquet(f"{landing}/b{i}")
+        q = scd2_ingest(spark.readStream.schema(schema).parquet(f"{landing}/*"), table,
+                        key="id", tracked_cols=["seg"], ts_col="ts",
+                        checkpoint_dir=str(tmp_path / "ckpt"))
+        assert q.awaitTermination(120)
+        assert table._head_version() == i
+        assert not _persisted_ids(spark) - before, f"drain {i}"

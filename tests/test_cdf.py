@@ -132,6 +132,48 @@ def test_merge_noop_writes_nothing(spark, tmp_path):
     assert t._head_version() == v0
 
 
+_T0, _T1 = "2024-01-01 00:00:00", "2024-01-02 00:00:00"
+
+
+@pytest.mark.parametrize("old, new, changed", [
+    ((None, _T0), (None, _T0), False),  # null fingerprint on both sides
+    ((None, _T0), ("x", _T0), True),    # null vs non-null
+    (("x", _T0), (None, _T0), True),    # non-null vs null
+    (("x", _T0), ("x", _T1), True),     # strictly newer ts, same fingerprint
+    (("x", _T0), ("x", _T0), False),    # equal ts, same fingerprint
+    (("x", _T1), ("x", _T0), False),    # older ts, same fingerprint
+], ids=["null_both", "null_to_value", "value_to_null", "newer_ts",
+        "same_ts", "older_ts"])
+def test_merge_classifies_fingerprint_and_ts_edges(spark, tmp_path, old, new, changed):
+    """The change rule is null-safe fingerprint inequality or a strictly
+    newer ``ts_col``.  A change commits one version logging the pre- and
+    postimage; a no-op commits nothing and leaves no staging dir behind
+    (the change log is staged before the counts are known)."""
+    import os
+
+    t = ParquetMergeTable(spark, str(tmp_path / "t"), key="id", ts_col="ts")
+    schema = "id int, val string, record_fingerprint string, ts string"
+
+    def rows(fp, ts, val):
+        return spark.createDataFrame([(1, val, fp, ts)], schema).withColumn(
+            "ts", F.col("ts").cast("timestamp")
+        )
+
+    t.create(rows(*old, "a"))
+    v0 = t._head_version()
+    assert t.merge(rows(*new, "b")) == ((1, 0) if changed else (0, 0))
+    assert not [d for d in os.listdir(tmp_path) if "__staging_" in d]
+    if changed:
+        assert _feed(t, v0) == [
+            (v0 + 1, "update_postimage", 1, "b"),
+            (v0 + 1, "update_preimage", 1, "a"),
+        ]
+        assert [(r.id, r.val) for r in t.read().collect()] == [(1, "b")]
+    else:
+        assert t._head_version() == v0
+        assert t._all_version_nums() == [v0]
+
+
 def test_mor_delete_logs_and_does_not_inherit_old_log(spark, tmp_path):
     t = _table(spark, tmp_path)
     t.create(_fp(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "val"])))

@@ -4,10 +4,15 @@ pruned scan returns exactly what a full scan + filter returns."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from tlcn_oer_lakehouse_spark.sinks.manifest import read_manifest, write_manifest
-from tlcn_oer_lakehouse_spark.sinks.merge import ParquetMergeTable
+from tlcn_oer_lakehouse_spark.sinks.manifest import (
+    read_manifest,
+    save_manifest,
+    write_manifest,
+)
+from tlcn_oer_lakehouse_spark.sinks.merge import ParquetMergeTable, recorded_schema
 
 
 def _clustered_table(spark, tmp_path, n=10_000, files=8):
@@ -253,3 +258,102 @@ def test_every_commit_publishes_a_sound_manifest(spark, tmp_path):
     assert_sound(path)
     assert sorted(r.id for r in ParquetMergeTable(spark, path, key="id")
                   .read().collect()) == list(range(30)) + [900, 901]
+
+
+def _assert_schema_recorded(spark, path):
+    """The schema the head's commit recorded is exactly what
+    ``spark.read.parquet`` infers for the version dir."""
+    import os
+
+    snap = os.path.realpath(path)
+    recorded = recorded_schema(snap)
+    assert recorded is not None
+    assert recorded == spark.read.parquet(snap).schema
+
+
+@pytest.mark.parametrize("parts", [("p1", "p2"), (1, 2), ("2024-01-01", "2024-01-02")],
+                         ids=["string", "int", "date_like"])
+def test_recorded_schema_equals_inferred(spark, tmp_path, parts):
+    """Every ``ParquetMergeTable`` commit (create, merge, a schema-evolving
+    merge, compact, rollback, merge-on-read delete) records the inferred
+    schema, partition-column types included: a long partition column
+    reads as int and date-like strings read as dates."""
+    t = ParquetMergeTable(spark, str(tmp_path / "t"), key="id", partition_by=("part",))
+    df = spark.range(40).select(
+        "id",
+        F.when(F.col("id") % 2 == 0, F.lit(parts[0])).otherwise(F.lit(parts[1])).alias("part"),
+        F.md5(F.col("id").cast("string")).alias("record_fingerprint"),
+    )
+    for commit in (
+        lambda: t.create(df),
+        lambda: t.merge(df.filter("id < 5").withColumn("record_fingerprint", F.lit("x")),
+                        current_keys=df.filter("id < 30").select("id")),
+        lambda: t.merge_upsert(df.filter("id >= 35").withColumn("extra", F.col("id") * 2.5)),
+        t.compact,
+        lambda: t.delete_where_mor([("id", "<", 3)]),
+        lambda: t.rollback(t.versions()[0]),
+    ):
+        commit()
+        _assert_schema_recorded(spark, t.path)
+    assert sorted(r.id for r in t.read().collect()) == list(range(40))
+
+
+def test_recorded_schema_with_hidden_transforms(spark, tmp_path):
+    """Hidden partition columns (day and bucket transforms) are part of
+    the recorded read schema, typed as inference types them."""
+    import datetime as dt
+
+    rows = [(i, dt.datetime(2024, 1, 1 + i % 3, 12), f"f{i}") for i in range(60)]
+    df = spark.createDataFrame(rows, "id bigint, ts timestamp, record_fingerprint string")
+    for transforms in ({"ts_day": ("day", "ts")}, {"id_b": ("bucket", "id", 8)}):
+        name = next(iter(transforms))
+        t = ParquetMergeTable(spark, str(tmp_path / name), key="id",
+                              partition_transforms=transforms)
+        t.create(df)
+        _assert_schema_recorded(spark, t.path)
+        t.merge_upsert(df.filter("id < 4").withColumn("record_fingerprint", F.lit("x")))
+        _assert_schema_recorded(spark, t.path)
+        assert name not in t.read().columns and t.read().count() == 60
+
+
+def test_python_writers_record_the_inferred_schema(spark, tmp_path):
+    """The Python DataSource batch writer (append and overwrite) and the
+    stream writer's commit record what Spark infers from their
+    pyarrow-written files."""
+    import datetime as dt
+
+    from tlcn_oer_lakehouse_spark.sources import pyds
+
+    pyds.register(spark)
+    path = str(tmp_path / "py")
+    df = spark.createDataFrame(
+        [(1, "a", 0.5, dt.datetime(2024, 1, 1), dt.date(2024, 1, 2), ["x"])],
+        "id bigint not null, s string, d double, ts timestamp, day date, tags array<string>",
+    )
+    for mode in ("overwrite", "append"):
+        df.write.format("oer_mergetable").option("path", path).mode(mode).save()
+        _assert_schema_recorded(spark, path)
+    w = pyds._MergeTableStreamWriter({"path": path})
+    w.commit([w.write(iter(df.toArrow().to_batches()))], 0)
+    _assert_schema_recorded(spark, path)
+    assert ParquetMergeTable(spark, path, key="id").read().count() == 3
+
+
+def test_snapshot_without_recorded_schema_still_reads(spark, tmp_path):
+    """A manifest written before schemas were recorded has no ``schema``
+    entry; its snapshot is read by inference."""
+    import os
+
+    t = ParquetMergeTable(spark, str(tmp_path / "t"), key="id", partition_by=("grp",))
+    t.create(spark.range(10).select(
+        "id", (F.col("id") % 2).alias("grp"),
+        F.md5(F.col("id").cast("string")).alias("record_fingerprint"),
+    ))
+    snap = os.path.realpath(t.path)
+    save_manifest(snap, read_manifest(snap)["files"])
+    assert recorded_schema(snap) is None
+    assert t.read().schema == spark.read.parquet(snap).schema
+    assert sorted(r.id for r in t.scan([("grp", "=", 1)]).collect()) == [1, 3, 5, 7, 9]
+    assert t.merge_upsert(t.read().filter("id = 0").withColumn(
+        "record_fingerprint", F.lit("x"))) == 1
+    _assert_schema_recorded(spark, t.path)

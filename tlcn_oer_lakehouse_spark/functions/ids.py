@@ -4,12 +4,15 @@ Re-expresses the reference's content-addressed ID conventions as pure
 column expressions (JVM-side, codegen'd) instead of Python-side hashlib
 calls inside RDD mapPartitions:
 
-- ``resource_uid`` = sha256(resource_id)           (transformer.py:305-307)
-- ``asset_uid``    = sha256(resource_uid||path)    (transformer.py:1608)
-- ``record_fingerprint`` = sha256(canonical payload) (transformer.py:310-337)
+- ``resource_uid`` = sha256(resource_id) and ``asset_uid`` =
+  sha256(resource_uid||path) (transformer.py:305-307, :1608) are inline
+  ``F.sha2`` expressions in ``pipelines/medallion.py``
+- ``record_fingerprint`` = md5 over a canonical column tuple (the
+  reference hashes the canonical payload, transformer.py:310-337)
 - surrogate keys from hash prefixes                 (gold_analytics.py:258-263;
-  the reference uses abs(xxhash64) — we expose that too, plus a portable
-  md5-prefix variant whose value is reproducible outside the JVM)
+  the reference uses abs(xxhash64); here a portable md5-prefix variant
+  whose value is reproducible outside the JVM)
+- packed pair keys for pair aggregates
 
 All are deterministic, so re-runs of any pipeline stage are idempotent by
 construction — the property the reference's MERGE-based incremental layer
@@ -22,12 +25,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def sha256_uid(*cols: Column | str) -> Column:
-    """Content-addressed UID: sha256 over '||'-joined parts."""
-    parts = [F.col(c).cast("string") if isinstance(c, str) else c.cast("string") for c in cols]
-    return F.sha2(F.concat_ws("||", *parts), 256)
-
-
 def md5_fingerprint(*cols: Column | str) -> Column:
     """Change-detection fingerprint over a canonical column tuple."""
     parts = [F.col(c).cast("string") if isinstance(c, str) else c.cast("string") for c in cols]
@@ -38,13 +35,6 @@ def surrogate_key(*cols: Column | str) -> Column:
     """64-bit surrogate key from the first 8 hex chars of md5 — portable
     (identical value computable in any engine), unlike xxhash64."""
     return F.conv(F.substring(md5_fingerprint(*cols), 1, 8), 16, 10).cast("long")
-
-
-def xxhash_surrogate_key(*cols: Column | str) -> Column:
-    """The reference's own surrogate scheme: abs(xxhash64(...))
-    (gold_analytics.py:258-263). JVM-only value; fastest at scale."""
-    parts = [F.col(c) if isinstance(c, str) else c for c in cols]
-    return F.abs(F.xxhash64(*parts))
 
 
 PAIR_ID_LIMIT = 1 << 31  # a packed pair keeps each id in 31 bits

@@ -69,45 +69,6 @@ def _base_hash(shingle: Column) -> Column:
     return F.conv(F.substring(F.md5(shingle), 1, 8), 16, 10).cast("long")
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3, num_hashes: int = 16
-) -> DataFrame:
-    """Per-document MinHash signature as ONE array-fold per row — no
-    explode, no shuffle; signatures materialize at scan speed.
-
-    The fold runs over the base-hash array (one md5 per distinct
-    shingle, staged in its own projection so it is computed once), and
-    the accumulator is the running elementwise min of the
-    ``num_hashes`` affine hashes — ``zip_with(acc, affines(h), least)``.
-    Documents with no shingles (fewer than ``shingle_n`` tokens) are
-    excluded, matching the explode+groupBy formulation."""
-    base_arr = F.transform(
-        F.array_distinct(shingles(tokens(F.col(text_col)), shingle_n)), _base_hash
-    )
-
-    def _affines(h: Column) -> Column:
-        return F.array(
-            *[
-                (h * _minhash_a(i) + _minhash_b(i)) % MINHASH_P
-                for i in range(num_hashes)
-            ]
-        )
-
-    acc0 = F.array(*[F.lit(MINHASH_P).cast("long")] * num_hashes)
-    sig = F.aggregate(
-        F.col("__bh"),
-        acc0,
-        lambda acc, h: F.zip_with(acc, _affines(h), lambda x, y: F.least(x, y)),
-    )
-    staged = df.select(F.col(id_col).alias("doc"), base_arr.alias("__bh")).filter(
-        F.size("__bh") > 0
-    )
-    packed = staged.select("doc", sig.alias("__sig"))
-    return packed.select(
-        "doc", *[F.col("__sig")[i].alias(f"h{i}") for i in range(num_hashes)]
-    )
-
-
 def minhash_lsh_candidate_pairs(
     sigs: DataFrame, num_hashes: int = 16, bands: int = 4
 ) -> DataFrame:

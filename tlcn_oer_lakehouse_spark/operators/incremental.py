@@ -9,11 +9,15 @@ The reference's pattern (transformer.py:1519-1558, 2427-2484):
   4. MERGE upsert into the Iceberg table                     (K1)
   5. anti-join to detect deletions, MERGE DELETE             (J4/K2)
 
-Steps 1-3 and 5 are engine-native below. Step 4 becomes
-``merge_upsert``: existing-not-matched ∪ changed, the frame a
-copy-on-write commit writes back as the table's whole next snapshot
-(``sinks/merge.py:publish_snapshot``); on a Delta/Iceberg deployment the
-same changed-set feeds ``MERGE INTO``.
+Steps 1-3 and 5 are engine-native below, with the P3 rule in one place,
+:func:`change_predicate`.  Step 4 is ``merge_upsert`` here:
+existing-not-matched ∪ changed, as a frame.  The table sink
+(``sinks/merge.py:ParquetMergeTable.merge``) runs steps 2-5 as one keyed
+pass instead: head rows, latest-wins batch rows and current-key rows
+meet per key in one exchange, each row is classified once with
+:func:`change_predicate`, and that one classified frame yields the
+change log, the counts and the table's whole next snapshot.  On a
+Delta/Iceberg deployment the same changed-set feeds ``MERGE INTO``.
 """
 
 from __future__ import annotations
@@ -35,6 +39,24 @@ def latest_wins(df: DataFrame, key: str, order_cols: list[str]) -> DataFrame:
     )
 
 
+def change_predicate(
+    new_fp: Column,
+    old_fp: Column,
+    new_ts: Column | None = None,
+    old_ts: Column | None = None,
+) -> Column:
+    """P3, the one change rule (null-safe, matching
+    transformer.py:1538-1557): the fingerprint differs, or (timestamps
+    given) the new timestamp is strictly newer, a null one counting as
+    the epoch.  ``changed_rows`` and ``ParquetMergeTable.merge`` both
+    classify with it."""
+    pred = ~new_fp.eqNullSafe(old_fp)
+    if new_ts is not None:
+        epoch = F.lit("1970-01-01").cast("timestamp")
+        pred = pred | (F.coalesce(new_ts, epoch) > F.coalesce(old_ts, epoch))
+    return pred
+
+
 def changed_rows(
     incoming: DataFrame,
     existing: DataFrame,
@@ -42,26 +64,19 @@ def changed_rows(
     fingerprint_col: str = "record_fingerprint",
     ts_col: str | None = None,
 ) -> DataFrame:
-    """J1+P3: rows in ``incoming`` that are new or differ from ``existing``.
-
-    Change predicate (null-safe, matching transformer.py:1538-1557):
-    new key, OR fingerprint differs, OR (ts_col given) incoming ts is
-    strictly newer.
-    """
+    """J1+P3: rows in ``incoming`` that are new, or changed per
+    :func:`change_predicate`, against ``existing``."""
     ex = existing.select(
         F.col(key).alias("__ex_key"),
         F.col(fingerprint_col).alias("__ex_fp"),
         *([F.col(ts_col).alias("__ex_ts")] if ts_col else []),
     )
     joined = incoming.join(ex, incoming[key] == ex["__ex_key"], "left")
-    pred: Column = F.col("__ex_key").isNull() | ~F.col(fingerprint_col).eqNullSafe(
-        F.col("__ex_fp")
+    pred = F.col("__ex_key").isNull() | change_predicate(
+        F.col(fingerprint_col),
+        F.col("__ex_fp"),
+        *((F.col(ts_col), F.col("__ex_ts")) if ts_col else ()),
     )
-    if ts_col:
-        pred = pred | (
-            F.coalesce(F.col(ts_col), F.lit("1970-01-01").cast("timestamp"))
-            > F.coalesce(F.col("__ex_ts"), F.lit("1970-01-01").cast("timestamp"))
-        )
     return joined.filter(pred).select(incoming["*"])
 
 

@@ -9,7 +9,9 @@ manifest: after each snapshot write, parquet footer statistics (already
 computed by the writer — reading them costs one footer fetch per file,
 no data scan) are collected into ``_manifest.json`` inside the immutable
 version dir, and ``prune_files`` answers "which files can possibly
-contain rows matching these predicates".
+contain rows matching these predicates".  The manifest also records the
+snapshot's Spark read schema (``schema``; the commit's writer supplies
+it), so readers plan without a schema-inference job.
 
 Supported predicate ops: ``= >= <= > <`` over int/float/string columns.
 A file is kept unless its [min, max] provably excludes the predicate —
@@ -132,10 +134,16 @@ def file_entry(snapshot_dir: str, path: str) -> dict:
     return {"path": rel, "rows": rows, "bounds": bounds}
 
 
-def save_manifest(snapshot_dir: str, entries: list[dict]) -> dict:
+def save_manifest(
+    snapshot_dir: str, entries: list[dict], schema: dict | None = None
+) -> dict:
     """Persist ``entries`` as ``_manifest.json`` in ``snapshot_dir``
-    (tmp file + rename).  Returns the manifest dict."""
-    manifest = {"files": entries}
+    (tmp file + rename), with the snapshot's Spark read ``schema`` (a
+    ``StructType.jsonValue()``) when the writer knows it.  Returns the
+    manifest dict."""
+    manifest: dict = {"files": entries}
+    if schema is not None:
+        manifest["schema"] = schema
     tmp = os.path.join(snapshot_dir, MANIFEST_NAME + ".tmp")
     with open(tmp, "w") as fh:
         json.dump(manifest, fh)

@@ -4,14 +4,21 @@ K2 delete :2460-2484, K6 schema evolution :2421-2425) on a classpath
 without lakehouse-format jars.
 
 Semantics, matching the reference write path:
-- ``merge(source, current_keys)``: one ``MERGE INTO`` and one commit.
-  Latest-wins dedup of the source batch (W1) → change-detection against
-  the current table (J1/P3, skips no-op rows) → the stale set: head keys
-  in neither ``current_keys`` nor the source (J4, ``WHEN NOT MATCHED BY
-  SOURCE DELETE``) → head ∖ (changed ∪ stale) ∪ changed written back
-  with one change log.  Idempotent by construction: re-merging the same
-  batch detects zero changes and leaves the table untouched (no write
-  at all).
+- ``merge(source, current_keys)``: one ``MERGE INTO`` and one commit,
+  planned as one keyed pass.  Latest-wins dedup of the source batch
+  (W1); then the head rows, the batch rows and the ``current_keys``
+  rows meet per key in one exchange and every row is classified once:
+  a batch row is an ``insert`` (new key), an ``update_postimage``
+  (changed per ``operators/incremental.py:change_predicate``: null-safe
+  fingerprint inequality, or a strictly newer ``ts_col``) or a no-op;
+  a head row is an ``update_preimage`` (its key changed), a ``delete``
+  (J4, ``WHEN NOT MATCHED BY SOURCE DELETE``: its key is in neither
+  ``current_keys`` nor the source — a key the source matches is never
+  deleted) or carried over.  That one persisted frame is staged as the
+  change log (its write also yields the counts), then written back as
+  the snapshot: head ∖ (preimages ∪ deletes) ∪ inserts ∪ postimages.
+  Idempotent by construction: re-merging the same batch detects zero
+  changes and commits nothing (the staged log is discarded).
 - ``merge_upsert(source)`` and ``merge_delete(current_keys)``: ``merge``
   with only its upsert (K1) or only its delete (K2) clause.
 - Schema evolution: source columns absent from the table are added
@@ -28,7 +35,9 @@ proportional to the changed rows, not the batch size.
 
 The snapshot format and its one commit.  Every snapshot is an immutable
 ``__v{n}`` directory: data files (hive dirs allowed), ``_manifest.json``
-(footer bounds, sinks/manifest.py), and three sidecars — ``_changes/``
+(footer bounds, sinks/manifest.py, and the Spark schema the snapshot
+reads with, so a read plans without a parquet schema-inference job;
+a manifest without one is read by inference), and three sidecars — ``_changes/``
 (this commit's change log), ``_tombstones/`` (merge-on-read deleted
 keys) and ``_epoch_{id}`` markers (the stream writer's exactly-once
 ledger).  The table path is a symlink to the head version.  Only this
@@ -36,8 +45,9 @@ module and sinks/manifest.py know that layout; every writer —
 ``ParquetMergeTable``'s mutators and the Python DataSource batch and
 stream writers (sources/pyds.py) — stages only its own new files and
 publishes through :func:`publish_snapshot`, Iceberg's one commit
-protocol in miniature.  The commit inherits the head's data files when
-asked (append and merge-on-read writers; rewrites start empty), copies
+protocol in miniature.  The commit inherits the head's data files (and
+read schema) when asked (append and merge-on-read writers; rewrites
+start empty and hand over their own schema), copies
 the head's ``_epoch_*`` ledger forward on EVERY commit — so the newest
 snapshot always holds the whole ledger and ``vacuum``, which keeps the
 newest versions, can never erase an epoch's marker — writes the
@@ -57,13 +67,14 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tlcn_oer_lakehouse_spark.operators.incremental import (
-    changed_rows,
-    deleted_keys,
+    change_predicate,
     latest_wins,
 )
 from tlcn_oer_lakehouse_spark.sinks.manifest import (
@@ -151,7 +162,22 @@ def epoch_committed(path: str, batch_id: int) -> bool:
     )
 
 
-def publish_snapshot(path: str, staging: str, inherit: bool = False) -> str:
+def recorded_schema(snapshot: str) -> StructType | None:
+    """The Spark schema ``snapshot`` reads with, as its commit recorded
+    it in ``_manifest.json`` (None: no manifest, or one written before
+    schemas were recorded; such a snapshot is read by inference)."""
+    manifest = read_manifest(snapshot)
+    if manifest is None or "schema" not in manifest:
+        return None
+    return StructType.fromJson(manifest["schema"])
+
+
+def publish_snapshot(
+    path: str,
+    staging: str,
+    inherit: bool = False,
+    schema: StructType | None = None,
+) -> str:
     """THE commit: turn ``staging`` (holding only the writer's new files
     and sidecars) into ``path``'s next immutable version dir.
 
@@ -161,7 +187,12 @@ def publish_snapshot(path: str, staging: str, inherit: bool = False) -> str:
        or ``_tombstones/`` (the writer stages the full key set).
     2. The head's ``_epoch_*`` ledger is copied forward on every commit.
     3. The manifest is written; inherited files reuse the head's entry,
-       so footers are read only for new files.
+       so footers are read only for new files.  It records the Spark
+       schema the snapshot reads with: the head's for ``inherit=True``
+       when the head recorded one, else the writer's ``schema``, which
+       must be what ``spark.read.parquet`` would infer for the version
+       dir (partition columns included).  With neither, none is
+       recorded and readers infer.
     4. Staging is renamed to the next version dir and the head symlink
        swapped to it (one atomic ``os.replace``).  Returns the version
        dir."""
@@ -171,6 +202,7 @@ def publish_snapshot(path: str, staging: str, inherit: bool = False) -> str:
         if inherit:
             manifest = read_manifest(head)
             entries = {e["path"]: e for e in manifest["files"]} if manifest else {}
+            schema = recorded_schema(head) or schema
             for f in data_files(head):
                 rel = os.path.relpath(f, head)
                 dst = os.path.join(staging, rel)
@@ -184,7 +216,7 @@ def publish_snapshot(path: str, staging: str, inherit: bool = False) -> str:
     save_manifest(staging, [
         known.get(os.path.relpath(f, staging)) or file_entry(staging, f)
         for f in data_files(staging)
-    ])
+    ], schema=None if schema is None else schema.jsonValue())
     # one-time migration of a legacy plain-dir head to a version dir
     if os.path.isdir(path) and not os.path.islink(path):
         nums = all_version_nums(path)
@@ -263,13 +295,18 @@ class ParquetMergeTable:
     def _read_snapshot_dir(
         self, snap: str, files: list[str] | None = None
     ) -> DataFrame:
-        """Read one immutable snapshot dir (or just its data ``files``):
+        """Read one immutable snapshot dir (or just its data ``files``)
+        with its recorded schema, so planning opens no parquet footer:
         strip hidden partition columns and apply merge-on-read tombstones
         (both pinned to this snapshot — later head swaps don't affect the
         plan)."""
         # basePath keeps hive-style partition columns resolvable when
         # reading an explicit file subset
-        df = self.spark.read.option("basePath", snap).parquet(*(files or [snap]))
+        reader = self.spark.read.option("basePath", snap)
+        schema = recorded_schema(snap)
+        if schema is not None:
+            reader = reader.schema(schema)
+        df = reader.parquet(*(files or [snap]))
         if self.partition_transforms:
             df = df.drop(*self.partition_transforms)
         tomb = tombstone_dir(snap)
@@ -339,6 +376,14 @@ class ParquetMergeTable:
         (the O(table) trap).  ``None`` records an empty log
         (physical-only rewrites like ``compact``)."""
         staging = staging_dir(self.path)
+        if changes is not None:
+            changes.write.parquet(changes_dir(staging))
+        self._publish(df, staging)
+
+    def _publish(self, df: DataFrame, staging: str) -> None:
+        """Write ``df`` as the snapshot's data files into ``staging``
+        (which may already hold the commit's change log) and publish it
+        with its read schema."""
         if self.partition_transforms:
             from tlcn_oer_lakehouse_spark.sinks.partitioning import (
                 transform_column,
@@ -365,13 +410,19 @@ class ParquetMergeTable:
                 df = df.repartitionByRange(
                     self.cluster_files, *[F.col(c) for c in self.cluster_by]
                 ).sortWithinPartitions(*self.cluster_by)
-        writer = df.write.mode("overwrite")
+        # append: staging may already hold the change log
+        writer = df.write.mode("append")
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(staging)
-        if changes is not None:
-            changes.write.mode("overwrite").parquet(changes_dir(staging))
-        publish_snapshot(self.path, staging)
+        # the data schema as written plus Spark's own partition-column
+        # inference from the staged dirs: a file listing, no job — and
+        # exactly what inference over the version dir returns
+        data = StructType(
+            [f for f in df.schema.fields if f.name not in self.partition_by]
+        )
+        schema = self.spark.read.schema(data).parquet(staging).schema
+        publish_snapshot(self.path, staging, schema=schema)
 
     # -- time travel -------------------------------------------------------
 
@@ -491,7 +542,10 @@ class ParquetMergeTable:
         # Delta pays for RESTORE with CDF enabled.
         changes = None
         if self.exists():
-            cur = self._align(self.read(), list(restored.columns), restored.schema)
+            cur = self._align(
+                self.read(), list(restored.columns),
+                {f.name: f.dataType for f in restored.schema.fields},
+            )
             n, o = restored.alias("n"), cur.alias("o")
             j = n.join(
                 o, F.col(f"n.{self.key}") == F.col(f"o.{self.key}"), "full_outer"
@@ -550,13 +604,12 @@ class ParquetMergeTable:
         return [self.ts_col] if self.ts_col and self.ts_col in df.columns else [self.key]
 
     @staticmethod
-    def _align(df: DataFrame, columns: list[str], schema) -> DataFrame:
-        """Project onto ``columns``; missing ones become typed nulls (K6)."""
-        by_name = {f.name: f for f in schema.fields}
+    def _align(df: DataFrame, columns: list[str], types: dict) -> DataFrame:
+        """Project onto ``columns``; missing ones become nulls typed by
+        ``types`` (column name → data type) (K6)."""
         return df.select(
             *[
-                F.col(c) if c in df.columns
-                else F.lit(None).cast(by_name[c].dataType).alias(c)
+                F.col(c) if c in df.columns else F.lit(None).cast(types[c]).alias(c)
                 for c in columns
             ]
         )
@@ -571,72 +624,86 @@ class ParquetMergeTable:
         NOT MATCHED BY SOURCE DELETE for head keys absent from
         ``current_keys`` (the reference's stale-row cleanup).  A key the
         source matches is never deleted, changed or not.  Returns
-        ``(upserted, deleted)``; ``(0, 0)`` means no write happened."""
-        if not self.exists():
-            if source is None:
-                return 0, 0
-            self.create(source)
-            return self.read().count(), 0
+        ``(upserted, deleted)``; ``(0, 0)`` means no write happened.
 
-        existing = self.read()
-        if source is None:
-            source = existing.limit(0)
-        batch = latest_wins(source, self.key, self._order_cols(source))
-        all_cols = list(existing.columns) + [
-            c for c in batch.columns if c not in existing.columns
-        ]
-        union_schema = batch.select(
-            *[
-                F.col(c) if c in batch.columns else F.lit(None).alias(c)
-                for c in all_cols
-            ]
-        ).schema
-        existing_aligned = self._align(existing, all_cols, union_schema)
-        batch_aligned = self._align(batch, all_cols, union_schema)
-
-        changed = changed_rows(
-            batch_aligned,
-            existing_aligned,
-            self.key,
-            fingerprint_col=self.fingerprint_col,
-            ts_col=self.ts_col,
-        ).persist()
-        cached = [changed]
-        n_changed, n_stale = changed.count(), 0
-        # the keys leaving the head, each tagged with the change row its
-        # old image becomes
-        gone = changed.select(self.key, F.lit("update_preimage").alias("_change_type"))
+        One keyed pass: the head rows, the latest-wins batch rows and
+        the ``current_keys`` rows are tagged and meet per key in one
+        window (one exchange), where every head and batch row is
+        classified once with :func:`change_predicate`: carried over
+        (``_change_type`` null), ``insert``, ``update_postimage``,
+        ``update_preimage`` or ``delete``.  That persisted frame is all
+        the commit reads: the change log is staged first and the counts
+        are observed on its write, then the snapshot is written from the
+        same cache, so the head is scanned once."""
+        exists = self.exists()
+        if source is None and (current_keys is None or not exists):
+            return 0, 0
+        head = self.read() if exists else None
+        batch = (
+            None if source is None
+            else latest_wins(source, self.key, self._order_cols(source))
+        )
+        sides = [df for df in (head, batch) if df is not None]
+        columns = list(dict.fromkeys(c for df in sides for c in df.columns))
+        # a column both sides hold keeps the head's type
+        types = {f.name: f.dataType for df in reversed(sides) for f in df.schema.fields}
+        HEAD, BATCH, KEYS = 0, 1, 2
+        tagged = [(head, HEAD), (batch, BATCH)]
         if current_keys is not None:
-            matched = current_keys.select(self.key).unionByName(source.select(self.key))
-            stale = deleted_keys(existing, matched, self.key).persist()
-            cached.append(stale)
-            n_stale = stale.count()
-            gone = gone.unionByName(stale.withColumn("_change_type", F.lit("delete")))
+            tagged.append((current_keys.select(self.key), KEYS))
+        rows = reduce(DataFrame.unionByName, [
+            self._align(df, columns, types).withColumn("__src", F.lit(tag))
+            for df, tag in tagged if df is not None
+        ])
+
+        w = Window.partitionBy(self.key)
+        src = F.col("__src")
+        compared = [F.col(self.fingerprint_col).alias("fp")]
+        if self.ts_col:
+            compared.append(F.col(self.ts_col).alias("ts"))
+
+        def image(tag: int):  # this key's head or batch row (null: absent)
+            return F.max(F.when(src == tag, F.struct(*compared))).over(w)
+
+        old, new = image(HEAD), image(BATCH)
+        # with no head every batch row is an insert; the predicate is only
+        # built against a head (its epoch default needs a timestamp ts_col)
+        changed = F.lit(False) if head is None else change_predicate(
+            new["fp"], old["fp"], *((new["ts"], old["ts"]) if self.ts_col else ())
+        )
+        change_type = (
+            F.when(src == BATCH, F.when(old.isNull(), "insert").otherwise("update_postimage"))
+            .when(new.isNotNull(), F.when(changed, "update_preimage"))
+        )
+        if current_keys is not None:
+            change_type = change_type.when(~F.max(src == KEYS).over(w), "delete")
+        keep = (src == HEAD) | ((src == BATCH) & (old.isNull() | changed))
+        classified = (
+            rows.select(*columns, change_type.alias("_change_type"), keep.alias("__keep"))
+            .filter("__keep")
+            .drop("__keep")
+            .persist()
+        )
+        ct = F.col("_change_type")
+        upsert = ct.isin("insert", "update_postimage")
+        counts = Observation()
+        staging = staging_dir(self.path)
         try:
-            if n_changed == n_stale == 0 and all_cols == list(existing.columns):
+            classified.filter(ct.isNotNull()).observe(
+                counts,
+                F.count(F.when(upsert, 1)).alias("upserted"),
+                F.count(F.when(ct == "delete", 1)).alias("deleted"),
+            ).write.parquet(changes_dir(staging))
+            upserted, deleted = counts.get["upserted"], counts.get["deleted"]
+            if upserted == deleted == 0 and head is not None and columns == head.columns:
+                shutil.rmtree(staging)
                 return 0, 0
-            merged = existing_aligned.join(gone, self.key, "left_anti").unionByName(
-                changed
+            self._publish(
+                classified.filter(ct.isNull() | upsert).drop("_change_type"), staging
             )
-            # CDF capture at O(changed): split the changed set into inserts
-            # vs updates by one keyed semi/anti join pair against the
-            # existing keys, and pull preimages and deleted rows with one
-            # join the other way — never a table diff.
-            existing_keys = existing_aligned.select(self.key)
-            changes = (
-                changed.join(existing_keys, self.key, "left_anti")
-                .withColumn("_change_type", F.lit("insert"))
-                .unionByName(
-                    changed.join(existing_keys, self.key, "semi")
-                    .withColumn("_change_type", F.lit("update_postimage"))
-                )
-                .unionByName(existing_aligned.join(gone, self.key))
-            )
-            self._write_snapshot(merged, changes=changes)
-            return n_changed, n_stale
+            return upserted, deleted
         finally:
-            for df in cached:
-                df.unpersist()
+            classified.unpersist()
 
     def merge_upsert(self, source: DataFrame) -> int:
         """MERGE WHEN MATCHED UPDATE / NOT MATCHED INSERT: :meth:`merge`

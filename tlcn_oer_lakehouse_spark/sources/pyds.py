@@ -35,7 +35,9 @@ Batch reader (`MergeTableDataSource`):
 Writers (`MergeTableDataSource.writer` / ``streamWriter``): tasks write
 Arrow batches as parquet files plus their ``insert`` change logs; the
 driver-side ``commit`` checks the append and publishes through the
-table's one commit, ``sinks/merge.py:publish_snapshot``.
+table's one commit, ``sinks/merge.py:publish_snapshot``, handing it the
+schema Spark will read the files with (the frame's schema made nullable,
+as Spark infers it from the pyarrow-written footers).
 
 Streaming reader (`MergeTableChangesDataSource`): offsets are COMMIT
 VERSIONS.  Each micro-batch reads the change logs of the versions in
@@ -72,7 +74,14 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
     WriterCommitMessage,
 )
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    LongType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 from tlcn_oer_lakehouse_spark.sinks.manifest import data_files, prune_files
 from tlcn_oer_lakehouse_spark.sinks.merge import (
@@ -272,6 +281,19 @@ def _write_task(iterator, out_dir: str, log_inserts: bool) -> _FileCommit:
     return _FileCommit(filename=name, columns=columns)
 
 
+def _inferred(dt: DataType) -> DataType:
+    """``dt`` as Spark infers it back from the parquet files these
+    writers write through pyarrow: every field, element and value
+    nullable, and no field metadata (the footer carries none)."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _inferred(f.dataType)) for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_inferred(dt.elementType))
+    if isinstance(dt, MapType):
+        return MapType(_inferred(dt.keyType), _inferred(dt.valueType))
+    return dt
+
+
 def _check_append(head: str, new_files: list[str]) -> None:
     """Reject an append the python writers cannot express: onto a
     snapshot with merge-on-read tombstones or a hive-partitioned layout,
@@ -314,11 +336,12 @@ class _MergeTableWriter(DataSourceArrowWriter):
     plain CTAS/append surface (reference K3/K8 sinks); keyed MERGE stays
     on ``ParquetMergeTable.merge_upsert``."""
 
-    def __init__(self, options: dict, overwrite: bool) -> None:
+    def __init__(self, options: dict, overwrite: bool, schema: StructType) -> None:
         if "path" not in options:
             raise ValueError("oer_mergetable write requires .option('path', ...)")
         self._path = options["path"]
         self._overwrite = overwrite
+        self._schema = _inferred(schema)
         self._staging = staging_dir(self._path)
         os.makedirs(self._staging, exist_ok=True)
         if not overwrite:
@@ -337,7 +360,8 @@ class _MergeTableWriter(DataSourceArrowWriter):
             _check_append(
                 head, [os.path.join(self._staging, m.filename) for m in written]
             )
-        publish_snapshot(self._path, self._staging, inherit=not self._overwrite)
+        publish_snapshot(self._path, self._staging, inherit=not self._overwrite,
+                         schema=self._schema)
 
     def abort(self, messages) -> None:
         import shutil
@@ -359,10 +383,11 @@ class _MergeTableStreamWriter(DataSourceStreamArrowWriter):
     commit carries it into every later snapshot, so ``vacuum()`` never
     deletes its only copy."""
 
-    def __init__(self, options: dict) -> None:
+    def __init__(self, options: dict, schema: StructType | None = None) -> None:
         if "path" not in options:
             raise ValueError("oer_mergetable stream write requires .option('path', ...)")
         self._path = options["path"]
+        self._schema = None if schema is None else _inferred(schema)
         # DETERMINISTIC pending dir: Spark instantiates this writer
         # independently on executors (write) and on the driver (commit),
         # so a per-instance random name would strand the task files.
@@ -399,7 +424,7 @@ class _MergeTableStreamWriter(DataSourceStreamArrowWriter):
                              (changes_dir(self._pending), changes_dir(staging))):
                 os.rename(os.path.join(src, m.filename), os.path.join(dst, m.filename))
         mark_epoch(staging, batchId)
-        publish_snapshot(self._path, staging, inherit=True)
+        publish_snapshot(self._path, staging, inherit=True, schema=self._schema)
 
     def abort(self, messages, batchId: int) -> None:
         self._drop_pending(messages)
@@ -425,10 +450,10 @@ class MergeTableDataSource(DataSource):
         return _MergeTableReader(dict(self.options))
 
     def writer(self, schema: StructType, overwrite: bool):
-        return _MergeTableWriter(dict(self.options), overwrite)
+        return _MergeTableWriter(dict(self.options), overwrite, schema)
 
     def streamWriter(self, schema: StructType, overwrite: bool):
-        return _MergeTableStreamWriter(dict(self.options))
+        return _MergeTableStreamWriter(dict(self.options), schema)
 
 
 # ---------------------------------------------------------------------------

@@ -150,17 +150,19 @@ def scd2_ingest(
             table.create(scd2_init(rows, ts))
             return
         dim = table.read()
-        # materialize off the table being overwritten (localCheckpoint —
-        # same lineage-cut as the components loop), then full refresh:
-        # SCD2 rewrites are row-level state transitions, not appends, and
-        # their change log is staged with the snapshot like any commit's
-        merged = scd2_merge(dim, rows, key, tracked_cols, ts).localCheckpoint()
+        # full refresh: SCD2 rewrites are row-level state transitions,
+        # not appends, and their change log is staged with the snapshot
+        # like any commit's.  ``dim`` reads an immutable version dir, so
+        # the rewrite needs no lineage cut; both frames are released
+        # when the trigger ends.
+        merged = scd2_merge(dim, rows, key, tracked_cols, ts).persist()
         changes = scd2_changes(dim, merged, ts).persist()
         try:
             if not changes.isEmpty():
                 table._write_snapshot(merged, changes=changes)
         finally:
             changes.unpersist()
+            merged.unpersist()
 
     return _foreach_batch(stream_df, checkpoint_dir, _merge)
 
