@@ -2,13 +2,17 @@
 an independent numpy BM25 + cosine fusion, across corpus rewrites,
 ``clearCache``, back-to-back rebuilds and concurrent requests; a warm
 request reads only a local relation of the scores and runs at most one
-Spark job; the index's BM25 agrees with the registry's Spark BM25."""
+Spark job; the index's BM25 agrees with the registry's Spark BM25; a
+rebuild locks only its own corpus."""
 
 from __future__ import annotations
 
 import math
 import re
+import sys
 import threading
+import time
+from types import SimpleNamespace
 
 import numpy as np
 import pyarrow as pa
@@ -216,3 +220,76 @@ def test_concurrent_requests_match_reference(spark, corpus):
     assert len(results) == len(queries)
     for terms, got in results:
         _assert_matches(got, _reference(corpus, terms))
+
+
+
+def _fake_index(monkeypatch, build) -> None:
+    """Serve ``corpus_index`` from empty index and lock tables, with
+    ``build`` in place of ``_build_index`` and a corpus's name as its
+    version."""
+    monkeypatch.setattr(retrieval, "_INDEXES", {})
+    monkeypatch.setattr(retrieval, "_INDEX_LOCKS", {})
+    monkeypatch.setattr(retrieval, "_corpus_version", lambda sf: (sf,))
+    monkeypatch.setattr(retrieval, "_build_index", build)
+
+
+def test_rebuild_blocks_only_its_own_corpus(monkeypatch):
+    """While corpus A's index is being built, a request for an already
+    built corpus B is served at once: the build lock is per corpus."""
+    building, release = threading.Event(), threading.Event()
+
+    def build(spark, sf, version):
+        if sf == "A":
+            building.set()
+            release.wait(30)
+        return SimpleNamespace(version=version)
+
+    _fake_index(monkeypatch, build)
+    b = retrieval.corpus_index(None, "B")
+    rebuild = threading.Thread(target=retrieval.corpus_index, args=(None, "A"))
+    rebuild.start()
+    try:
+        assert building.wait(10)
+        served = []
+        request = threading.Thread(
+            target=lambda: served.append(retrieval.corpus_index(None, "B")))
+        request.start()
+        request.join(5)
+        assert served == [b]
+    finally:
+        release.set()
+        rebuild.join(30)
+    assert not rebuild.is_alive()
+    assert retrieval._INDEXES["A"].version == ("A",)
+
+
+def test_first_requests_for_a_corpus_build_it_once(monkeypatch):
+    """More concurrent first requests for one corpus than cores, with a
+    short switch interval: they share one lock, so the index is built
+    once."""
+    builds = []
+
+    def build(spark, sf, version):
+        builds.append(sf)
+        time.sleep(0.01)
+        return SimpleNamespace(version=version)
+
+    _fake_index(monkeypatch, build)
+    start = threading.Barrier(16)
+
+    def request():
+        start.wait(10)
+        retrieval.corpus_index(None, "C")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        clients = [threading.Thread(target=request) for _ in range(16)]
+        for c in clients:
+            c.start()
+        for c in clients:
+            c.join(30)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(c.is_alive() for c in clients)
+    assert builds == ["C"]

@@ -1,8 +1,9 @@
 """The entry points that stay: the ``__spark_entry__.py`` contract
 (``entry``/``queries``/``oracle_sql``) and the command-line tools under
 ``tools/``, whose in-repo imports must still resolve — plus the module
-boundary that keeps the merge table's snapshot format inside ``sinks/``
-and the streaming sinks behind one runner."""
+boundary that keeps the merge table's snapshot format inside ``sinks/``,
+the streaming sinks behind one runner and every worker thread behind one
+job-group-inheriting helper."""
 
 from __future__ import annotations
 
@@ -172,3 +173,44 @@ def test_streaming_sinks_start_through_one_runner():
         and "available_now" in [a.arg for a in node.args.args + node.args.kwonlyargs]
     ]
     assert knobs == []
+
+
+# names that start an OS thread (or a pool of them) when called
+THREAD_STARTERS = {"Thread", "InheritableThread", "Timer", "ThreadPoolExecutor",
+                   "ProcessPoolExecutor", "start_new_thread"}
+
+
+def test_worker_threads_start_in_one_place():
+    """The package starts threads in exactly one place, the Silver commit
+    helper, and every target it hands its pool is wrapped by
+    ``inheritable_thread_target(spark)``: a thread that dropped the
+    caller's job group and local properties fails here."""
+    starts = [
+        (str(p.relative_to(PACKAGE)), node.lineno)
+        for p in sorted(PACKAGE.rglob("*.py"))
+        for node in ast.walk(ast.parse(p.read_text()))
+        if (node.id if isinstance(node, ast.Name) else getattr(node, "attr", None))
+        in THREAD_STARTERS
+    ]
+    medallion = ast.parse((PACKAGE / "pipelines" / "medallion.py").read_text())
+    fn = next(node for node in ast.walk(medallion)
+              if isinstance(node, ast.FunctionDef) and node.name == "_commit_concurrently")
+    assert len(starts) == 1, starts
+    assert starts[0][0] == "pipelines/medallion.py"
+    assert fn.lineno <= starts[0][1] <= fn.end_lineno
+
+    def wrapped(target: ast.expr) -> bool:
+        # inheritable_thread_target(<session>)(target)
+        return (isinstance(target, ast.Call) and isinstance(target.func, ast.Call)
+                and isinstance(target.func.func, ast.Name)
+                and target.func.func.id == "inheritable_thread_target"
+                and len(target.func.args) == 1)
+
+    handed = [
+        node for node in ast.walk(fn)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("submit", "map")
+    ]
+    assert handed and all(
+        h.func.attr == "submit" and wrapped(h.args[0]) for h in handed
+    ), [ast.unparse(h) for h in handed]

@@ -357,3 +357,129 @@ def test_snapshot_without_recorded_schema_still_reads(spark, tmp_path):
     assert t.merge_upsert(t.read().filter("id = 0").withColumn(
         "record_fingerprint", F.lit("x"))) == 1
     _assert_schema_recorded(spark, t.path)
+
+
+def _assert_changes_schema_recorded(spark, path):
+    """The head commit recorded its change log's read schema, exactly
+    what ``spark.read.parquet`` infers for its ``_changes/`` dir."""
+    import os
+
+    from tlcn_oer_lakehouse_spark.sinks.merge import changes_dir
+
+    snap = os.path.realpath(path)
+    recorded = recorded_schema(snap, "changes_schema")
+    assert recorded is not None
+    assert recorded == spark.read.parquet(changes_dir(snap)).schema
+
+
+def test_change_log_schema_recorded_by_every_writer(spark, tmp_path):
+    """Each writer that logs changes records the log's read schema:
+    ``ParquetMergeTable`` create, merge with a delete clause, a
+    schema-evolving merge, merge-on-read delete and rollback; an SCD2
+    stream commit; the Python DataSource append and stream writers."""
+    import datetime as dt
+
+    from pyspark.sql.types import (
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampType,
+    )
+
+    from tlcn_oer_lakehouse_spark.sources import pyds
+    from tlcn_oer_lakehouse_spark.streaming.ingest import scd2_ingest
+
+    t = ParquetMergeTable(spark, str(tmp_path / "t"), key="id", partition_by=("part",))
+    df = spark.range(40).select(
+        "id",
+        F.when(F.col("id") % 2 == 0, F.lit("2024-01-01")).otherwise(F.lit("p")).alias("part"),
+        F.array(F.col("id"), F.lit(None).cast("long")).alias("arr"),
+        F.md5(F.col("id").cast("string")).alias("record_fingerprint"),
+    )
+    for commit in (
+        lambda: t.create(df),
+        lambda: t.merge(df.filter("id < 5").withColumn("record_fingerprint", F.lit("x")),
+                        current_keys=df.filter("id < 30").select("id")),
+        lambda: t.merge_upsert(df.filter("id >= 35").withColumn("extra", F.col("id") * 2.5)),
+        lambda: t.delete_where_mor([("id", "<", 3)]),
+        lambda: t.rollback(t.versions()[0]),
+    ):
+        commit()
+        _assert_changes_schema_recorded(spark, t.path)
+
+    schema = StructType([StructField("id", LongType()), StructField("seg", StringType()),
+                         StructField("ts", TimestampType())])
+    landing, dim = str(tmp_path / "landing"), ParquetMergeTable(
+        spark, str(tmp_path / "dim"), key="id")
+    for i in range(2):
+        ts = dt.datetime(2024, 1, 1 + i)
+        spark.createDataFrame([(1, f"s{i}", ts), (10 + i, "new", ts)], schema).coalesce(
+            1).write.parquet(f"{landing}/b{i}")
+        q = scd2_ingest(spark.readStream.schema(schema).parquet(f"{landing}/*"), dim,
+                        key="id", tracked_cols=["seg"], ts_col="ts",
+                        checkpoint_dir=str(tmp_path / "ckpt"))
+        assert q.awaitTermination(120)
+        _assert_changes_schema_recorded(spark, dim.path)
+
+    pyds.register(spark)
+    path = str(tmp_path / "py")
+    rows = spark.createDataFrame(
+        [(1, "a", 0.5, dt.datetime(2024, 1, 1), dt.date(2024, 1, 2), ["x"])],
+        "id bigint not null, s string, d double, ts timestamp, day date, tags array<string>",
+    )
+    rows.write.format("oer_mergetable").option("path", path).mode("append").save()
+    _assert_changes_schema_recorded(spark, path)
+    w = pyds._MergeTableStreamWriter({"path": path}, rows.schema)
+    w.commit([w.write(iter(rows.toArrow().to_batches()))], 0)
+    _assert_changes_schema_recorded(spark, path)
+
+
+def test_read_changes_plans_without_a_job(spark, tmp_path):
+    """Planning ``read_changes`` over 4 versions starts no Spark job: each
+    log is read with its recorded schema, and a log of more files than
+    Spark lists serially in one read (``parallelPartitionDiscovery
+    .threshold``, 32) is read in groups that stay under it.  A log whose
+    commit recorded no schema is still read, by inference."""
+    from tlcn_oer_lakehouse_spark.sinks.manifest import data_files
+    from tlcn_oer_lakehouse_spark.sinks.merge import changes_dir, version_dir
+
+    t = ParquetMergeTable(spark, str(tmp_path / "t"), key="id")
+    base = spark.range(20).select("id", F.md5(F.col("id").cast("string"))
+                                  .alias("record_fingerprint"))
+    t.create(base)
+    for i in range(3):
+        t.merge_upsert(base.filter(f"id = {i}").withColumn("record_fingerprint", F.lit("x")))
+    wide = {"spark.sql.shuffle.partitions": "40",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    saved = {k: spark.conf.get(k) for k in wide}
+    try:
+        for k, v in wide.items():
+            spark.conf.set(k, v)
+        t.merge_upsert(spark.range(100, 500).select(
+            "id", F.md5(F.col("id").cast("string")).alias("record_fingerprint")))
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert len(data_files(changes_dir(version_dir(t.path, 4)))) > 32
+
+    sc = spark.sparkContext
+    sc.setJobGroup("plan-changes", "plan read_changes")
+    try:
+        feed = t.read_changes(0)
+        feed.schema  # noqa: B018 — planning only
+        jobs = sc.statusTracker().getJobIdsForGroup("plan-changes")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    want = sorted([(i + 1, i, c) for i in range(3)
+                   for c in ("update_postimage", "update_preimage")]
+                  + [(4, i, "insert") for i in range(100, 500)])
+    got = sorted((r._commit_version, r.id, r._change_type) for r in feed.collect())
+    assert got == want
+    snap = version_dir(t.path, 2)
+    manifest = read_manifest(snap)
+    save_manifest(snap, manifest["files"], schema=manifest["schema"])
+    assert recorded_schema(snap, "changes_schema") is None
+    assert sorted((r._commit_version, r.id, r._change_type)
+                  for r in t.read_changes(0).collect()) == want

@@ -21,11 +21,20 @@ Reference parity:
 Scale: one shuffle for the dedup window (keyed by resource_uid), one for
 each MERGE's change-join (same key — co-partitioned), one per gold
 aggregate.  Quality score, fingerprints and ids are scan-speed
-expressions; nothing touches the driver.
+expressions; nothing touches the driver.  A batch's Silver tables
+(resources, documents and, from landing, the quarantine) read none of
+each other's commits, so they commit concurrently
+(:func:`_commit_concurrently`): each MERGE is a few short jobs plus
+driver-side planning, and overlapping them keeps the cores busy that
+one MERGE alone leaves idle.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import Future, ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -165,34 +174,106 @@ class SilverWarehouse:
         )
 
 
-def run_silver(spark: SparkSession, bronze: DataFrame, warehouse_root: str) -> dict:
-    """Full silver pass. Returns per-table upsert/delete counts —
-    re-running on identical bronze input yields all zeros (idempotence
-    the reference guarantees via J1/P3; tested in test_medallion.py)."""
+def _commit_concurrently(spark: SparkSession, *commits: Callable) -> list:
+    """Run one batch's independent table commits at the same time and
+    return their results in commit order.  The first commit runs on the
+    caller's thread, each other one on a pool thread whose target
+    ``inheritable_thread_target(spark)`` wraps, so its jobs carry the
+    caller's job group and local properties.  Every commit runs to its
+    end before this returns or raises; if commits fail, the first
+    failure in commit order is raised, noting the others.  Each commit
+    stays atomic, so a failure leaves the other tables committed and a
+    replay of the batch is a no-op for them.  A commit may itself call
+    this (:func:`_run_silver` nests its two Silver commits in one).  The
+    package's one place that starts threads."""
+    first, *rest = commits
+    with ThreadPoolExecutor(len(rest) or 1, thread_name_prefix="commit") as pool:
+        # one wrap per target: each clones the caller's local properties,
+        # so the threads never share the Properties that a query mutates
+        pooled = [pool.submit(inheritable_thread_target(spark)(c)) for c in rest]
+        on_caller: Future = Future()
+        try:
+            on_caller.set_result(first())
+        except Exception as exc:  # noqa: BLE001 — raised below, in order
+            on_caller.set_exception(exc)
+    futures = [on_caller, *pooled]
+    errors = [f.exception() for f in futures if f.exception() is not None]
+    for later in errors[1:]:
+        errors[0].add_note(f"a concurrent commit also failed: {later!r}")
+    return [f.result() for f in futures]
+
+
+def _fill(spark: SparkSession, df: DataFrame) -> None:
+    """Fill the cache of the persisted ``df`` now, with the job the
+    adaptive planner would otherwise start from the first query that
+    scans it.  Concurrent commits that both scan ``df`` before it is
+    filled each start that job (and each of a commit's scans may start
+    its own), so a shared frame is filled before the commits that scan
+    it start; the batch runs the same jobs as when the commits queued.
+    A cache that is already filled starts no job.  Spark exposes the
+    cache's one fill job only through its cache manager."""
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    if cached.isDefined():
+        builder = cached.get().cachedRepresentation().cacheBuilder()
+        if not builder.isCachedColumnBuffersLoaded():
+            builder.cachedColumnBuffers().count()
+
+
+def _run_silver(
+    spark: SparkSession, bronze: DataFrame, warehouse_root: str, *also: Callable
+) -> tuple[dict, list]:
+    """:func:`run_silver`, with ``also`` (commits of the same batch to
+    other tables, which must not scan ``bronze`` unless it is filled)
+    committed alongside the two Silver tables: they start at once, the
+    Silver commits once ``normalized`` is filled.  Returns the Silver
+    counts and the results of ``also``."""
     wh = SilverWarehouse(spark, warehouse_root)
     normalized = latest_wins(
         normalize_bronze(bronze), "resource_uid", ["scraped_at"]
     ).persist()
 
-    n_resources = wh.resources.merge_upsert(normalized)
+    def documents() -> tuple[int, int]:
+        # deleted-asset propagation (J4/K2) is the documents MERGE's WHEN
+        # NOT MATCHED BY SOURCE DELETE clause, so upsert and delete are one
+        # commit: for resources present in this batch, any stored asset
+        # not in the current asset set is stale.  Keep = assets of
+        # untouched resources; MERGE never deletes this batch's own assets.
+        keep = (
+            wh.documents.read()
+            .join(normalized.select("resource_uid"), "resource_uid", "left_anti")
+            .select("asset_uid")
+            if wh.documents.exists() else None
+        )
+        return wh.documents.merge(explode_documents(normalized), current_keys=keep)
 
-    # deleted-asset propagation (J4/K2) is the documents MERGE's WHEN NOT
-    # MATCHED BY SOURCE DELETE clause, so upsert and delete are one
-    # commit: for resources present in this batch, any stored asset not
-    # in the current asset set is stale.  Keep = assets of untouched
-    # resources; MERGE never deletes this batch's own assets.
-    docs = explode_documents(normalized)
-    keep = (
-        wh.documents.read()
-        .join(normalized.select("resource_uid"), "resource_uid", "left_anti")
-        .select("asset_uid")
-        if wh.documents.exists() else None
-    )
-    n_docs, n_deleted = wh.documents.merge(docs, current_keys=keep)
+    def silver() -> list:
+        _fill(spark, normalized)  # both Silver commits scan it
+        return _commit_concurrently(
+            spark, lambda: wh.resources.merge_upsert(normalized), documents
+        )
 
-    normalized.unpersist()
+    try:
+        (n_resources, (n_docs, n_deleted)), *rest = _commit_concurrently(
+            spark, silver, *also
+        )
+    finally:
+        normalized.unpersist()
     return {"resources_upserted": n_resources, "documents_upserted": n_docs,
-            "documents_deleted": n_deleted}
+            "documents_deleted": n_deleted}, rest
+
+
+def run_silver(spark: SparkSession, bronze: DataFrame, warehouse_root: str) -> dict:
+    """Full silver pass. Returns per-table upsert/delete counts —
+    re-running on identical bronze input yields all zeros (idempotence
+    the reference guarantees via J1/P3; tested in test_medallion.py).
+
+    The normalized batch is persisted and filled once; the resources
+    upsert (on the caller's thread) and the documents MERGE (on a pool
+    thread) then commit concurrently, and it is released after both
+    have finished.
+    A failed commit is raised only then, so the other table's commit is
+    never cut short."""
+    return _run_silver(spark, bronze, warehouse_root)[0]
 
 
 def run_silver_from_landing(
@@ -210,17 +291,24 @@ def run_silver_from_landing(
     payload hash (idempotent under replay — re-reading the same broken
     file adds nothing) instead of failing the run; the reference aborts
     the whole silver pass on one malformed scrape (transformer.py S1 has
-    no badRecords handling)."""
+    no badRecords handling).
+
+    The parse is filled first; the quarantine commit, which scans only
+    it, then runs on a pool thread while :func:`run_silver` fills the
+    normalized batch and makes its two commits, so the batch's three
+    tables commit concurrently.  The cached parse is released once all
+    three have finished."""
     from tlcn_oer_lakehouse_spark.sources.bronze_json import (
         read_bronze_json,
         split_corrupt,
     )
 
     # split_corrupt caches the parse and ``cache()`` returns the same
-    # frame, so ``parsed`` is what to release once both merges are done.
+    # frame, so ``parsed`` is what to release once every merge is done.
     parsed = read_bronze_json(spark, landing_path, schema=schema, multiline=multiline)
     try:
         good, quarantine = split_corrupt(parsed)
+        _fill(spark, parsed)  # the quarantine and the Silver commits scan it
         q_rows = quarantine.select(
             F.sha2(F.col("_corrupt_record"), 256).alias("payload_hash"),
             F.col("_corrupt_record").alias("payload"),
@@ -235,8 +323,9 @@ def run_silver_from_landing(
             key="payload_hash",
             fingerprint_col="payload_hash",
         )
-        n_quarantined = qt.merge_upsert(q_rows)
-        stats = run_silver(spark, good, warehouse_root)
+        stats, (n_quarantined,) = _run_silver(
+            spark, good, warehouse_root, lambda: qt.merge_upsert(q_rows)
+        )
     finally:
         parsed.unpersist()
     stats["rows_quarantined"] = n_quarantined

@@ -326,7 +326,7 @@ class CorpusIndex:
 
 
 _NO_POSTINGS = (np.zeros(0, np.int64), np.zeros(0))
-_INDEX_LOCK = threading.Lock()
+_INDEX_LOCKS: dict[str, threading.Lock] = {}  # one per corpus directory
 _INDEXES: dict[str, CorpusIndex] = {}  # one per corpus directory
 
 
@@ -414,9 +414,12 @@ def _build_index(spark: SparkSession, sf: str, version: tuple) -> CorpusIndex:
 
 
 def corpus_index(spark: SparkSession, sf: str) -> CorpusIndex:
-    """The index of the corpus under ``sf`` as it is on disk now."""
+    """The index of the corpus under ``sf`` as it is on disk now.  Builds
+    are serialized per corpus: a rebuild holds only its own corpus's lock,
+    so requests for other corpora are served meanwhile."""
     version = _corpus_version(sf)
-    with _INDEX_LOCK:
+    # setdefault is atomic: concurrent first calls for ``sf`` share a lock
+    with _INDEX_LOCKS.setdefault(sf, threading.Lock()):
         idx = _INDEXES.get(sf)
         if idx is None or idx.version != version:
             idx = _INDEXES[sf] = _build_index(spark, sf, version)

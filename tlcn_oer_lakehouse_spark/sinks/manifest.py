@@ -135,15 +135,20 @@ def file_entry(snapshot_dir: str, path: str) -> dict:
 
 
 def save_manifest(
-    snapshot_dir: str, entries: list[dict], schema: dict | None = None
+    snapshot_dir: str,
+    entries: list[dict],
+    schema: dict | None = None,
+    changes_schema: dict | None = None,
 ) -> dict:
     """Persist ``entries`` as ``_manifest.json`` in ``snapshot_dir``
-    (tmp file + rename), with the snapshot's Spark read ``schema`` (a
-    ``StructType.jsonValue()``) when the writer knows it.  Returns the
-    manifest dict."""
+    (tmp file + rename), with the snapshot's Spark read ``schema`` and
+    its change log's ``changes_schema`` (each a ``StructType.jsonValue()``)
+    when the writer knows them.  Returns the manifest dict."""
     manifest: dict = {"files": entries}
     if schema is not None:
         manifest["schema"] = schema
+    if changes_schema is not None:
+        manifest["changes_schema"] = changes_schema
     tmp = os.path.join(snapshot_dir, MANIFEST_NAME + ".tmp")
     with open(tmp, "w") as fh:
         json.dump(manifest, fh)

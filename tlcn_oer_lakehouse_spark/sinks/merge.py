@@ -35,10 +35,11 @@ proportional to the changed rows, not the batch size.
 
 The snapshot format and its one commit.  Every snapshot is an immutable
 ``__v{n}`` directory: data files (hive dirs allowed), ``_manifest.json``
-(footer bounds, sinks/manifest.py, and the Spark schema the snapshot
-reads with, so a read plans without a parquet schema-inference job;
-a manifest without one is read by inference), and three sidecars — ``_changes/``
-(this commit's change log), ``_tombstones/`` (merge-on-read deleted
+(footer bounds, sinks/manifest.py, and the Spark schemas the snapshot
+and its change log read with, so neither read plans a parquet
+schema-inference job; a manifest without them is read by inference),
+and three sidecars — ``_changes/`` (this commit's change log),
+``_tombstones/`` (merge-on-read deleted
 keys) and ``_epoch_{id}`` markers (the stream writer's exactly-once
 ledger).  The table path is a symlink to the head version.  Only this
 module and sinks/manifest.py know that layout; every writer —
@@ -55,11 +56,15 @@ manifest, and swaps the head symlink with one atomic ``os.replace``:
 readers racing a commit see the old or the new snapshot, never a
 missing or half-written table.
 
-Isolation contract, stated honestly: SINGLE WRITER (no writer-writer
-conflict detection — concurrent commits can lose one writer's snapshot;
-Iceberg's optimistic commit protocol is the real fix), snapshot-isolated
-readers (a reader holding a DataFrame over a version dir is unaffected
-by later swaps until ``vacuum`` removes that version).
+Isolation contract, stated honestly: SINGLE WRITER PER TABLE (no
+writer-writer conflict detection — concurrent commits to one table can
+lose one writer's snapshot; Iceberg's optimistic commit protocol is the
+real fix).  Concurrent commits to different tables are supported: a
+commit touches only its own table's version, staging and link dirs, so
+the medallion pipeline commits a batch's Silver tables at the same time
+(pipelines/medallion.py).  Readers are snapshot-isolated (a reader
+holding a DataFrame over a version dir is unaffected by later swaps
+until ``vacuum`` removes that version).
 """
 
 from __future__ import annotations
@@ -71,7 +76,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from tlcn_oer_lakehouse_spark.operators.incremental import (
     change_predicate,
@@ -162,14 +167,30 @@ def epoch_committed(path: str, batch_id: int) -> bool:
     )
 
 
-def recorded_schema(snapshot: str) -> StructType | None:
+def recorded_schema(snapshot: str, key: str = "schema") -> StructType | None:
     """The Spark schema ``snapshot`` reads with, as its commit recorded
-    it in ``_manifest.json`` (None: no manifest, or one written before
-    schemas were recorded; such a snapshot is read by inference)."""
+    it in ``_manifest.json`` — under ``"changes_schema"`` for its change
+    log (None: no manifest, or one written before schemas were recorded;
+    such a snapshot or log is read by inference)."""
     manifest = read_manifest(snapshot)
-    if manifest is None or "schema" not in manifest:
+    if manifest is None or key not in manifest:
         return None
-    return StructType.fromJson(manifest["schema"])
+    return StructType.fromJson(manifest[key])
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` as Spark reads it back from the parquet it wrote: every
+    field, array element and map value nullable, field metadata kept."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 def publish_snapshot(
@@ -177,6 +198,7 @@ def publish_snapshot(
     staging: str,
     inherit: bool = False,
     schema: StructType | None = None,
+    changes_schema: StructType | None = None,
 ) -> str:
     """THE commit: turn ``staging`` (holding only the writer's new files
     and sidecars) into ``path``'s next immutable version dir.
@@ -192,7 +214,9 @@ def publish_snapshot(
        when the head recorded one, else the writer's ``schema``, which
        must be what ``spark.read.parquet`` would infer for the version
        dir (partition columns included).  With neither, none is
-       recorded and readers infer.
+       recorded and readers infer.  ``changes_schema``, the read schema
+       of the staged ``_changes/`` log, is recorded as given: a log
+       belongs to its commit, so nothing of it is inherited.
     4. Staging is renamed to the next version dir and the head symlink
        swapped to it (one atomic ``os.replace``).  Returns the version
        dir."""
@@ -216,7 +240,8 @@ def publish_snapshot(
     save_manifest(staging, [
         known.get(os.path.relpath(f, staging)) or file_entry(staging, f)
         for f in data_files(staging)
-    ], schema=None if schema is None else schema.jsonValue())
+    ], schema=None if schema is None else schema.jsonValue(),
+        changes_schema=None if changes_schema is None else changes_schema.jsonValue())
     # one-time migration of a legacy plain-dir head to a version dir
     if os.path.isdir(path) and not os.path.islink(path):
         nums = all_version_nums(path)
@@ -378,12 +403,12 @@ class ParquetMergeTable:
         staging = staging_dir(self.path)
         if changes is not None:
             changes.write.parquet(changes_dir(staging))
-        self._publish(df, staging)
+        self._publish(df, staging, changes)
 
-    def _publish(self, df: DataFrame, staging: str) -> None:
+    def _publish(self, df: DataFrame, staging: str, log: DataFrame | None) -> None:
         """Write ``df`` as the snapshot's data files into ``staging``
-        (which may already hold the commit's change log) and publish it
-        with its read schema."""
+        (which may already hold the commit's change log, the rows of
+        ``log``) and publish it with the read schemas of both."""
         if self.partition_transforms:
             from tlcn_oer_lakehouse_spark.sinks.partitioning import (
                 transform_column,
@@ -422,7 +447,10 @@ class ParquetMergeTable:
             [f for f in df.schema.fields if f.name not in self.partition_by]
         )
         schema = self.spark.read.schema(data).parquet(staging).schema
-        publish_snapshot(self.path, staging, schema=schema)
+        publish_snapshot(
+            self.path, staging, schema=schema,
+            changes_schema=None if log is None else _nullable(log.schema),
+        )
 
     # -- time travel -------------------------------------------------------
 
@@ -504,17 +532,27 @@ class ParquetMergeTable:
             raise ValueError(f"empty version range ({since_version}, {end}]")
         want = list(range(since_version + 1, end + 1))
         require_retained(self.path, want)
+        # more root paths than this in one read start a parallel-listing job
+        step = int(self.spark.conf.get(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold"))
         out: DataFrame | None = None
         for v in want:
-            cdir = changes_dir(self._version_dir(v))
-            if not os.path.isdir(cdir):
-                continue  # physical-only commit (compact) or pre-CDF
-            part = self.spark.read.parquet(cdir).withColumn(
-                "_commit_version", F.lit(v)
-            )
-            out = part if out is None else out.unionByName(
-                part, allowMissingColumns=True
-            )
+            snap = self._version_dir(v)
+            files = data_files(changes_dir(snap))
+            # (no files: physical-only commit (compact), pre-CDF or no rows)
+            # the log's files, not its ``_``-prefixed dir (which Spark
+            # counts as hidden), read with the schema the commit recorded
+            reader = self.spark.read
+            schema = recorded_schema(snap, "changes_schema")
+            if schema is not None:
+                reader = reader.schema(schema)
+            for i in range(0, len(files), step):
+                part = reader.parquet(*files[i:i + step]).withColumn(
+                    "_commit_version", F.lit(v)
+                )
+                out = part if out is None else out.unionByName(
+                    part, allowMissingColumns=True
+                )
         if out is None:
             # range held only physical-only commits: empty feed with the
             # table's schema + CDF columns
@@ -689,7 +727,8 @@ class ParquetMergeTable:
         counts = Observation()
         staging = staging_dir(self.path)
         try:
-            classified.filter(ct.isNotNull()).observe(
+            log = classified.filter(ct.isNotNull())
+            log.observe(
                 counts,
                 F.count(F.when(upsert, 1)).alias("upserted"),
                 F.count(F.when(ct == "delete", 1)).alias("deleted"),
@@ -699,7 +738,8 @@ class ParquetMergeTable:
                 shutil.rmtree(staging)
                 return 0, 0
             self._publish(
-                classified.filter(ct.isNull() | upsert).drop("_change_type"), staging
+                classified.filter(ct.isNull() | upsert).drop("_change_type"),
+                staging, log,
             )
             return upserted, deleted
         finally:
@@ -764,13 +804,13 @@ class ParquetMergeTable:
             all_keys = new_keys
         staging = staging_dir(self.path)
         all_keys.write.mode("overwrite").parquet(tombstone_dir(staging))
-        doomed.withColumn("_change_type", F.lit("delete")).write.mode(
-            "overwrite"
-        ).parquet(changes_dir(staging))
+        log = doomed.withColumn("_change_type", F.lit("delete"))
+        log.write.mode("overwrite").parquet(changes_dir(staging))
         new_keys.unpersist()
         # inherited files keep their manifest entries: a tombstone only
         # removes rows, never widens a file's range
-        publish_snapshot(self.path, staging, inherit=True)
+        publish_snapshot(self.path, staging, inherit=True,
+                         changes_schema=_nullable(log.schema))
         return n_new
 
 

@@ -79,6 +79,7 @@ from pyspark.sql.types import (
     DataType,
     LongType,
     MapType,
+    StringType,
     StructField,
     StructType,
 )
@@ -294,6 +295,14 @@ def _inferred(dt: DataType) -> DataType:
     return dt
 
 
+def _logged(schema: StructType | None) -> StructType | None:
+    """The read schema of the insert log ``_write_task`` writes next to
+    files of ``schema`` (already :func:`_inferred`)."""
+    return None if schema is None else StructType(
+        schema.fields + [StructField("_change_type", StringType())]
+    )
+
+
 def _check_append(head: str, new_files: list[str]) -> None:
     """Reject an append the python writers cannot express: onto a
     snapshot with merge-on-read tombstones or a hive-partitioned layout,
@@ -361,7 +370,8 @@ class _MergeTableWriter(DataSourceArrowWriter):
                 head, [os.path.join(self._staging, m.filename) for m in written]
             )
         publish_snapshot(self._path, self._staging, inherit=not self._overwrite,
-                         schema=self._schema)
+                         schema=self._schema,
+                         changes_schema=None if self._overwrite else _logged(self._schema))
 
     def abort(self, messages) -> None:
         import shutil
@@ -424,7 +434,8 @@ class _MergeTableStreamWriter(DataSourceStreamArrowWriter):
                              (changes_dir(self._pending), changes_dir(staging))):
                 os.rename(os.path.join(src, m.filename), os.path.join(dst, m.filename))
         mark_epoch(staging, batchId)
-        publish_snapshot(self._path, staging, inherit=True, schema=self._schema)
+        publish_snapshot(self._path, staging, inherit=True, schema=self._schema,
+                         changes_schema=_logged(self._schema))
 
     def abort(self, messages, batchId: int) -> None:
         self._drop_pending(messages)
