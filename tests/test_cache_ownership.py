@@ -148,7 +148,7 @@ def test_scd2_ingest_releases_its_frames(spark, tmp_path):
         TimestampType,
     )
 
-    from tlcn_oer_lakehouse_spark.sinks.merge import ParquetMergeTable
+    from tlcn_oer_lakehouse_spark.sinks.merge import ParquetMergeTable, head_version
     from tlcn_oer_lakehouse_spark.streaming.ingest import scd2_ingest
 
     schema = StructType([StructField("id", LongType()), StructField("seg", StringType()),
@@ -164,5 +164,5 @@ def test_scd2_ingest_releases_its_frames(spark, tmp_path):
                         key="id", tracked_cols=["seg"], ts_col="ts",
                         checkpoint_dir=str(tmp_path / "ckpt"))
         assert q.awaitTermination(120)
-        assert table._head_version() == i
+        assert head_version(table.path) == i
         assert not _persisted_ids(spark) - before, f"drain {i}"

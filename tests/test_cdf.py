@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tlcn_oer_lakehouse_spark.sinks.merge import ParquetMergeTable
+from tlcn_oer_lakehouse_spark.sinks.merge import ParquetMergeTable, all_version_nums, head_version
 
 
 def _fp(df):
@@ -32,7 +32,7 @@ def _feed(t, since, end=None):
 def test_create_logs_inserts(spark, tmp_path):
     t = _table(spark, tmp_path)
     t.create(_fp(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "val"])))
-    head = t._head_version()
+    head = head_version(t.path)
     assert _feed(t, head - 1) == [
         (head, "insert", 1, "a"),
         (head, "insert", 2, "b"),
@@ -42,12 +42,12 @@ def test_create_logs_inserts(spark, tmp_path):
 def test_upsert_splits_insert_update_and_skips_noops(spark, tmp_path):
     t = _table(spark, tmp_path)
     t.create(_fp(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "val"])))
-    v0 = t._head_version()
+    v0 = head_version(t.path)
     # id=1 unchanged (no-op must NOT appear), id=2 modified, id=3 new
     t.merge_upsert(
         _fp(spark.createDataFrame([(1, "a"), (2, "B"), (3, "c")], ["id", "val"]))
     )
-    v1 = t._head_version()
+    v1 = head_version(t.path)
     assert _feed(t, v0) == [
         (v1, "insert", 3, "c"),
         (v1, "update_postimage", 2, "B"),
@@ -58,9 +58,9 @@ def test_upsert_splits_insert_update_and_skips_noops(spark, tmp_path):
 def test_merge_delete_logs_full_rows(spark, tmp_path):
     t = _table(spark, tmp_path)
     t.create(_fp(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], ["id", "val"])))
-    v0 = t._head_version()
+    v0 = head_version(t.path)
     t.merge_delete(spark.createDataFrame([(1,), (3,)], ["id"]))
-    v1 = t._head_version()
+    v1 = head_version(t.path)
     # id=2 is stale (absent from current keys) -> deleted, with payload
     assert _feed(t, v0) == [(v1, "delete", 2, "b")]
 
@@ -70,7 +70,7 @@ def _seeded(spark, tmp_path, name):
     t.create(_fp(spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c"), (4, "d")], ["id", "val"]
     )))
-    return t, t._head_version()
+    return t, head_version(t.path)
 
 
 def _canon(df):
@@ -96,8 +96,8 @@ def test_merge_equals_upsert_then_delete_in_one_version(spark, tmp_path, evolve)
     one, v1 = _seeded(spark, tmp_path, "one")
     assert one.merge(source(), current_keys=keys) == (2, 2)
 
-    assert two._head_version() == v2 + 2
-    assert one._head_version() == v1 + 1
+    assert head_version(two.path) == v2 + 2
+    assert head_version(one.path) == v1 + 1
     assert _canon(one.read()) == _canon(two.read())
     assert _canon(one.read_changes(v1)) == _canon(two.read_changes(v2))
 
@@ -108,7 +108,7 @@ def test_merge_never_deletes_a_key_the_source_matches(spark, tmp_path):
     t, v0 = _seeded(spark, tmp_path, "t")
     src = _fp(spark.createDataFrame([(1, "a"), (2, "B"), (5, "e")], ["id", "val"]))
     assert t.merge(src, current_keys=spark.createDataFrame([(3,)], ["id"])) == (2, 1)
-    v1 = t._head_version()
+    v1 = head_version(t.path)
     assert v1 == v0 + 1
     assert sorted((r.id, r.val) for r in t.read().collect()) == [
         (1, "a"), (2, "B"), (3, "c"), (5, "e"),
@@ -129,7 +129,7 @@ def test_merge_noop_writes_nothing(spark, tmp_path):
     assert t.merge(same) == (0, 0)
     assert t.merge(current_keys=all_keys) == (0, 0)
     assert t.merge() == (0, 0)
-    assert t._head_version() == v0
+    assert head_version(t.path) == v0
 
 
 _T0, _T1 = "2024-01-01 00:00:00", "2024-01-02 00:00:00"
@@ -160,7 +160,7 @@ def test_merge_classifies_fingerprint_and_ts_edges(spark, tmp_path, old, new, ch
         )
 
     t.create(rows(*old, "a"))
-    v0 = t._head_version()
+    v0 = head_version(t.path)
     assert t.merge(rows(*new, "b")) == ((1, 0) if changed else (0, 0))
     assert not [d for d in os.listdir(tmp_path) if "__staging_" in d]
     if changed:
@@ -170,16 +170,16 @@ def test_merge_classifies_fingerprint_and_ts_edges(spark, tmp_path, old, new, ch
         ]
         assert [(r.id, r.val) for r in t.read().collect()] == [(1, "b")]
     else:
-        assert t._head_version() == v0
-        assert t._all_version_nums() == [v0]
+        assert head_version(t.path) == v0
+        assert all_version_nums(t.path) == [v0]
 
 
 def test_mor_delete_logs_and_does_not_inherit_old_log(spark, tmp_path):
     t = _table(spark, tmp_path)
     t.create(_fp(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "val"])))
-    v0 = t._head_version()
+    v0 = head_version(t.path)
     t.delete_where_mor([("id", "=", 2)])
-    v1 = t._head_version()
+    v1 = head_version(t.path)
     assert _feed(t, v0) == [(v1, "delete", 2, "b")]
     # the hardlinked snapshot must not replay v0's insert log as v1's
     types = {r._change_type for r in t.read_changes(v0).collect()}
@@ -189,7 +189,7 @@ def test_mor_delete_logs_and_does_not_inherit_old_log(spark, tmp_path):
 def test_compact_is_physical_only(spark, tmp_path):
     t = _table(spark, tmp_path)
     t.create(_fp(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "val"])))
-    v0 = t._head_version()
+    v0 = head_version(t.path)
     t.compact()
     feed = t.read_changes(v0)
     assert feed.count() == 0
@@ -199,10 +199,10 @@ def test_compact_is_physical_only(spark, tmp_path):
 def test_multi_version_range_and_commit_versions(spark, tmp_path):
     t = _table(spark, tmp_path)
     t.create(_fp(spark.createDataFrame([(1, "a")], ["id", "val"])))
-    v0 = t._head_version()
+    v0 = head_version(t.path)
     t.merge_upsert(_fp(spark.createDataFrame([(2, "b")], ["id", "val"])))
     t.merge_upsert(_fp(spark.createDataFrame([(1, "A")], ["id", "val"])))
-    v2 = t._head_version()
+    v2 = head_version(t.path)
     feed = _feed(t, v0)
     assert (v0 + 1, "insert", 2, "b") in feed
     assert (v2, "update_postimage", 1, "A") in feed
@@ -214,7 +214,7 @@ def test_multi_version_range_and_commit_versions(spark, tmp_path):
 def test_vacuumed_range_raises(spark, tmp_path):
     t = _table(spark, tmp_path)
     t.create(_fp(spark.createDataFrame([(1, "a")], ["id", "val"])))
-    v0 = t._head_version()
+    v0 = head_version(t.path)
     for i in range(3):
         t.merge_upsert(_fp(spark.createDataFrame([(10 + i, "x")], ["id", "val"])))
     t.vacuum(keep_last=1)
@@ -232,7 +232,7 @@ def test_incremental_view_maintenance_equals_recompute(spark, tmp_path):
         "record_fingerprint", F.md5(F.col("amount").cast("string"))
     )
     t.create(df0)
-    v0 = t._head_version()
+    v0 = head_version(t.path)
     view = {
         r.grp: r.s
         for r in t.read().groupBy("grp").agg(F.sum("amount").alias("s")).collect()
@@ -275,11 +275,11 @@ def test_incremental_view_maintenance_equals_recompute(spark, tmp_path):
 def test_rollback_feed_folds_to_restored_state(spark, tmp_path):
     t = _table(spark, tmp_path)
     t.create(_fp(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "val"])))
-    v0 = t._head_version()
+    v0 = head_version(t.path)
     t.merge_upsert(_fp(spark.createDataFrame([(2, "B"), (3, "c")], ["id", "val"])))
-    v1 = t._head_version()
+    v1 = head_version(t.path)
     t.rollback(v0)
-    v2 = t._head_version()
+    v2 = head_version(t.path)
     feed = _feed(t, v1, v2)
     # restoring v0 undoes the upsert: 3 disappears, 2 reverts
     assert feed == [
@@ -318,7 +318,7 @@ def test_changes_stream_tails_the_feed(spark, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    head = t._head_version()
+    head = head_version(t.path)
     batch_feed = sorted(
         (r._commit_version, r._change_type, r.id, r.val)
         for r in t.read_changes(head - 2, head).collect()
@@ -336,7 +336,7 @@ def test_changes_stream_tails_the_feed(spark, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    v_del = t._head_version()
+    v_del = head_version(t.path)
     assert sorted(seen) == [(v_del, "delete", 3, "c")]
 
 
@@ -387,7 +387,7 @@ def test_gold_fact_maintained_from_silver_cdf_scans_only_delta(spark, tmp_path):
     ])
     run_silver(spark, b1, root)
     wh = SilverWarehouse(spark, root)
-    v_res, v_doc = wh.resources._head_version(), wh.documents._head_version()
+    v_res, v_doc = head_version(wh.resources.path), head_version(wh.documents.path)
 
     fact_path = str(tmp_path / "gold_fact")
     fact_frame(wh.resources.read(), wh.documents.read()).write.parquet(fact_path)
@@ -412,7 +412,7 @@ def test_gold_fact_maintained_from_silver_cdf_scans_only_delta(spark, tmp_path):
         "documents_deleted": 1,   # A's stale a_1
     }
     # the upsert and the stale-asset delete are ONE documents commit
-    assert wh.documents._head_version() == v_doc + 1
+    assert head_version(wh.documents.path) == v_doc + 1
 
     def sign():
         return F.when(

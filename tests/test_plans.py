@@ -222,6 +222,19 @@ def test_dedup_family_never_all_pairs(spark, name):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_hard_negatives_reads_documents_through_the_bm25_frame(spark):
+    """td_hard_negatives labels documents from the tf columns of the BM25
+    core's persisted frame: it reads that frame exactly where
+    q1_bm25_topk does (the stats aggregate and the scoring pass), opens
+    documents nowhere else (each FileScan is the one under a cached
+    relation) and joins nothing back."""
+    plan = audit.simple_plan(_build(spark, "td_hard_negatives"))
+    core = audit.simple_plan(_build(spark, "q1_bm25_topk"))
+    assert plan.count("InMemoryTableScan") == core.count("InMemoryTableScan") == 2, plan
+    assert plan.count("FileScan parquet") == plan.count("InMemoryRelation") == 2, plan
+    assert "BroadcastHashJoin" not in plan and "SortMergeJoin" not in plan, plan
+
+
 # Queries whose plans legitimately contain a BroadcastNestedLoopJoin:
 # every one broadcasts an O(1)-row frame (corpus-level stats, a query
 # vector, a scalar-subquery aggregate) or a tiny dimension against the

@@ -10,7 +10,7 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
-from tlcn_oer_lakehouse_spark.sinks.merge import ParquetMergeTable
+from tlcn_oer_lakehouse_spark.sinks.merge import ParquetMergeTable, all_version_nums, head_version
 from tlcn_oer_lakehouse_spark.sources import pyds
 
 
@@ -143,7 +143,7 @@ def test_changes_stream_matches_batch_feed(spark, tmp_path):
     )
     q.awaitTermination(120)
     got = spark.read.parquet(out)
-    head = max(v for v in t._all_version_nums())
+    head = max(v for v in all_version_nums(t.path))
     # default start is -1 (exclusive): the feed includes commit v0 —
     # the CREATE's 1000 insert rows — like the batch feed opened at -1
     want = t.read_changes(-1, None)
@@ -219,7 +219,7 @@ def test_writer_append_adds_rows_and_logs_cdf_inserts(spark, tmp_path):
     t = ParquetMergeTable(spark, path, key="id")
     assert t.read().count() == 520
     # the append commit's change log carries exactly the new rows
-    head = t._all_version_nums()[-1]
+    head = all_version_nums(t.path)[-1]
     feed = t.read_changes(head - 1, head)
     assert feed.count() == 20
     assert {r["_change_type"] for r in feed.select("_change_type").distinct().collect()} == {"insert"}
@@ -240,6 +240,93 @@ def test_writer_overwrite_keeps_time_travel(spark, tmp_path):
     t = ParquetMergeTable(spark, path, key="id")
     assert t.read().count() == 50
     assert t.read_version(t.versions()[0]).count() == 300
+
+
+def _fold(rows, cols):
+    """Fold change rows into the table state they describe, commit by
+    commit: a commit's deletes and preimages remove the rows they carry
+    (which must be present, value for value) before its inserts and
+    postimages add theirs (whose keys must be absent)."""
+    state: dict = {}
+    for v in sorted({r["_commit_version"] for r in rows}):
+        commit = [r for r in rows if r["_commit_version"] == v]
+        for r in commit:
+            if r["_change_type"] in ("delete", "update_preimage"):
+                assert state.pop(r["id"]) == tuple(r[c] for c in cols), r
+        for r in commit:
+            if r["_change_type"] in ("insert", "update_postimage"):
+                assert r["id"] not in state, r
+                state[r["id"]] = tuple(r[c] for c in cols)
+    return state
+
+
+def _assert_feeds_fold_to_head(spark, tmp_path, t):
+    """``read_changes`` from before the first commit and the
+    ``oer_mergetable_changes`` stream both fold to the head's rows."""
+    cols = ["id", "grp", "val", "record_fingerprint"]
+    head = {r["id"]: tuple(r[c] for c in cols) for r in t.read().collect()}
+    assert _fold(t.read_changes(-1).collect(), cols) == head
+    seen: list = []
+    q = (spark.readStream.format("oer_mergetable_changes").option("path", t.path)
+         .load().writeStream.foreachBatch(lambda df, _: seen.extend(df.collect()))
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    assert _fold(seen, cols) == head
+
+
+def test_writer_overwrite_logs_replaced_rows_and_new_rows(spark, tmp_path):
+    """An overwrite logs the rows it replaces as ``delete`` and its own
+    rows as ``insert`` — also for keys it rewrites with new values — so
+    every fold over the change feed reaches the head."""
+    path = str(tmp_path / "wf")
+    _write(_df(spark, 5), path, "append")
+    # ids 3 and 4 rewritten with new values, 100-102 new
+    new = spark.createDataFrame([(i,) for i in (3, 4, 100, 101, 102)], "id bigint").select(
+        "id", (F.col("id") % 7).alias("grp"),
+        (F.col("id") * 5).cast("double").alias("val"),
+        F.md5(F.col("id").cast("string")).alias("record_fingerprint"),
+    )
+    _write(new, path, "overwrite")
+    t = ParquetMergeTable(spark, path, key="id")
+    assert sorted(r.id for r in t.read().collect()) == [3, 4, 100, 101, 102]
+    head = head_version(t.path)
+    feed = Counter(r["_change_type"] for r in t.read_changes(head - 1).collect())
+    assert feed == {"delete": 5, "insert": 5}
+    _assert_feeds_fold_to_head(spark, tmp_path, t)
+
+
+def test_writer_overwrite_of_partitioned_mor_table_logs_visible_rows(spark, tmp_path):
+    """Overwriting a hive-partitioned table with merge-on-read tombstones
+    logs only its visible rows as deletes, with the partition column
+    read from the directories; without the ``key`` option the commit
+    refuses (the tombstones cannot be applied) and the table stays."""
+    t = ParquetMergeTable(spark, str(tmp_path / "wp"), key="id", partition_by=("grp",))
+    t.create(_df(spark, 40))
+    t.delete_where_mor([("id", "<", 6)])
+    with pytest.raises(Exception, match="tombstones"):
+        _write(_df(spark, 3), t.path, "overwrite")
+    assert t.read().count() == 34
+    _df(spark, 3).write.format("oer_mergetable").option("path", t.path).option(
+        "key", "id").mode("overwrite").save()
+    head = head_version(t.path)
+    deleted = t.read_changes(head - 1).filter("_change_type = 'delete'")
+    assert sorted(r.id for r in deleted.collect()) == list(range(6, 40))
+    _assert_feeds_fold_to_head(spark, tmp_path, t)
+
+
+def test_changes_stream_schema_spans_an_overwrite_that_changes_columns(spark, tmp_path):
+    """An overwrite with other columns logs the replaced rows at the old
+    schema and its own at the new one; the change stream's schema holds
+    both, as the batch feed's does."""
+    path = str(tmp_path / "wc")
+    _write(spark.range(3).select("id", F.lit("a").alias("old")), path, "append")
+    _write(spark.range(3).select("id", F.lit(1.5).alias("new")), path, "overwrite")
+    want = {"id", "old", "new", "_change_type", "_commit_version"}
+    t = ParquetMergeTable(spark, path, key="id")
+    assert set(t.read_changes(-1).columns) == want
+    stream = spark.readStream.format("oer_mergetable_changes").option("path", path).load()
+    assert set(stream.columns) == want
 
 
 def test_writer_append_schema_mismatch_raises(spark, tmp_path):
@@ -296,7 +383,7 @@ def test_stream_writer_appends_with_exactly_once_epochs(spark, tmp_path):
     run(ckpt)
     assert t.read().count() == 110
     # CDF: every commit logged its inserts
-    head = t._all_version_nums()[-1]
+    head = all_version_nums(t.path)[-1]
     # the first stream commit IS version 0, so open the feed before it
     feed = t.read_changes(-1, head)
     assert feed.count() == 110

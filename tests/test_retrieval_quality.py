@@ -15,7 +15,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tlcn_oer_lakehouse_spark.operators.ranking import bm25_rank
+from tlcn_oer_lakehouse_spark.queries.retrieval import bm25_score_frame
 from tlcn_oer_lakehouse_spark.queries.textops import COPY_OFFSET
 
 
@@ -24,23 +24,6 @@ def corpus(spark, sf_dir):
     from tlcn_oer_lakehouse_spark.queries.textops import augmented_corpus
 
     return augmented_corpus(spark, sf_dir).persist()
-
-
-def test_bm25_operator_matches_registered_query(spark, sf_dir):
-    """The generic operator and the registered q1_bm25_topk must score
-    identically on the registered query's fixed terms — no logic drift."""
-    from tlcn_oer_lakehouse_spark.queries.base import load
-    from tlcn_oer_lakehouse_spark.queries.retrieval import QUERY_TERMS, bm25_scores
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    generic = {
-        r.doc_id: round(r.bm25_raw, 9)
-        for r in bm25_rank(docs, list(QUERY_TERMS)).collect()
-    }
-    registered = {
-        r.doc_id: round(r.bm25_raw, 9) for r in bm25_scores(spark, sf_dir).collect()
-    }
-    assert generic == registered
 
 
 def test_self_retrieval_recall_at_10_vector_path(spark, corpus):
@@ -94,7 +77,7 @@ def test_bm25_precision_on_discriminative_term(spark, corpus):
     document for that query must actually contain it — precision@10
     1.0, above the reference's P@5 0.82 target."""
     top10 = (
-        bm25_rank(corpus, ["dup"])
+        bm25_score_frame(corpus, ("doc_id",), "text", ("dup",))
         .orderBy(F.col("bm25_raw").desc(), F.col("doc_id").asc())
         .limit(10)
     )
@@ -127,37 +110,6 @@ def test_hierarchical_indexed_chunk_reduction(spark):
     )
     reduction = 1 - indexed / n_flat
     assert reduction >= 0.70, f"indexed-chunk reduction {reduction:.0%}"
-
-
-def test_batch_bm25_matches_per_query(spark, sf_dir):
-    """One-job batched BM25 == the per-query operator for every query,
-    on matching docs (non-matching docs score 0 and are absent from the
-    batch output by construction)."""
-    from tlcn_oer_lakehouse_spark.operators.ranking import bm25_rank_batch
-    from tlcn_oer_lakehouse_spark.queries.base import load
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    qs = [(1, ["table", "merge"]), (2, ["dup"]), (3, ["spark", "shuffle", "sort"])]
-    queries = spark.createDataFrame(qs, "query_id long, terms array<string>")
-
-    batch = bm25_rank_batch(docs, queries, top_k=None)
-    got = {(r.query_id, r.doc_id): r.bm25 for r in batch.collect()}
-
-    for qid, terms in qs:
-        solo = {
-            r.doc_id: round(r.bm25_raw, 9)
-            for r in bm25_rank(docs, terms).collect()
-        }
-        for doc_id, score in solo.items():
-            if score != 0.0:
-                assert got[(qid, doc_id)] == pytest.approx(score, abs=2e-9), (qid, doc_id)
-            else:
-                assert (qid, doc_id) not in got
-    # top-k form: ranks are per-query and bounded
-    topk = bm25_rank_batch(docs, queries, top_k=5)
-    per_q = {r.query_id for r in topk.collect()}
-    assert per_q == {1, 2, 3}
-    assert topk.groupBy("query_id").count().agg(F.max("count")).first()[0] <= 5
 
 
 def test_rag_serve_ann_recall_vs_dense(spark):

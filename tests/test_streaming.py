@@ -14,7 +14,7 @@ from pyspark.sql.types import (
 )
 
 from tlcn_oer_lakehouse_spark.queries.base import load_events
-from tlcn_oer_lakehouse_spark.sinks.merge import ParquetMergeTable
+from tlcn_oer_lakehouse_spark.sinks.merge import ParquetMergeTable, head_version
 from tlcn_oer_lakehouse_spark.streaming.ingest import (
     enrich_stream,
     interval_join_streams,
@@ -154,10 +154,10 @@ def test_empty_landed_file_commits_nothing(spark, tmp_path, sink):
         return q
 
     _drain("b1", [(1, "a", "f1", dt.datetime(2024, 1, 1))])
-    head = table._head_version()
+    head = head_version(table.path)
     q = _drain("b2", [])
     assert [p["numInputRows"] for p in q.recentProgress] == [0]
-    assert table._head_version() == head
+    assert head_version(table.path) == head
 
 
 def test_replayed_batch_is_noop(spark, tmp_path):
@@ -447,7 +447,7 @@ def test_scd2_streaming_dimension(spark, tmp_path):
     _land([(1, "basic", t1), (2, "pro", t1)], "b1")
     _run()
     assert table.read().filter("is_current").count() == 2
-    v1, before = table._head_version(), canon(table.read().collect())
+    v1, before = head_version(table.path), canon(table.read().collect())
 
     # batch 2: customer 1 upgrades -> old version closes at t2
     _land([(1, "pro", t2)], "b2")
@@ -474,11 +474,11 @@ def test_scd2_streaming_dimension(spark, tmp_path):
 
     # same batch content re-landed as a new file: fingerprints match ->
     # chain unchanged (no double-open), and the replay commits nothing
-    v2 = table._head_version()
+    v2 = head_version(table.path)
     _land([(1, "pro", t2)], "b3")
     _run()
     assert table.read().count() == 3
-    assert table._head_version() == v2
+    assert head_version(table.path) == v2
 
 
 def test_scd2_ingest_stream_equals_batch(spark, tmp_path):
@@ -954,7 +954,7 @@ def test_silver_ingest_replay_is_idempotent(spark, tmp_path):
         docs = sorted(map(str, wh.documents.read().collect()))
         return res, docs
 
-    v_res0, v_doc0 = wh.resources._head_version(), wh.documents._head_version()
+    v_res0, v_doc0 = head_version(wh.resources.path), head_version(wh.documents.path)
     full0 = state()
     # the re-send already advanced its bookkeeping ts when b2 landed
     # (ts-strictly-newer counts as a change on the ts_col table), so
@@ -972,5 +972,5 @@ def test_silver_ingest_replay_is_idempotent(spark, tmp_path):
     for ckpt in ("ckpt_replay1", "ckpt_replay2"):
         ingest(ckpt)
         assert state() == full0, ckpt
-        assert wh.resources._head_version() == v_res0, ckpt
-        assert wh.documents._head_version() == v_doc0, ckpt
+        assert head_version(wh.resources.path) == v_res0, ckpt
+        assert head_version(wh.documents.path) == v_doc0, ckpt

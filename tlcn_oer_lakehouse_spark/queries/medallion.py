@@ -391,7 +391,7 @@ def medallion_incremental(spark: SparkSession, sf: str) -> DataFrame:
     every run; here the stored ``fact_source_coverage`` is instead
     UPDATED by folding one silver commit's change feed — the exact rows
     ``ParquetMergeTable`` logs at write time and replays via
-    ``read_changes`` (sinks/merge.py:343):
+    ``ParquetMergeTable.read_changes``:
 
     - resources: ``changed_rows`` (inserts ∪ update postimages, sign +1)
       and their existing preimages (sign −1);
@@ -553,7 +553,7 @@ SPECS = [
         MEDALLION_INCREMENTAL_SQL,
         ref="gold_analytics.py:776-805 full-refreshes gold each run; this "
             "is the O(delta) replacement — fold one silver commit's change "
-            "feed (sinks/merge.py:343 read_changes shape) into the stored "
+            "feed (the ParquetMergeTable.read_changes shape) into the stored "
             "fact; oracle = full recompute over the merged state (IVM "
             "correctness property)",
         doc="gold coverage fact maintained by folding a silver CDF batch",

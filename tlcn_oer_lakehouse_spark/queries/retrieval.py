@@ -29,12 +29,15 @@ and each request ships N_embedded rows to Spark as a local relation.
 A corpus larger than that would instead keep the index as a cached,
 partitioned (doc_id, dl, tf, vec_raw) frame, score each request as a
 column expression over it and fold the lexical max back as a 1-row
-broadcast.  The one-shot registry BM25 queries keep the original shape:
-per-term tf as a JVM-side array expression over each row's tokens, and
-corpus stats as a 1-row aggregate broadcast back.  For batched query
-workloads (many queries at once) the request shape generalizes: explode
-the query set, broadcast-join terms, aggregate scores by (query_id,
-doc_id).
+broadcast.  The one-shot registry queries score through one Spark BM25
+core, :func:`bm25_score_frame` (per-term tf as a JVM-side array
+expression over each row's tokens, corpus stats as a 1-row aggregate
+broadcast back), one vector branch (:func:`_vec_scores`) and one
+max-norm fusion (:func:`_max_norm_fusion`); the numpy
+:func:`lexical_scores` is the serve path's copy of the core, held to it
+by a drift test.  No batched scorer is kept: a workload of many queries
+at once would explode the query set, join its terms to the postings and
+aggregate scores by (query_id, doc_id), and nothing here runs one.
 """
 
 from __future__ import annotations
@@ -47,7 +50,7 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tlcn_oer_lakehouse_spark.functions.text import tokens
@@ -64,20 +67,6 @@ def _tf(toks, term: str):
     lambda default would make PySpark treat it as a two-arg
     (value, index) higher-order lambda — hence the factory.)"""
     return F.size(F.filter(toks, lambda t: t == F.lit(term)))
-
-
-def _scored_docs(
-    spark: SparkSession, sf: str, terms: tuple[str, ...] = QUERY_TERMS
-) -> DataFrame:
-    """documents + per-query-term tf columns + doc length."""
-    docs = load(spark, sf, "documents").select("doc_id", "text")
-    toks = tokens(F.col("text"))
-    out = docs.select(
-        "doc_id",
-        F.size(toks).alias("dl"),
-        *[_tf(toks, term).alias(f"tf_{i}") for i, term in enumerate(terms)],
-    )
-    return out
 
 
 def bm25_score_frame(
@@ -98,7 +87,8 @@ def bm25_score_frame(
     Stats (N, avgdl, df_t) are a 1-row aggregate broadcast back — the
     plan is scan → scalar agg (tiny) → broadcast nested loop join →
     per-row math. avgdl is computed as exact-int SUM(dl)/COUNT so both
-    engines divide the same two integers.  Returns id_cols + bm25_raw.
+    engines divide the same two integers.  Returns id_cols + dl + tf_i
+    (one per term, in ``terms`` order) + bm25_raw.
 
     The tokenized frame (ids + dl + per-term tf — a handful of ints per
     row) is PERSISTED: the stats aggregate and the scoring join both
@@ -108,7 +98,10 @@ def bm25_score_frame(
     the frame and ``terms``, so a rebuild reuses the cached entry, but
     every distinct term set caches one more frame: per-request callers
     use :func:`fused_scores`, which scores from the driver-local corpus
-    index with the same conventions (:func:`lexical_scores`).
+    index with the same conventions (:func:`lexical_scores`).  The
+    frame's ``dl`` and ``tf_i`` columns are kept in the output, so a
+    caller that needs them (:func:`hard_negatives`) reads the cached
+    frame instead of tokenizing the corpus again.
     """
     toks = tokens(F.col(text_col))
     scored = frame.select(
@@ -133,7 +126,7 @@ def bm25_score_frame(
         idf = F.log(F.lit(1.0) + (F.col("n_docs") - df + 0.5) / (df + 0.5))
         norm = tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * F.col("dl") / avgdl))
         score = score + idf * norm
-    return j.select(*id_cols, score.alias("bm25_raw"))
+    return j.select(*scored.columns, score.alias("bm25_raw"))
 
 
 def bm25_scores(
@@ -222,28 +215,23 @@ def hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
 
     Plan shape inherits bm25_scores: scan → 1-row stats broadcast →
     per-row math → one per-label rank window over the labeled score
-    table.  At 100 TB with a real query SET the window partitions by
-    (query_id, label) — same algebra, keyed by query."""
+    table; the deep-term count reads the tf columns of the same cached
+    frame, so the corpus is tokenized once and nothing joins back.  At
+    100 TB with a real query SET the window partitions by (query_id,
+    label) — same algebra, keyed by query."""
     from pyspark.sql import Window
 
-    s = bm25_scores(spark, sf)
-    terms_present = _scored_docs(spark, sf).select(
+    n_deep_terms = sum(
+        F.when(F.col(f"tf_{i}") >= 2, 1).otherwise(0)
+        for i in range(len(QUERY_TERMS))
+    ).cast("int")
+    labeled = bm25_scores(spark, sf).select(
         "doc_id",
-        sum(
-            F.when(F.col(f"tf_{i}") >= 2, 1).otherwise(0)
-            for i in range(len(QUERY_TERMS))
-        ).cast("int").alias("n_deep_terms"),
-    )
-    labeled = (
-        s.join(terms_present, "doc_id")
-        .select(
-            "doc_id",
-            F.round(F.col("bm25_raw"), 9).alias("bm25"),
-            "n_deep_terms",
-            F.when(F.col("n_deep_terms") == len(QUERY_TERMS), "positive")
-            .otherwise("hard_negative")
-            .alias("label"),
-        )
+        F.round(F.col("bm25_raw"), 9).alias("bm25"),
+        n_deep_terms.alias("n_deep_terms"),
+        F.when(n_deep_terms == len(QUERY_TERMS), "positive")
+        .otherwise("hard_negative")
+        .alias("label"),
     )
     w = Window.partitionBy("label").orderBy(
         F.col("bm25").desc(), F.col("doc_id").asc()
@@ -282,6 +270,44 @@ FROM ranked
 WHERE rank <= CASE WHEN label = 'positive' THEN 5 ELSE 15 END
 ORDER BY label, rank
 """
+
+
+def _query_embedding(emb: DataFrame) -> DataFrame:
+    """The request embedding: ``emb``'s vec_id 0 row as a 1-row
+    (q_emb) frame."""
+    return emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
+
+
+def _vec_scores(emb: DataFrame, cand: DataFrame | None = None) -> DataFrame:
+    """The vector branch, (doc_id, vec_raw): vec_raw = cosine vs the
+    request embedding + 1 (ES ``cosineSimilarity(...)+1``,
+    chatbot_api.py:233), for every embedding or, given ``cand``, only
+    for the vec_ids among its doc_ids (a broadcast semi-join ahead of the
+    cosine).  documents.doc_id and embeddings.vec_id share one id
+    space."""
+    rows = emb if cand is None else emb.join(
+        F.broadcast(cand), emb["vec_id"] == cand["doc_id"], "leftsemi"
+    )
+    return rows.crossJoin(F.broadcast(_query_embedding(emb))).select(
+        F.col("vec_id").alias("doc_id"),
+        (cosine(F.col("embedding"), F.col("q_emb")) + F.lit(1.0)).alias("vec_raw"),
+    )
+
+
+def _max_norm_fusion(joined: DataFrame, w_lex: Column) -> DataFrame:
+    """Q3 fusion in Spark (chatbot_api.py:244-274): ``joined`` (doc_id,
+    bm25_raw, vec_raw, ...) plus fused_raw = w_lex·bm25/max_lex +
+    (1 − w_lex)·vec/max_vec, each branch max-normalized over ``joined``
+    through a 1-row broadcast of the two maxima."""
+    maxes = joined.agg(
+        F.max("bm25_raw").alias("max_lex"), F.max("vec_raw").alias("max_vec")
+    )
+    fused = w_lex * (F.col("bm25_raw") / F.col("max_lex")) + (
+        F.lit(1.0) - w_lex
+    ) * (F.col("vec_raw") / F.col("max_vec"))
+    return joined.crossJoin(F.broadcast(maxes)).select(
+        *joined.columns, fused.alias("fused_raw")
+    )
 
 
 def hybrid_search(spark: SparkSession, sf: str) -> DataFrame:
@@ -373,12 +399,7 @@ def _build_index(spark: SparkSession, sf: str, version: tuple) -> CorpusIndex:
     shuffle), collect them with each document's ``vec_raw`` (null when
     it has no embedding) in one Arrow transfer, and invert them into
     postings on the driver."""
-    emb = load(spark, sf, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
-    vec = emb.crossJoin(F.broadcast(q)).select(
-        F.col("vec_id").alias("doc_id"),
-        (cosine(F.col("embedding"), F.col("q_emb")) + F.lit(1.0)).alias("vec_raw"),
-    )
+    vec = _vec_scores(load(spark, sf, "embeddings"))
     t = _term_counts(load(spark, sf, "documents")).join(vec, "doc_id", "left").toArrow()
     tf = t.column("tf").combine_chunks()
     embedded = pc.is_valid(t.column("vec_raw")).to_numpy()
@@ -724,27 +745,15 @@ def hybrid_lang_weighted(spark: SparkSession, sf: str) -> DataFrame:
     (chatbot_api.py:37-40): EN docs fuse 0.5 lexical / 0.5 vector, every
     other language 0.2 / 0.8 (the reference's VI weighting, generalized:
     BM25 is least trustworthy off-English)."""
-    lex = bm25_scores(spark, sf)
     docs = load(spark, sf, "documents").select("doc_id", "lang")
-    emb = load(spark, sf, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
-    vec = emb.crossJoin(F.broadcast(q)).select(
-        F.col("vec_id").alias("doc_id"),
-        (cosine(F.col("embedding"), F.col("q_emb")) + F.lit(1.0)).alias("vec_raw"),
-    )
-    joined = lex.join(vec, "doc_id").join(docs, "doc_id")
-    maxes = joined.agg(
-        F.max("bm25_raw").alias("max_lex"), F.max("vec_raw").alias("max_vec")
+    joined = (
+        bm25_scores(spark, sf)
+        .join(_vec_scores(load(spark, sf, "embeddings")), "doc_id")
+        .join(docs, "doc_id")
     )
     w_lex = F.when(F.col("lang") == "en", 0.5).otherwise(0.2)
-    fused = joined.crossJoin(F.broadcast(maxes)).select(
-        "doc_id",
-        "lang",
-        F.round(
-            w_lex * (F.col("bm25_raw") / F.col("max_lex"))
-            + (F.lit(1.0) - w_lex) * (F.col("vec_raw") / F.col("max_vec")),
-            9,
-        ).alias("hybrid_score"),
+    fused = _max_norm_fusion(joined, w_lex).select(
+        "doc_id", "lang", F.round(F.col("fused_raw"), 9).alias("hybrid_score")
     )
     return fused.orderBy(F.col("hybrid_score").desc(), F.col("doc_id").asc()).limit(10)
 
@@ -805,16 +814,9 @@ def hybrid_rrf(spark: SparkSession, sf: str) -> DataFrame:
         .orderBy(F.col("s").desc(), F.col("doc_id").asc())
         .limit(_RRF_DEPTH)
     )
-    emb = load(spark, sf, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
     vec_top = (
-        emb.crossJoin(F.broadcast(q))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.round(
-                cosine(F.col("embedding"), F.col("q_emb")) + F.lit(1.0), 9
-            ).alias("s"),
-        )
+        _vec_scores(load(spark, sf, "embeddings"))
+        .select("doc_id", F.round(F.col("vec_raw"), 9).alias("s"))
         .orderBy(F.col("s").desc(), F.col("doc_id").asc())
         .limit(_RRF_DEPTH)
     )

@@ -45,7 +45,11 @@ from tlcn_oer_lakehouse_spark.queries.retrieval import (
     QUERY_TERMS,
     _bm25_score_expr_sql,
     _fused_sql_core,
+    _max_norm_fusion,
+    _query_embedding,
+    _vec_scores,
     bm25_score_frame,
+    bm25_scores,
     fused_scores,
 )
 
@@ -266,14 +270,11 @@ ANN_NPROBE = 4
 def rag_serve_ann(spark: SparkSession, sf: str) -> DataFrame:
     """ANN-backed RAG serve: Q4 → (Q1 top-K ∥ IVF-ANN top-K) → exact
     union re-rank → Q3 fuse → shared Q5/Q6 tail."""
-    from tlcn_oer_lakehouse_spark.functions.vectors import cosine
     from tlcn_oer_lakehouse_spark.operators.similarity import ivf_topk
-    from tlcn_oer_lakehouse_spark.queries.retrieval import bm25_scores
 
     terms = preprocess_query(RAW_QUERY)  # Q4
     lex = bm25_scores(spark, sf, terms)
     emb = load(spark, sf, "embeddings")
-    query = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
     centroids = emb.filter(F.col("vec_id").between(100, 107)).select(
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("centroid_vec"),
@@ -285,30 +286,12 @@ def rag_serve_ann(spark: SparkSession, sf: str) -> DataFrame:
     )
     vec_k = ivf_topk(
         emb.filter(F.col("vec_id") != 0), "vec_id", "embedding",
-        centroids, query, k=ANN_CAND_K, n_probe=ANN_NPROBE,
+        centroids, _query_embedding(emb), k=ANN_CAND_K, n_probe=ANN_NPROBE,
     ).select(F.col("vec_id").alias("doc_id"))
     cand = lex_k.unionByName(vec_k).distinct()
 
     # exact re-rank on the O(K) union: both branches scored exactly
-    vec_scores = (
-        emb.join(F.broadcast(cand), emb["vec_id"] == cand["doc_id"], "leftsemi")
-        .crossJoin(F.broadcast(query))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            (cosine(F.col("embedding"), F.col("q_emb")) + F.lit(1.0)).alias("vec_raw"),
-        )
-    )
-    joined = lex.join(vec_scores, "doc_id")
-    maxes = joined.agg(
-        F.max("bm25_raw").alias("max_lex"), F.max("vec_raw").alias("max_vec")
-    )
-    fused = joined.crossJoin(F.broadcast(maxes)).select(
-        "doc_id",
-        (
-            F.lit(0.5) * (F.col("bm25_raw") / F.col("max_lex"))
-            + F.lit(0.5) * (F.col("vec_raw") / F.col("max_vec"))
-        ).alias("fused_raw"),
-    )
+    fused = _max_norm_fusion(lex.join(_vec_scores(emb, cand), "doc_id"), F.lit(0.5))
     return _pack_context(spark, sf, fused)
 
 

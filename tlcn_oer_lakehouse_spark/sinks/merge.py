@@ -267,9 +267,6 @@ def _filtered(df: DataFrame, predicates: list[Predicate]) -> DataFrame:
 
 
 class ParquetMergeTable:
-    TOMBSTONE_DIR = _TOMBSTONES
-    CHANGES_DIR = _CHANGES
-
     def __init__(
         self,
         spark: SparkSession,
@@ -373,20 +370,10 @@ class ParquetMergeTable:
 
     # -- writes -----------------------------------------------------------
 
-    def _version_dir(self, n: int) -> str:
-        return version_dir(self.path, n)
-
-    def _all_version_nums(self) -> list[int]:
-        return all_version_nums(self.path)
-
-    def _head_version(self) -> int | None:
-        """Version number the head symlink currently points at."""
-        return head_version(self.path)
-
     def versions(self) -> list[int]:
         """Retained (non-head) snapshot version numbers, oldest first."""
-        head = self._head_version()
-        return [v for v in self._all_version_nums() if v != head]
+        head = head_version(self.path)
+        return [v for v in all_version_nums(self.path) if v != head]
 
     def _write_snapshot(self, df: DataFrame, changes: DataFrame | None = None) -> None:
         """Copy-on-write commit: write ``df`` as the whole new snapshot
@@ -457,7 +444,7 @@ class ParquetMergeTable:
     def read_version(self, version: int) -> DataFrame:
         """Read a retained historical snapshot (Iceberg
         ``VERSION AS OF`` analog)."""
-        d = self._version_dir(version)
+        d = version_dir(self.path, version)
         if not os.path.isdir(d):
             raise ValueError(f"version {version} not retained for {self.path}")
         return self._read_snapshot_dir(d)
@@ -481,7 +468,7 @@ class ParquetMergeTable:
         )
         return {
             "path": self.path,
-            "head_version": self._head_version(),
+            "head_version": head_version(self.path),
             "n_data_files": len(files),
             "n_rows": sum(e["rows"] for e in files),
             "total_bytes": total_bytes,
@@ -497,11 +484,11 @@ class ParquetMergeTable:
     def history(self) -> list[dict]:
         """Snapshot log: retained versions plus the current head."""
         entries = [
-            {"version": v, "path": self._version_dir(v), "is_current": False}
+            {"version": v, "path": version_dir(self.path, v), "is_current": False}
             for v in self.versions()
         ]
         if self.exists():
-            head = self._head_version()
+            head = head_version(self.path)
             if head is None:  # legacy plain-dir head
                 head = (self.versions()[-1] + 1) if entries else 0
             entries.append({"version": head, "path": self.path, "is_current": True})
@@ -524,7 +511,7 @@ class ParquetMergeTable:
         write time by each mutator, never reconstructed by diffing
         snapshots.  Versions vacuumed out of retention raise — a silent
         gap would corrupt every downstream fold."""
-        head = self._head_version()
+        head = head_version(self.path)
         if head is None and self.exists():
             raise ValueError("legacy plain-dir table has no change feed")
         end = head if end_version is None else end_version
@@ -537,7 +524,7 @@ class ParquetMergeTable:
             "spark.sql.sources.parallelPartitionDiscovery.threshold"))
         out: DataFrame | None = None
         for v in want:
-            snap = self._version_dir(v)
+            snap = version_dir(self.path, v)
             files = data_files(changes_dir(snap))
             # (no files: physical-only commit (compact), pre-CDF or no rows)
             # the log's files, not its ``_``-prefixed dir (which Spark
@@ -566,7 +553,7 @@ class ParquetMergeTable:
         """Restore a historical snapshot as the new head (Iceberg
         ``rollback_to_snapshot`` analog).  The displaced head is itself
         retained, so a rollback is undoable."""
-        d = self._version_dir(version)
+        d = version_dir(self.path, version)
         if not os.path.isdir(d):
             raise ValueError(f"version {version} not retained for {self.path}")
         # the version dir itself is untouched by the head swap, so the
@@ -629,7 +616,7 @@ class ParquetMergeTable:
         vs = self.versions()
         drop = vs[:-keep_last] if keep_last > 0 else vs
         for v in drop:
-            shutil.rmtree(self._version_dir(v))
+            shutil.rmtree(version_dir(self.path, v))
         return len(drop)
 
     def create(self, df: DataFrame) -> None:

@@ -34,10 +34,11 @@ Batch reader (`MergeTableDataSource`):
 
 Writers (`MergeTableDataSource.writer` / ``streamWriter``): tasks write
 Arrow batches as parquet files plus their ``insert`` change logs; the
-driver-side ``commit`` checks the append and publishes through the
-table's one commit, ``sinks/merge.py:publish_snapshot``, handing it the
-schema Spark will read the files with (the frame's schema made nullable,
-as Spark infers it from the pyarrow-written footers).
+driver-side ``commit`` checks an append (or logs the rows an overwrite
+replaces as ``delete``) and publishes through the table's one commit,
+``sinks/merge.py:publish_snapshot``, handing it the schema Spark will
+read the files with (the frame's schema made nullable, as Spark infers
+it from the pyarrow-written footers).
 
 Streaming reader (`MergeTableChangesDataSource`): offsets are COMMIT
 VERSIONS.  Each micro-batch reads the change logs of the versions in
@@ -92,6 +93,7 @@ from tlcn_oer_lakehouse_spark.sinks.merge import (
     head_version,
     mark_epoch,
     publish_snapshot,
+    recorded_schema,
     require_retained,
     staging_dir,
     tombstone_dir,
@@ -124,6 +126,25 @@ def _resolve_snapshot(path: str, version: str | None) -> str:
     return snap
 
 
+def _tombstone_keys(snapshot: str, key: str | None) -> set | None:
+    """The merge-on-read deleted keys of ``snapshot`` (None: it has no
+    tombstones); a snapshot with tombstones needs its merge ``key``."""
+    import pyarrow.parquet as pq
+
+    tomb_dir = tombstone_dir(snapshot)
+    if not os.path.isdir(tomb_dir):
+        return None
+    if not key:
+        raise ValueError(
+            "snapshot has merge-on-read tombstones; pass "
+            ".option('key', <merge key>) so the reader can anti-filter"
+        )
+    keys: set = set()
+    for f in data_files(tomb_dir):
+        keys.update(pq.read_table(f, columns=[key]).column(key).to_pylist())
+    return keys
+
+
 @dataclass
 class _FilePartition(InputPartition):
     path: str
@@ -147,24 +168,8 @@ class _MergeTableReader(DataSourceReader):
                               partitioning="hive")
         self._arrow_schema = dataset.schema
         self._predicates: list[tuple[str, str, object]] = []
-        self._tombstone_keys, self._key = self._load_tombstones(options)
-
-    def _load_tombstones(self, options: dict):
-        import pyarrow.parquet as pq
-
-        tomb_dir = tombstone_dir(self._snapshot)
-        if not os.path.isdir(tomb_dir):
-            return None, None
-        key = options.get("key")
-        if not key:
-            raise ValueError(
-                "snapshot has merge-on-read tombstones; pass "
-                ".option('key', <merge key>) so the reader can anti-filter"
-            )
-        keys: set = set()
-        for f in data_files(tomb_dir):
-            keys.update(pq.read_table(f, columns=[key]).column(key).to_pylist())
-        return keys, key
+        self._key = options.get("key")
+        self._tombstone_keys = _tombstone_keys(self._snapshot, self._key)
 
     # -- planning ---------------------------------------------------------
 
@@ -237,17 +242,27 @@ class _MergeTableReader(DataSourceReader):
 # ---------------------------------------------------------------------------
 
 
+def _tagged(batch, change_type: str):
+    """``batch`` plus a ``_change_type`` column holding ``change_type``."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        list(batch.columns) + [pa.array([change_type] * batch.num_rows, type=pa.string())],
+        schema=batch.schema.append(pa.field("_change_type", pa.string())),
+    )
+
+
 @dataclass
 class _FileCommit(WriterCommitMessage):
     filename: str
     columns: tuple
 
 
-def _write_task(iterator, out_dir: str, log_inserts: bool) -> _FileCommit:
+def _write_task(iterator, out_dir: str) -> _FileCommit:
     """Executor side of both writers: stream one task's Arrow batches into
-    one parquet file under ``out_dir`` and, with ``log_inserts``, the same
-    rows tagged ``_change_type='insert'`` into ``out_dir``'s change log,
-    so CDF consumers see appended rows with no driver-side data movement."""
+    one parquet file under ``out_dir`` and the same rows tagged
+    ``_change_type='insert'`` into ``out_dir``'s change log, so CDF
+    consumers see written rows with no driver-side data movement."""
     import uuid
 
     import pyarrow as pa
@@ -260,20 +275,12 @@ def _write_task(iterator, out_dir: str, log_inserts: bool) -> _FileCommit:
         if writer is None:
             columns = tuple(batch.schema.names)
             writer = pq.ParquetWriter(os.path.join(out_dir, name), batch.schema)
-            if log_inserts:
-                changes_writer = pq.ParquetWriter(
-                    os.path.join(changes_dir(out_dir), name),
-                    batch.schema.append(pa.field("_change_type", pa.string())),
-                )
-        writer.write_batch(batch)
-        if changes_writer is not None:
-            changes_writer.write_batch(
-                pa.RecordBatch.from_arrays(
-                    list(batch.columns)
-                    + [pa.array(["insert"] * batch.num_rows, type=pa.string())],
-                    schema=changes_writer.schema,
-                )
+            changes_writer = pq.ParquetWriter(
+                os.path.join(changes_dir(out_dir), name),
+                batch.schema.append(pa.field("_change_type", pa.string())),
             )
+        writer.write_batch(batch)
+        changes_writer.write_batch(_tagged(batch, "insert"))
     for w in (writer, changes_writer):
         if w is not None:
             w.close()
@@ -335,29 +342,71 @@ def _check_append(head: str, new_files: list[str]) -> None:
             )
 
 
+def _log_replaced(head: str, staging: str, key: str | None) -> StructType | None:
+    """Log the rows an overwrite replaces: every visible row of snapshot
+    ``head`` goes into ``staging``'s change log as a ``delete``, streamed
+    through one pyarrow dataset (hive partition columns included,
+    tombstoned keys left out as the reader leaves them out).  Batches are
+    cast to the Arrow form of the schema the head reads with, so the log
+    reads back at the head's types.  Returns the log's read schema (None:
+    the head has no rows).  O(table), like the diff
+    ``ParquetMergeTable.rollback`` logs for RESTORE."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pds
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+
+    dataset = pds.dataset(head, format="parquet", partitioning="hive")
+    schema = recorded_schema(head) or from_arrow_schema(
+        dataset.schema, prefer_timestamp_ntz=True
+    )
+    target = to_arrow_schema(schema)
+    tombstones = _tombstone_keys(head, key)
+    flt = None if tombstones is None else ~pc.field(key).isin(
+        pa.array(sorted(tombstones))
+    )
+    writer = None
+    for batch in dataset.to_batches(columns=schema.fieldNames(), filter=flt):
+        if not batch.num_rows:
+            continue
+        if writer is None:
+            writer = pq.ParquetWriter(
+                os.path.join(changes_dir(staging), f"part-{uuid.uuid4().hex}.parquet"),
+                target.append(pa.field("_change_type", pa.string())),
+            )
+        writer.write_batch(_tagged(batch.cast(target), "delete"))
+    if writer is None:
+        return None
+    writer.close()
+    return _logged(_inferred(schema))
+
+
 class _MergeTableWriter(DataSourceArrowWriter):
     """Append/overwrite writer.  Each TASK writes one parquet file into
-    the commit's staging dir (``_write_task``); an append also logs the
-    rows as CDF inserts, an overwrite logs nothing (physical-only, like
-    ``ParquetMergeTable.compact``).  ``commit`` is driver-side metadata
-    work only: check the append, then ``publish_snapshot`` — inheriting
-    the head's files on append, not on overwrite.  This writer is the
-    plain CTAS/append surface (reference K3/K8 sinks); keyed MERGE stays
-    on ``ParquetMergeTable.merge_upsert``."""
+    the commit's staging dir and logs its rows as CDF inserts
+    (``_write_task``).  ``commit`` runs on the driver: it checks an
+    append, logs an overwrite's replaced rows as deletes
+    (:func:`_log_replaced`; the ``key`` option is needed when the head
+    has merge-on-read tombstones), then ``publish_snapshot`` —
+    inheriting the head's files on append, not on overwrite.  This
+    writer is the plain CTAS/append surface (reference K3/K8 sinks);
+    keyed MERGE stays on ``ParquetMergeTable.merge_upsert``."""
 
     def __init__(self, options: dict, overwrite: bool, schema: StructType) -> None:
         if "path" not in options:
             raise ValueError("oer_mergetable write requires .option('path', ...)")
         self._path = options["path"]
+        self._key = options.get("key")
         self._overwrite = overwrite
         self._schema = _inferred(schema)
         self._staging = staging_dir(self._path)
-        os.makedirs(self._staging, exist_ok=True)
-        if not overwrite:
-            os.makedirs(changes_dir(self._staging), exist_ok=True)
+        os.makedirs(changes_dir(self._staging), exist_ok=True)
 
     def write(self, iterator) -> _FileCommit:
-        return _write_task(iterator, self._staging, not self._overwrite)
+        return _write_task(iterator, self._staging)
 
     def commit(self, messages) -> None:
         written = [m for m in messages if m is not None and m.filename]
@@ -365,13 +414,21 @@ class _MergeTableWriter(DataSourceArrowWriter):
         if len(col_sets) > 1:
             raise ValueError(f"tasks wrote divergent schemas: {col_sets}")
         head = os.path.realpath(self._path)
-        if not self._overwrite and os.path.isdir(head):
-            _check_append(
-                head, [os.path.join(self._staging, m.filename) for m in written]
-            )
+        changes_schema = _logged(self._schema)
+        if os.path.isdir(head):
+            if not self._overwrite:
+                _check_append(
+                    head, [os.path.join(self._staging, m.filename) for m in written]
+                )
+            else:
+                deleted = _log_replaced(head, self._staging, self._key)
+                if deleted is not None:
+                    names = set(changes_schema.fieldNames())
+                    changes_schema = StructType(changes_schema.fields + [
+                        f for f in deleted.fields if f.name not in names
+                    ])
         publish_snapshot(self._path, self._staging, inherit=not self._overwrite,
-                         schema=self._schema,
-                         changes_schema=None if self._overwrite else _logged(self._schema))
+                         schema=self._schema, changes_schema=changes_schema)
 
     def abort(self, messages) -> None:
         import shutil
@@ -407,7 +464,7 @@ class _MergeTableStreamWriter(DataSourceStreamArrowWriter):
         os.makedirs(changes_dir(self._pending), exist_ok=True)
 
     def write(self, iterator) -> _FileCommit:
-        return _write_task(iterator, self._pending, True)
+        return _write_task(iterator, self._pending)
 
     def _drop_pending(self, messages) -> None:
         for m in messages:
@@ -444,8 +501,9 @@ class _MergeTableStreamWriter(DataSourceStreamArrowWriter):
 class MergeTableDataSource(DataSource):
     """``spark.read.format("oer_mergetable")`` — options: ``path``
     (required), ``version`` (time travel), ``key`` (merge key, required
-    when the snapshot carries MOR tombstones), ``hidden`` (comma list of
-    hidden partition-transform columns to strip).  Writable with
+    when the snapshot read or overwritten carries MOR tombstones),
+    ``hidden`` (comma list of hidden partition-transform columns to
+    strip).  Writable with
     ``df.write.format("oer_mergetable").mode("append"|"overwrite")`` and
     ``df.writeStream.format("oer_mergetable")`` (exactly-once epoch
     appends with CDF capture)."""
@@ -490,15 +548,19 @@ class _ChangesStreamReader(DataSourceStreamReader):
         self._arrow_schema = self._infer_changes_schema()
 
     def _infer_changes_schema(self):
-        """The NEWEST retained change log's schema: schema evolution only
-        adds columns, so older logs are null-filled to it in ``read``,
-        as ``read_changes`` does."""
+        """The NEWEST retained change log's schema, unified over its files
+        (an overwrite logs the replaced rows at the old schema beside its
+        own): schema evolution only adds columns, so older logs are
+        null-filled to it in ``read``, as ``read_changes`` does."""
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         for v in reversed(all_version_nums(self._path)):
             logs = data_files(changes_dir(version_dir(self._path, v)))
             if logs:
-                return pq.read_schema(logs[0])
+                return pa.unify_schemas(
+                    [pq.read_schema(f) for f in logs], promote_options="permissive"
+                )
         raise ValueError(
             f"{self._path}: no change logs found — the table predates "
             "change capture or has never committed row changes"
