@@ -9,6 +9,7 @@ import json
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tlcn_oer_lakehouse_spark.pipelines.medallion import (
     normalize_bronze,
@@ -156,3 +157,67 @@ def test_landing_to_silver_with_quarantine(spark, tmp_path):
     assert stats2["resources_upserted"] == 0
     assert stats2["rows_quarantined"] == 0
     assert spark.read.parquet(f"{wh}/bronze_quarantine").count() == 1
+
+
+_LANDING_SCHEMA = (
+    "id string, title string, description string, url string, "
+    "authors array<string>, language string, license string, year bigint, "
+    "scraped_at string, pdf_paths array<string>, source string"
+)
+
+
+def _landed_resource(i: int, rev: int = 0, n_assets: int = 2) -> dict:
+    return {"id": f"r{i:05d}", "title": f"course {i}",
+            "description": f"notes on topic {i} rev{rev}",
+            "url": f"https://ocw.mit.edu/c{i}", "authors": ["A. Author"],
+            "language": "en", "license": "CC BY 4.0", "year": 2020,
+            "scraped_at": f"2024-01-{1 + rev:02d}T00:00:00",
+            "pdf_paths": [f"/landing/r{i}/a{j}.pdf" for j in range(n_assets)],
+            "source": ("mit_ocw", "openstax", "otl")[i % 3]}
+
+
+def test_steady_state_batch_reuses_generated_code(spark, tmp_path):
+    """A landed batch shaped like the one before it runs the classes
+    that batch generated, so it compiles almost nothing: usually 2
+    classes, the landing parse's projection (it inlines the batch's
+    ``current_timestamp()``), in some runs (about one in six) 6, for a
+    cause not yet found.  Under Spark's default codegen cache of 100
+    entries every batch compiles its ~115 classes again, so the bound
+    of 10 still tells the two apart."""
+    from tlcn_oer_lakehouse_spark.pipelines.medallion import (
+        run_silver_from_landing,
+    )
+    from tlcn_oer_lakehouse_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    ), ("the JVM's first session was not built by get_spark: the codegen "
+        "cache size is a static conf that only that session sets")
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    landing, wh = tmp_path / "landing", str(tmp_path / "wh")
+    landing.mkdir()
+    load = [_landed_resource(i) for i in range(300)]
+    batches = [load]
+    for b in (1, 2):
+        olds = range(40 * b, 40 * b + 40)
+        batches.append(
+            [_landed_resource(300 + 10 * b + i) for i in range(10)]   # new
+            + [_landed_resource(i, rev=b) for i in olds[:10]]         # changed
+            + [_landed_resource(i) for i in olds[10:20]]              # resent
+            + [_landed_resource(i, n_assets=1) for i in olds[20:]]    # drop asset
+        )
+    schema = StructType.fromDDL(_LANDING_SCHEMA)
+    new_compiles, stats = [], []
+    for b, records in enumerate(batches):
+        path = landing / f"batch-{b}.jsonl"
+        path.write_text("\n".join(
+            [json.dumps(r) for r in records] + [f'{{"id": "broken-{b}", "title": ']
+        ) + "\n")
+        before = compiles.getCount()
+        stats.append(run_silver_from_landing(spark, str(path), wh, schema=schema))
+        run_gold(spark, wh)["fact_source_coverage"].collect()
+        new_compiles.append(compiles.getCount() - before)
+    assert stats[2] == {"resources_upserted": 40, "documents_upserted": 20,
+                        "documents_deleted": 20, "rows_quarantined": 1}
+    assert new_compiles[2] <= 10, new_compiles

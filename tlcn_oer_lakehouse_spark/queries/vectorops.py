@@ -28,6 +28,7 @@ from tlcn_oer_lakehouse_spark.functions.vectors import (
     sign_bucket,
 )
 from tlcn_oer_lakehouse_spark.queries.base import QuerySpec, load
+from tlcn_oer_lakehouse_spark.queries.retrieval import _query_embedding
 from tlcn_oer_lakehouse_spark.queries.textops import COPY_OFFSET, NEAR_OFFSET
 
 DOT_SQL = (
@@ -54,10 +55,9 @@ def knn_bruteforce(spark: SparkSession, sf: str) -> DataFrame:
     vectors, no driver collect. Ranking on round(cos, 9) with id
     tie-break keeps top-k membership engine-stable."""
     emb = load(spark, sf, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
     scored = (
         emb.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
+        .crossJoin(F.broadcast(_query_embedding(emb)))
         .select(
             "vec_id",
             F.round(cosine(F.col("embedding"), F.col("q_emb")), 9).alias("cos_sim"),
@@ -210,9 +210,10 @@ def ann_ivf(spark: SparkSession, sf: str) -> DataFrame:
     centroids = emb.filter(F.col("vec_id").between(100, 107)).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid_vec")
     )
-    query = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
     corpus = emb.filter(F.col("vec_id") != 0)
-    return ivf_topk(corpus, "vec_id", "embedding", centroids, query, k=10, n_probe=2)
+    return ivf_topk(
+        corpus, "vec_id", "embedding", centroids, _query_embedding(emb), k=10, n_probe=2
+    )
 
 
 def _ivf_sql_core(n_probe: int = 2) -> str:
