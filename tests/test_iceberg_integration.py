@@ -3,8 +3,8 @@ Delta) runtime jar is on the session classpath, skips cleanly when it
 isn't (this container ships no lakehouse-format jars).
 
 Purpose (VERDICT r3 "What's missing" #1): prove `sql_merge_upsert`
-takes the native `merge_into` path — not the rewrite fallback — the
-moment a real v2 table format is present, exactly the statement the
+takes the native `merge_into` path the moment a real v2 table format
+is present, exactly the statement the
 reference runs against Iceberg (airflow/src/silver/transformer.py:
 2427-2458, catalog setup :1243-1246).  The test is format-agnostic: it
 probes for either extension class and builds an isolated session with
@@ -88,26 +88,8 @@ def test_merge_upsert_takes_native_path_on_v2_format(spark, tmp_path):
         ).append()
         src = s.createDataFrame([(2, "B"), (3, "c")], "id long, v string")
         path = sql_merge_upsert(s, table, src, key="id")
-        assert path == "merge_into"  # native MERGE, not the rewrite fallback
+        assert path == "merge_into"
         got = {(r.id, r.v) for r in s.table(table).collect()}
         assert got == {(1, "a"), (2, "B"), (3, "c")}
     finally:
         s.stop()
-
-
-def test_rewrite_fallback_matches_merge_semantics(spark, tmp_path):
-    """The v1-catalog fallback (what runs in THIS container) must be
-    semantically identical to native MERGE so swapping formats never
-    changes results — pinned here against the same upsert scenario."""
-    from tlcn_oer_lakehouse_spark.sinks.merge import sql_merge_upsert
-
-    spark.sql("DROP TABLE IF EXISTS t_fallback")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id long, v string"
-    ).write.saveAsTable("t_fallback")
-    src = spark.createDataFrame([(2, "B"), (3, "c")], "id long, v string")
-    path = sql_merge_upsert(spark, "t_fallback", src, key="id")
-    assert path == "rewrite"  # v1 catalog in this container
-    got = {(r.id, r.v) for r in spark.table("t_fallback").collect()}
-    assert got == {(1, "a"), (2, "B"), (3, "c")}
-    spark.sql("DROP TABLE t_fallback")

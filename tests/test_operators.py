@@ -13,10 +13,9 @@ from tlcn_oer_lakehouse_spark.operators.dedup import (
     simhash_near_duplicates,
 )
 from tlcn_oer_lakehouse_spark.operators.incremental import (
-    changed_rows,
-    deleted_keys,
+    classify_changes,
     latest_wins,
-    merge_upsert,
+    next_snapshot,
 )
 from tlcn_oer_lakehouse_spark.operators.similarity import bucketed_ann_topk, cosine_topk
 from tlcn_oer_lakehouse_spark.queries.textops import COPY_OFFSET, NEAR_OFFSET, augmented_corpus
@@ -77,13 +76,14 @@ def test_incremental_merge_idempotent(spark, sf_dir):
         "o_totalprice",
     )
     # first run: everything is new
-    first = changed_rows(snap, snap.limit(0), "o_orderkey")
+    first = classify_changes(snap.limit(0), snap, "o_orderkey")
+    assert first.filter(F.col("_change_type") == "insert").count() == snap.count()
     assert first.count() == snap.count()
-    # second run against the merged state: nothing changed
-    merged = merge_upsert(snap.limit(0), first, "o_orderkey")
-    second = changed_rows(snap, merged, "o_orderkey")
-    assert second.count() == 0
-    assert deleted_keys(merged, snap, "o_orderkey").count() == 0
+    # second run against the merged state: nothing changed or deleted
+    merged = next_snapshot(first)
+    second = classify_changes(merged, snap, "o_orderkey", current_keys=snap)
+    assert second.filter(F.col("_change_type").isNotNull()).count() == 0
+    assert next_snapshot(second).count() == snap.count()
 
 
 def test_latest_wins_keeps_one_row_per_key(spark, sf_dir):

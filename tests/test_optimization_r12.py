@@ -110,23 +110,6 @@ def test_packed_pairs_reject_ids_outside_31_bits(spark):
             pairs([1, bad])
 
 
-def test_merge_upsert_broadcast_knob_is_value_neutral(spark):
-    """broadcast_changed only pins a join strategy; both settings must
-    produce the same row multiset."""
-    from tlcn_oer_lakehouse_spark.operators.incremental import merge_upsert
-
-    existing = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c"), (4, "d")], ["k", "val"]
-    )
-    changed = spark.createDataFrame([(2, "B2"), (5, "E")], ["k", "val"])
-    plain = merge_upsert(existing, changed, "k")
-    pinned = merge_upsert(existing, changed, "k", broadcast_changed=True)
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, pinned.collect()))
-    assert sorted(map(tuple, pinned.collect())) == [
-        (1, "a"), (2, "B2"), (3, "c"), (4, "d"), (5, "E"),
-    ]
-
-
 def test_wedge_pack_unpack_round_trip(spark):
     """shiftleft(u,32)|v unpacks to exactly (u, v) across the id range
     the packing contract documents (non-negative, < 2^31)."""

@@ -125,13 +125,16 @@ class TestMergeProperties:
         )
     )
     def test_merge_upsert_last_writer_wins(self, spark, vals):
-        """merge_upsert(existing, batch) keeps exactly one row per key,
-        preferring the batch."""
-        from tlcn_oer_lakehouse_spark.operators.incremental import merge_upsert
+        """The snapshot of classify_changes(existing, batch) keeps exactly
+        one row per key, preferring the batch."""
+        from tlcn_oer_lakehouse_spark.operators.incremental import (
+            classify_changes,
+            next_snapshot,
+        )
 
         existing = spark.createDataFrame([(k, "old") for k in range(3)], ["id", "v"])
         batch = spark.createDataFrame(vals, ["id", "v"]).dropDuplicates(["id"])
-        merged = merge_upsert(existing, batch, "id")
+        merged = next_snapshot(classify_changes(existing, batch, "id", "v"))
         rows = {r.id: r.v for r in merged.collect()}
         batch_rows = {r.id: r.v for r in batch.collect()}
         assert merged.count() == len(rows)  # unique keys

@@ -160,6 +160,15 @@ def explode_documents(resources: DataFrame) -> DataFrame:
     )
 
 
+def untouched_assets(documents: DataFrame, batch: DataFrame) -> DataFrame:
+    """The ``asset_uid`` of every stored asset whose resource is not in
+    ``batch``: the documents MERGE's current keys.  A stored asset of a
+    resource in the batch that the batch no longer lists is stale."""
+    return documents.join(
+        batch.select("resource_uid"), "resource_uid", "left_anti"
+    ).select("asset_uid")
+
+
 class SilverWarehouse:
     """The two silver tables, backed by merge-able parquet."""
 
@@ -239,9 +248,7 @@ def _run_silver(
         # not in the current asset set is stale.  Keep = assets of
         # untouched resources; MERGE never deletes this batch's own assets.
         keep = (
-            wh.documents.read()
-            .join(normalized.select("resource_uid"), "resource_uid", "left_anti")
-            .select("asset_uid")
+            untouched_assets(wh.documents.read(), normalized)
             if wh.documents.exists() else None
         )
         return wh.documents.merge(explode_documents(normalized), current_keys=keep)

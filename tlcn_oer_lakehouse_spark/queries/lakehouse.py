@@ -12,6 +12,8 @@ The silver/gold capability mapping:
   the merged-table result of upserting a modified batch.
 - ``k2_merge_delete``       ≙ K2 MERGE DELETE (transformer.py:2460-2484):
   survivors after stale-key cleanup, summarized per nation.
+  Both classify with ``operators/incremental.py:classify_changes``, the
+  keyed pass ``ParquetMergeTable.merge`` commits from.
 - ``gold_fact_coverage``    ≙ fact_program_coverage (gold_analytics.py:494-607):
   the headline business aggregate (coverage % per program → per nation).
 - ``gold_dim_customer``     ≙ dim_oer_resources (gold_analytics.py:418-492):
@@ -30,7 +32,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tlcn_oer_lakehouse_spark.operators.incremental import changed_rows, merge_upsert
+from tlcn_oer_lakehouse_spark.operators.incremental import (
+    classify_changes,
+    next_snapshot,
+)
 from tlcn_oer_lakehouse_spark.queries.base import QuerySpec, load, load_events
 
 # ---------------------------------------------------------------------------
@@ -102,8 +107,7 @@ def _orders_versions(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame
 
 def k1_merge_upsert(spark: SparkSession, sf: str) -> DataFrame:
     existing, incoming = _orders_versions(spark, sf)
-    changed = changed_rows(incoming, existing, "o_orderkey")
-    merged = merge_upsert(existing, changed, "o_orderkey")
+    merged = next_snapshot(classify_changes(existing, incoming, "o_orderkey"))
     return merged.select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
 
 
@@ -131,10 +135,9 @@ def k2_merge_delete(spark: SparkSession, sf: str) -> DataFrame:
     current = load(spark, sf, "orders").select(
         F.col("o_custkey").alias("c_custkey")
     )
-    from tlcn_oer_lakehouse_spark.operators.incremental import deleted_keys
-
-    stale = deleted_keys(cust, current, "c_custkey")
-    survivors = cust.join(stale, "c_custkey", "left_anti")
+    survivors = next_snapshot(
+        classify_changes(cust, None, "c_custkey", current_keys=current)
+    )
     return (
         survivors.groupBy("c_nationkey")
         .agg(

@@ -38,10 +38,13 @@ Fixture structure (all arithmetic on ``doc_id``, mirrored in SQL):
 Scale (100 TB): the silver states are tables in production — here the
 two multiply-referenced frames (existing state, deduped batch) are
 persisted so the fixture scan doesn't replay per consumer.  Stage
-shapes are the pipeline's own: one window shuffle keyed by
-resource_uid, fingerprint change-joins co-partitioned on the same key,
-explode is map-side, and every gold aggregate groups a handful of
-source systems (tiny result, broadcastable joins).
+shapes are the pipeline's own: one latest-wins window keyed by
+resource_uid, one MERGE classification window per Silver table
+(``operators/incremental.py:classify_changes``, the pass
+``ParquetMergeTable.merge`` commits from, with the documents MERGE's
+current keys built by the same ``untouched_assets`` as
+``run_silver``), explode is map-side, and every gold aggregate groups a
+handful of source systems (tiny result, broadcastable joins).
 """
 
 from __future__ import annotations
@@ -50,13 +53,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tlcn_oer_lakehouse_spark.operators.incremental import (
-    changed_rows,
+    UPSERT_TYPES,
+    classify_changes,
     latest_wins,
-    merge_upsert,
+    next_snapshot,
 )
 from tlcn_oer_lakehouse_spark.pipelines.medallion import (
     explode_documents,
     normalize_bronze,
+    untouched_assets,
 )
 from tlcn_oer_lakehouse_spark.queries.base import QuerySpec, load
 
@@ -154,7 +159,7 @@ def medallion_e2e(spark: SparkSession, sf: str) -> DataFrame:
     → gold coverage fact, as one plan over the production stages.
 
     NOTE: persists the prior silver state and the deduped batch (tables
-    in production) and the three delta-sized change frames.  Their
+    in production) and the two classified MERGE frames.  Their
     plans are fixed by ``(spark, sf)``, so a rebuild reuses the cached
     entries.  Sweeping callers clear the cache after the consuming
     action (perfbench analytics, oracle_harness and driver_sim, each per
@@ -166,9 +171,9 @@ def medallion_e2e(spark: SparkSession, sf: str) -> DataFrame:
     ).select("v", "r.*")
 
     # silver: prior state (v0) and the incoming landing batch (v1 ∪ v2).
-    # Both are multiply-referenced below (change join, merge union,
-    # asset explode, delete diff) — in production they are TABLES, so
-    # persist stands in for the table materialization.
+    # Both are multiply-referenced below (two classifications, two asset
+    # explodes, the untouched-asset keys) — in production they are
+    # TABLES, so persist stands in for the table materialization.
     existing = normalize_bronze(parsed.filter(F.col("v") == 0).drop("v")).persist()
     normalized = latest_wins(
         normalize_bronze(parsed.filter(F.col("v") > 0).drop("v")),
@@ -176,37 +181,18 @@ def medallion_e2e(spark: SparkSession, sf: str) -> DataFrame:
         ["scraped_at"],
     ).persist()
 
-    # Delta-sized frames (bounded by the landing batch, never the full
-    # state) are persisted: each is consumed 2-3× below (merge anti-join
-    # build + union branch + gold roll-up), and uncached every consumer
-    # replays the change-detection join over the cached silver frames
-    # (guide §1.2/§5 — cache only reused-and-expensive, delta-sized).
-    changed = changed_rows(normalized, existing, "resource_uid").persist()
-    # broadcast_changed pinned: this flow's delta IS a single landing
-    # batch (delta-sized by the pipeline contract, like the already-
-    # broadcast `deleted` key set below) — the planner's corpus-scale
-    # ESTIMATE otherwise plans SortMergeJoin and AQE only converts it
-    # after both sides have shuffled (r12 interleaved A/B: ~1.07× on
-    # mins, SMJ 2→0 in the static plan).  A state-sized backfill must
-    # call merge_upsert without the pin (guide §3.1).
-    merged = merge_upsert(existing, changed, "resource_uid", broadcast_changed=True)
-
-    # documents: explode assets, change-detect, merge, delete stale
+    # the two MERGEs run_silver commits, classified as
+    # ParquetMergeTable.merge classifies them; each classified frame is
+    # read twice (the next snapshot and a change count), so it is
+    # persisted like the silver frames
+    res = classify_changes(existing, normalized, "resource_uid").persist()
     docs_old = explode_documents(existing)
-    docs_new = explode_documents(normalized)
-    changed_docs = changed_rows(docs_new, docs_old, "asset_uid").persist()
-    upserted_docs = merge_upsert(
-        docs_old, changed_docs, "asset_uid", broadcast_changed=True
-    )
-    touched = normalized.select("resource_uid")
-    deleted = (
-        docs_old.join(touched, "resource_uid", "leftsemi")
-        .join(docs_new.select("asset_uid"), "asset_uid", "left_anti")
-        .persist()
-    )
-    final_docs = upserted_docs.join(
-        F.broadcast(deleted.select("asset_uid")), "asset_uid", "left_anti"
-    )
+    docs = classify_changes(
+        docs_old, explode_documents(normalized), "asset_uid",
+        current_keys=untouched_assets(docs_old, normalized),
+    ).persist()
+    merged, final_docs = next_snapshot(res), next_snapshot(docs)
+    ct = F.col("_change_type")
 
     # gold: per-source coverage fact + the lifecycle observables, so the
     # driver hash pins every stage (upsert count, delete count included)
@@ -223,10 +209,10 @@ def medallion_e2e(spark: SparkSession, sf: str) -> DataFrame:
     doc_g = final_docs.groupBy("source_system").agg(
         F.count(F.lit(1)).alias("total_documents")
     )
-    up_g = changed.groupBy("source_system").agg(
+    up_g = res.filter(ct.isin(*UPSERT_TYPES)).groupBy("source_system").agg(
         F.count(F.lit(1)).alias("resources_upserted")
     )
-    del_g = deleted.groupBy("source_system").agg(
+    del_g = docs.filter(ct == "delete").groupBy("source_system").agg(
         F.count(F.lit(1)).alias("documents_deleted")
     )
     # the roll-up sides are one row per source system (a handful), but
@@ -391,16 +377,14 @@ def medallion_incremental(spark: SparkSession, sf: str) -> DataFrame:
     every run; here the stored ``fact_source_coverage`` is instead
     UPDATED by folding one silver commit's change feed — the exact rows
     ``ParquetMergeTable`` logs at write time and replays via
-    ``ParquetMergeTable.read_changes``:
+    ``ParquetMergeTable.read_changes``: the ``_change_type`` rows of the
+    resources and documents MERGEs, classified by ``classify_changes``
+    as ``merge`` classifies them, each folded with sign +1 (``insert``,
+    ``update_postimage``) or −1 (``update_preimage``, ``delete``).
 
-    - resources: ``changed_rows`` (inserts ∪ update postimages, sign +1)
-      and their existing preimages (sign −1);
-    - documents: inserted assets (+1) and stale-asset deletes (−1) —
-      the two change types that move a count-only measure (update
-      pre/post pairs cancel exactly and are elided).
-
-    The maintenance pass therefore touches O(changed rows), never the
-    full silver table; the old fact is two aggregates over the prior
+    The fold therefore touches O(changed rows), never the full silver
+    table (classifying them reads the state, as the MERGE that logs them
+    does at write time); the old fact is two aggregates over the prior
     state, standing in for the stored gold table scan (tiny: one row
     per source system).  All measures fold exactly — counts in bigint,
     quality sums in DECIMAL(18,9) (order-independent addition) with the
@@ -413,8 +397,8 @@ def medallion_incremental(spark: SparkSession, sf: str) -> DataFrame:
     a files-scanned pin lives in test_cdf.py (the maintenance plan must
     read only the commit's changes directory, not the snapshot).
 
-    Persists the same two multiply-referenced frames as
-    ``medallion_e2e`` — see its NOTE on cache hygiene."""
+    Persists the same two silver frames as ``medallion_e2e`` — see its
+    NOTE on cache hygiene."""
     bron = _bronze_fixture(load(spark, sf, "documents"))
     parsed = bron.select(
         "v", F.from_json("payload", _BRONZE_SCHEMA).alias("r")
@@ -442,44 +426,26 @@ def medallion_incremental(spark: SparkSession, sf: str) -> DataFrame:
     old_fact = old_res.join(old_docs, "source_system", "full_outer")
 
     # --- one commit's change feed (what ParquetMergeTable.merge logs)
-    # delta-sized and consumed twice (preimage semi-join keys + the
-    # resource CDF) — persisted like medallion_e2e's change frames
-    changed = changed_rows(normalized, existing, "resource_uid").persist()
-    pre = existing.join(
-        changed.select("resource_uid"), "resource_uid", "leftsemi"
-    )
-    sign = F.col("sign")
-    res_cdf = changed.select(
-        "source_system", "has_assets", "data_quality_score",
-        F.lit(1).alias("sign"),
-    ).unionByName(
-        pre.select(
-            "source_system", "has_assets", "data_quality_score",
-            F.lit(-1).alias("sign"),
+    def feed(classified: DataFrame) -> DataFrame:
+        ct = F.col("_change_type")
+        return classified.filter(ct.isNotNull()).withColumn(
+            "sign", F.when(ct.isin(*UPSERT_TYPES), 1).otherwise(-1)
         )
-    )
-    d_res = res_cdf.groupBy("source_system").agg(
+
+    sign = F.col("sign")
+    d_res = feed(
+        classify_changes(existing, normalized, "resource_uid")
+    ).groupBy("source_system").agg(
         F.sum(sign).alias("d_resources"),
         F.sum(F.when(F.col("has_assets"), sign).otherwise(0)).alias(
             "d_with_assets"
         ),
         F.sum(F.col("data_quality_score").cast(dec) * sign).alias("d_quality"),
     )
-
-    docs_new = explode_documents(normalized)
-    changed_docs = changed_rows(docs_new, docs_old, "asset_uid")
-    inserted_docs = changed_docs.join(
-        docs_old.select("asset_uid"), "asset_uid", "left_anti"
-    )
-    deleted_docs = docs_old.join(
-        normalized.select("resource_uid"), "resource_uid", "leftsemi"
-    ).join(docs_new.select("asset_uid"), "asset_uid", "left_anti")
-    doc_cdf = inserted_docs.select(
-        "source_system", F.lit(1).alias("sign")
-    ).unionByName(deleted_docs.select("source_system", F.lit(-1).alias("sign")))
-    d_docs = doc_cdf.groupBy("source_system").agg(
-        F.sum(sign).alias("d_documents")
-    )
+    d_docs = feed(classify_changes(
+        docs_old, explode_documents(normalized), "asset_uid",
+        current_keys=untouched_assets(docs_old, normalized),
+    )).groupBy("source_system").agg(F.sum(sign).alias("d_documents"))
 
     # --- fold: new_fact = old_fact ⊕ delta (O(#source systems) rows)
     zero = F.lit(0)

@@ -81,10 +81,7 @@ def ann_sign_bucket(spark: SparkSession, sf: str) -> DataFrame:
     pattern equals the query's; exact cosine only inside the bucket.
     At scale the bucket is a partition/cluster key → scan pruning."""
     emb = load(spark, sf, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_emb"),
-        sign_bucket(F.col("embedding"), 4).alias("q_bucket"),
-    )
+    q = _query_embedding(emb).withColumn("q_bucket", sign_bucket(F.col("q_emb"), 4))
     cands = (
         emb.filter(F.col("vec_id") != 0)
         .withColumn("bucket", sign_bucket(F.col("embedding"), 4))
@@ -588,7 +585,7 @@ def ann_pq_adc(spark: SparkSession, sf: str) -> DataFrame:
 
     emb = load(spark, sf, "embeddings").select("vec_id", "embedding")
     corpus = emb.filter(F.col("vec_id") != 0)
-    query = emb.filter(F.col("vec_id") == 0)
+    query = _query_embedding(emb).withColumnRenamed("q_emb", "embedding")
     return pq_adc_topk(
         corpus, query, "vec_id", "embedding",
         train=emb, m=8, sub_dim=8, k=16, n_iter=1, topk=10,

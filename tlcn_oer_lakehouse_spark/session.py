@@ -46,6 +46,16 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 CODEGEN_CACHE_ENTRIES = 1000
 
 
+def _default_driver_memory() -> str:
+    """The driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: two
+    fifths of the host's memory (MemTotal), between 1g and 24g.  A local
+    session's JVM grows its heap to the limit and adds its own off-heap
+    memory beside the Python workers, so a fixed 24g heap was OOM-killed
+    on a 15 GB host; 6g (this rule there) runs the test suite."""
+    total_mib = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    return f"{min(24 * 1024, max(1024, total_mib * 2 // 5))}m"
+
+
 def get_spark(
     app_name: str = "tlcn_oer_lakehouse_spark",
     master: str | None = None,
@@ -87,7 +97,9 @@ def get_spark(
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # local mode: keep the UI off and the JVM quiet
         "spark.ui.enabled": "false",
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        "spark.driver.memory": os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()
+        ),
         # parquet scan sizing for the local profile; a cluster deployment
         # overrides via spark-defaults
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),

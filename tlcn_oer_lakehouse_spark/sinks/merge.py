@@ -7,7 +7,8 @@ Semantics, matching the reference write path:
 - ``merge(source, current_keys)``: one ``MERGE INTO`` and one commit,
   planned as one keyed pass.  Latest-wins dedup of the source batch
   (W1); then the head rows, the batch rows and the ``current_keys``
-  rows meet per key in one exchange and every row is classified once:
+  rows meet per key in one exchange and every row is classified once
+  (``operators/incremental.py:classify_changes``):
   a batch row is an ``insert`` (new key), an ``update_postimage``
   (changed per ``operators/incremental.py:change_predicate``: null-safe
   fingerprint inequality, or a strictly newer ``ts_col``) or a no-op;
@@ -72,15 +73,17 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from functools import reduce
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from tlcn_oer_lakehouse_spark.operators.incremental import (
-    change_predicate,
+    UPSERT_TYPES,
+    align,
+    classify_changes,
     latest_wins,
+    next_snapshot,
 )
 from tlcn_oer_lakehouse_spark.sinks.manifest import (
     Predicate,
@@ -567,7 +570,7 @@ class ParquetMergeTable:
         # Delta pays for RESTORE with CDF enabled.
         changes = None
         if self.exists():
-            cur = self._align(
+            cur = align(
                 self.read(), list(restored.columns),
                 {f.name: f.dataType for f in restored.schema.fields},
             )
@@ -628,17 +631,6 @@ class ParquetMergeTable:
     def _order_cols(self, df: DataFrame) -> list[str]:
         return [self.ts_col] if self.ts_col and self.ts_col in df.columns else [self.key]
 
-    @staticmethod
-    def _align(df: DataFrame, columns: list[str], types: dict) -> DataFrame:
-        """Project onto ``columns``; missing ones become nulls typed by
-        ``types`` (column name → data type) (K6)."""
-        return df.select(
-            *[
-                F.col(c) if c in df.columns else F.lit(None).cast(types[c]).alias(c)
-                for c in columns
-            ]
-        )
-
     def merge(
         self,
         source: DataFrame | None = None,
@@ -652,12 +644,12 @@ class ParquetMergeTable:
         ``(upserted, deleted)``; ``(0, 0)`` means no write happened.
 
         One keyed pass: the head rows, the latest-wins batch rows and
-        the ``current_keys`` rows are tagged and meet per key in one
-        window (one exchange), where every head and batch row is
-        classified once with :func:`change_predicate`: carried over
-        (``_change_type`` null), ``insert``, ``update_postimage``,
-        ``update_preimage`` or ``delete``.  That persisted frame is all
-        the commit reads: the change log is staged first and the counts
+        the ``current_keys`` rows meet per key in one window (one
+        exchange), where :func:`classify_changes` classifies every head
+        and batch row once: carried over (``_change_type`` null),
+        ``insert``, ``update_postimage``, ``update_preimage`` or
+        ``delete``.  That persisted frame is all the commit reads: the
+        change log is staged first and the counts
         are observed on its write, then the snapshot is written from the
         same cache, so the head is scanned once."""
         exists = self.exists()
@@ -668,49 +660,11 @@ class ParquetMergeTable:
             None if source is None
             else latest_wins(source, self.key, self._order_cols(source))
         )
-        sides = [df for df in (head, batch) if df is not None]
-        columns = list(dict.fromkeys(c for df in sides for c in df.columns))
-        # a column both sides hold keeps the head's type
-        types = {f.name: f.dataType for df in reversed(sides) for f in df.schema.fields}
-        HEAD, BATCH, KEYS = 0, 1, 2
-        tagged = [(head, HEAD), (batch, BATCH)]
-        if current_keys is not None:
-            tagged.append((current_keys.select(self.key), KEYS))
-        rows = reduce(DataFrame.unionByName, [
-            self._align(df, columns, types).withColumn("__src", F.lit(tag))
-            for df, tag in tagged if df is not None
-        ])
-
-        w = Window.partitionBy(self.key)
-        src = F.col("__src")
-        compared = [F.col(self.fingerprint_col).alias("fp")]
-        if self.ts_col:
-            compared.append(F.col(self.ts_col).alias("ts"))
-
-        def image(tag: int):  # this key's head or batch row (null: absent)
-            return F.max(F.when(src == tag, F.struct(*compared))).over(w)
-
-        old, new = image(HEAD), image(BATCH)
-        # with no head every batch row is an insert; the predicate is only
-        # built against a head (its epoch default needs a timestamp ts_col)
-        changed = F.lit(False) if head is None else change_predicate(
-            new["fp"], old["fp"], *((new["ts"], old["ts"]) if self.ts_col else ())
-        )
-        change_type = (
-            F.when(src == BATCH, F.when(old.isNull(), "insert").otherwise("update_postimage"))
-            .when(new.isNotNull(), F.when(changed, "update_preimage"))
-        )
-        if current_keys is not None:
-            change_type = change_type.when(~F.max(src == KEYS).over(w), "delete")
-        keep = (src == HEAD) | ((src == BATCH) & (old.isNull() | changed))
-        classified = (
-            rows.select(*columns, change_type.alias("_change_type"), keep.alias("__keep"))
-            .filter("__keep")
-            .drop("__keep")
-            .persist()
-        )
+        classified = classify_changes(
+            head, batch, self.key, self.fingerprint_col, self.ts_col, current_keys
+        ).persist()
         ct = F.col("_change_type")
-        upsert = ct.isin("insert", "update_postimage")
+        upsert = ct.isin(*UPSERT_TYPES)
         counts = Observation()
         staging = staging_dir(self.path)
         try:
@@ -721,13 +675,11 @@ class ParquetMergeTable:
                 F.count(F.when(ct == "delete", 1)).alias("deleted"),
             ).write.parquet(changes_dir(staging))
             upserted, deleted = counts.get["upserted"], counts.get["deleted"]
+            columns = classified.drop("_change_type").columns
             if upserted == deleted == 0 and head is not None and columns == head.columns:
                 shutil.rmtree(staging)
                 return 0, 0
-            self._publish(
-                classified.filter(ct.isNull() | upsert).drop("_change_type"),
-                staging, log,
-            )
+            self._publish(next_snapshot(classified), staging, log)
             return upserted, deleted
         finally:
             classified.unpersist()
@@ -830,40 +782,14 @@ def sql_merge_upsert(
     key: str,
     ts_col: str | None = None,
 ) -> str:
-    """Run the upsert through SQL: native ``MERGE INTO`` when the
-    catalog's table format supports it (Delta/Iceberg v2 tables), else a
-    pure-SQL anti-join ∪ batch rewrite with identical semantics.
-
-    Returns which path ran ('merge_into' or 'rewrite') so callers/tests
-    can assert capability.  The rewrite fallback is NOT atomic and is
-    single-writer only — same isolation contract as ParquetMergeTable
-    (see module docstring); a real lakehouse format upgrades both
-    atomicity and concurrency without changing this call."""
+    """Run the upsert as one native ``MERGE INTO`` against a catalog
+    table whose format supports it (Delta/Iceberg v2 tables), after the
+    same latest-wins dedup of ``source``.  Spark's error is raised for a
+    table that cannot ``MERGE INTO`` (a v1 parquet catalog table); the
+    engine's own tables merge through :class:`ParquetMergeTable`.
+    Returns ``'merge_into'``."""
     batch = latest_wins(source, key, [ts_col] if ts_col else [key])
     batch.createOrReplaceTempView("__merge_src")
     columns = spark.table(target_table).columns
-    try:
-        spark.sql(merge_into_sql(target_table, "__merge_src", key, columns))
-        return "merge_into"
-    except Exception:  # v1 catalog: rewrite via anti-join ∪ source
-        merged = spark.sql(
-            f"SELECT {', '.join(columns)} FROM {target_table} t "
-            f"WHERE NOT EXISTS (SELECT 1 FROM __merge_src s WHERE s.{key} = t.{key}) "
-            f"UNION ALL SELECT {', '.join(columns)} FROM __merge_src"
-        )
-        # Materialize to a staging path before overwriting the table being
-        # read — executor-side, never through the driver (a .collect()
-        # here is a driver OOM at scale).  The warehouse dir is shared
-        # storage on a real cluster, so staging there works everywhere.
-        warehouse = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
-        staging = f"{warehouse}/__merge_staging_{uuid.uuid4().hex}"
-        merged.write.mode("overwrite").parquet(staging)
-        try:
-            spark.read.parquet(staging).write.mode("overwrite").insertInto(
-                target_table, overwrite=True
-            )
-        finally:
-            jpath = spark._jvm.org.apache.hadoop.fs.Path(staging)
-            fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            fs.delete(jpath, True)
-        return "rewrite"
+    spark.sql(merge_into_sql(target_table, "__merge_src", key, columns))
+    return "merge_into"
