@@ -1,7 +1,8 @@
 """K1 via SQL: the same upsert batch through (a) ParquetMergeTable and
 (b) the SQL MERGE surface (native MERGE INTO, on a table format that
-supports it) must produce identical tables; a v1 parquet catalog table
-cannot MERGE INTO, and Spark's error is raised.
+supports it; elsewhere the source it hands the MERGE, under the
+statement's semantics) must produce identical tables; a v1 parquet
+catalog table cannot MERGE INTO, and Spark's error is raised.
 """
 
 from __future__ import annotations
@@ -31,6 +32,50 @@ SCHEMA = "k long, v string, ts timestamp"
 
 def _rows(df):
     return sorted((r.k, r.v, r.ts) for r in df.collect())
+
+
+def test_sql_merge_matches_parquet_merge_table(spark, tmp_path):
+    """The source ``sql_merge_upsert`` hands its MERGE, merged with the
+    statement's semantics, leaves the same table as ParquetMergeTable.
+    A v1 parquet catalog table cannot execute the MERGE, so its
+    semantics are applied here: a matched row takes every source column
+    (UPDATE SET of each non-key column), an unmatched source row is
+    inserted, an unmatched target row is kept; the native run is
+    ``test_native_merge_into_when_lakehouse_jars_present``."""
+    base = spark.createDataFrame(BASE, SCHEMA)
+    batch = spark.createDataFrame(BATCH, SCHEMA)
+
+    # path A: ParquetMergeTable
+    t = ParquetMergeTable(spark, str(tmp_path / "t"), key="k",
+                          fingerprint_col="v", ts_col="ts")
+    t.create(base)
+    t.merge_upsert(batch)
+    expected = _rows(t.read())
+
+    # path B: the SQL surface's source and statement
+    spark.sql("DROP TABLE IF EXISTS sqlmerge_t")
+    base.write.saveAsTable("sqlmerge_t")
+    try:
+        with pytest.raises(UnsupportedOperationException, match="MERGE INTO"):
+            sql_merge_upsert(spark, "sqlmerge_t", batch, key="k", ts_col="ts")
+        src = spark.table("__merge_src")
+        # at most one source row per key, or MERGE fails on a multi-match
+        assert src.count() == src.select("k").distinct().count()
+        columns = spark.table("sqlmerge_t").columns
+        assert merge_into_sql("sqlmerge_t", "__merge_src", "k", columns).endswith(
+            "WHEN MATCHED THEN UPDATE SET t.v = s.v, t.ts = s.ts "
+            "WHEN NOT MATCHED THEN INSERT (k, v, ts) VALUES (s.k, s.v, s.ts)"
+        )
+        target = spark.table("sqlmerge_t")
+        got = _rows(
+            target.join(src, "k", "left_anti").unionByName(src.select(*columns))
+        )
+    finally:
+        spark.sql("DROP TABLE IF EXISTS sqlmerge_t")
+
+    assert got == expected == sorted(
+        [(1, "a", _ts(10)), (2, "B", _ts(21)), (3, "c", _ts(30)), (4, "dd", _ts(41))]
+    )
 
 
 def test_merge_into_statement_shape():
